@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import graft.graph.GraphOps
 
 /** Driver benchmark: runs every SparkEntry query at
@@ -26,13 +25,7 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val repeat = math.max(sys.env.getOrElse("SPARK_GRAFT_REPEAT", "3").toInt, 1)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(cpus)
     val failures = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
     // Optional local-iteration subset (comma-separated names). The
     // driver never sets it — full sweep remains the default.

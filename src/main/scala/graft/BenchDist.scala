@@ -9,11 +9,11 @@ import graft.graph.{ConnectedComponentsDF, GraphOps, LocalLouvain,
   * open claim): at sf0.1 every dispatch-gated iterative family rides
   * its driver twin (all bench graphs sit under the 2M-row
   * CollectMax), so the DISTRIBUTED loops — the actual 100 TB story —
-  * appeared in no published artifact, only in forceDistributed specs
-  * on toy graphs. This main measures them for real: a seeded
+  * appeared in no published artifact, only in forced-distributed
+  * specs on toy graphs. This main measures them for real: a seeded
   * deterministic power-law graph with 2× CollectMax edges (so every
   * gate takes its distributed branch NATURALLY, by measured size —
-  * no forceDistributed override, which would leave open the
+  * no `spark.graft.dispatch.distributed` override, which would leave open the
   * objection that the override path differs from the organic one)
   * swept through all 17 gated families.
   *
@@ -82,13 +82,7 @@ object BenchDist {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val repeat =
       math.max(sys.env.getOrElse("SPARK_GRAFT_DIST_REPEAT", "2").toInt, 1)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(cpus)
 
     val dir = s"/tmp/graft_dist_graph_s${Seed}_e${NumEdgeDraws}_v$NumVertices"
     val path = s"$dir/edges.parquet"

@@ -85,13 +85,7 @@ object BenchDistAnn {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val repeat =
       math.max(sys.env.getOrElse("SPARK_GRAFT_DIST_REPEAT", "2").toInt, 1)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(cpus)
 
     // The dir doubles as the Tables.* source root: queries key their
     // memos/manifests on these files' (mtime, length) identity.

@@ -63,44 +63,45 @@ object ConnectedComponentsDF {
     // once per micro-batch on a contracted (frontier-sized) edge
     // set. IterativeDispatchSpec pins driver ≡ distributed; the
     // star loop below is the unchanged 100 TB path.
-    // Checkpoint the NARROW projection once before any dispatch
-    // probing: the gate count, the vertex set and the edge collect
-    // are three actions, and without the checkpoint each re-runs the
+    // The gate checkpoints the narrow projection once: without it the
+    // count, the vertex set and the edge collect each re-ran the
     // caller's (possibly expensive) candidate-generation lineage —
-    // the first draft tripled d_dup_clusters' cost exactly this way
-    // (8.6 s vs 4.1; the measure-the-twin rule from round 14).
-    val base = edges
-      .select(col("src").cast("long").as("src"),
-        col("dst").cast("long").as("dst"))
-      .localCheckpoint(true)
-    if (!GraphOps.forceDistributed &&
-        base.count() <= LocalLouvain.CollectMax) {
-      val rows = base.collect().map(r => (r.getLong(0), r.getLong(1)))
-      val parent = scala.collection.mutable.LongMap.empty[Long]
-      def find(x: Long): Long = {
-        var r = x
-        while (parent.getOrElse(r, r) != r) r = parent.getOrElse(r, r)
-        var c = x
-        while (parent.getOrElse(c, c) != c) {
-          val n = parent(c); parent(c) = r; c = n
-        }
-        r
+    // the first draft tripled d_dup_clusters' cost (8.6 s vs 4.1).
+    import spark.implicits._
+    Dispatch.gated("connectedComponentsDF", edges.select(
+        col("src").cast("long").as("src"), col("dst").cast("long").as("dst")),
+        LocalLouvain.CollectMax) { rs =>
+      Some(unionFind(rs.map(r => (r.getLong(0), r.getLong(1)))).toSeq
+        .toDF("vertex", "component"))
+    } { runDistributed(spark, _, maxIter) }
+  }
+
+  /** Min-root union-find: (vertex, component = min member id) for
+    * every endpoint of `rows`, ascending by vertex. The driver twin of
+    * every CC surface (this star loop, GraphOps.connectedComponents'
+    * GraphX run, the Leiden refinement and the streaming CC fold). */
+  private[graft] def unionFind(rows: Array[(Long, Long)]): Array[(Long, Long)] = {
+    val parent = scala.collection.mutable.LongMap.empty[Long]
+    def find(x: Long): Long = {
+      var r = x
+      while (parent.getOrElse(r, r) != r) r = parent.getOrElse(r, r)
+      var c = x
+      while (parent.getOrElse(c, c) != c) {
+        val n = parent(c); parent(c) = r; c = n
       }
-      // min-root unions keep every root the component MINIMUM, so
-      // find() returns the min-member label directly.
-      rows.foreach { case (u, v) =>
-        val (ru, rv) = (find(u), find(v))
-        if (ru != rv) {
-          if (ru < rv) parent(rv) = ru else parent(ru) = rv
-        }
-      }
-      val out = rows.iterator.flatMap(r => Iterator(r._1, r._2))
-        .toArray.distinct.sorted
-        .map(v => (v, find(v)))
-      import spark.implicits._
-      return out.toSeq.toDF("vertex", "component")
+      r
     }
-    runDistributed(spark, base, maxIter)
+    // min-root unions keep every root the component MINIMUM, so
+    // find() returns the min-member label directly.
+    rows.foreach { case (u, v) =>
+      val (ru, rv) = (find(u), find(v))
+      if (ru != rv) {
+        if (ru < rv) parent(rv) = ru else parent(ru) = rv
+      }
+    }
+    rows.iterator.flatMap(r => Iterator(r._1, r._2))
+      .toArray.distinct.sorted
+      .map(v => (v, find(v)))
   }
 
   private[graft] def runDistributed(spark: SparkSession, edges: DataFrame,

@@ -16,31 +16,6 @@ import graft.operators.Joins
   */
 object GraphOps {
 
-  /** Test-only escape hatch: forces every measured driver dispatch
-    * (the round-14 LocalLouvain/LocalIterative twins) down the
-    * distributed path so IterativeDispatchSpec can pin driver ≡
-    * distributed bit-equality on the same inputs. Never set outside
-    * tests; suites run sequentially (the one-sbt rule), and it is
-    * @volatile so a stray concurrent query in the same JVM at least
-    * reads the current value instead of a stale one. Toggle ONLY
-    * through [[withForcedDistributed]], which enforces the
-    * try/finally reset at the single call site. */
-  @volatile private[graft] var forceDistributed = false
-
-  /** Run `f` with the driver dispatch forced distributed, reset
-    * guaranteed. The only sanctioned way to flip the hatch. */
-  private[graft] def withForcedDistributed[T](f: => T): T = {
-    forceDistributed = true
-    try f finally forceDistributed = false
-  }
-
-  /** The driver twins read vertex ids with getLong — any other key
-    * type (textRank runs PageRank over STRING tokens) must take the
-    * type-generic DataFrame loop. */
-  private def longKeyed(df: DataFrame, cols: String*): Boolean =
-    cols.forall(c =>
-      df.schema(c).dataType == org.apache.spark.sql.types.LongType)
-
   /** Degree + weighted degree per vertex from a canonical undirected
     * edge list. Union of both endpoints → one groupBy (single
     * shuffle, map-side combined). */
@@ -79,35 +54,35 @@ object GraphOps {
     * two-community graph bisects correctly). */
   def spectralCut(spark: SparkSession, edges: DataFrame,
       rounds: Int = 15): DataFrame = {
-    val e = edges.select(col("src"), col("dst")).localCheckpoint(true)
-    val sym = e.unionAll(e.select(col("dst").as("src"), col("src").as("dst")))
-      .localCheckpoint(true)
-    val nSym = sym.count()
+    import spark.implicits._
     // An EMPTY strong-tie graph (a tiny SF can threshold every edge
-    // away) has no spectral structure: return zero rows instead of
-    // letting either path throw (driver twin: empty.max; distributed:
-    // first() on an empty degree table — caught by EmittedTypesSpec's
-    // sf0.001 construction sweep, round 15).
-    if (nSym == 0L) {
-      import spark.implicits._
-      return Seq.empty[(Long, Long, Boolean)]
-        .toDF("vertex", "score_e6", "side")
-    }
+    // away) has no spectral structure: zero rows on either path
+    // (caught by EmittedTypesSpec's sf0.001 construction sweep).
+    def empty = Seq.empty[(Long, Long, Boolean)].toDF("vertex", "score_e6", "side")
     // Measured dispatch (round 14): the whole recursion is truncating
     // integer arithmetic over a bounded-V graph, so the driver twin
     // is bit-identical and skips 15 rounds x ~3 per-round plan
     // compiles (the documented plan-compile-bound cost of this op).
-    if (!forceDistributed && longKeyed(sym, "src", "dst") &&
-        nSym <= LocalLouvain.CollectMax) {
-      import spark.implicits._
-      val rows = sym.select(col("src"), col("dst")).collect()
-        .map(r => (r.getLong(0), r.getLong(1)))
-      return LocalIterative.spectralCut(rows, rounds)
-        .toDF("vertex", "score_e6", "side").orderBy(col("vertex"))
+    // The gate counts UNDIRECTED rows: 2n symmetric rows <= CollectMax.
+    Dispatch.gated("spectralCut", edges.select(col("src"), col("dst")),
+        LocalLouvain.CollectMax / 2) { rows =>
+      val one = rows.map(r => (r.getLong(0), r.getLong(1)))
+      Some(if (one.isEmpty) empty
+        else LocalIterative.spectralCut(one ++ one.map(_.swap), rounds)
+          .toDF("vertex", "score_e6", "side").orderBy(col("vertex")))
+    } { e =>
+      val sym = e.unionAll(e.select(col("dst").as("src"), col("src").as("dst")))
+        .localCheckpoint(true)
+      val deg = sym.groupBy(col("src").as("vertex"))
+        .agg(count(lit(1)).as("deg")).localCheckpoint(true)
+      val maxDeg = deg.agg(max(col("deg"))).first()
+      if (maxDeg.isNullAt(0)) empty
+      else spectralCutDistributed(sym, deg, 2L * maxDeg.getLong(0), rounds)
     }
-    val deg = sym.groupBy(col("src").as("vertex"))
-      .agg(count(lit(1)).as("deg")).localCheckpoint(true)
-    val c = 2L * deg.agg(max(col("deg"))).first().getLong(0)
+  }
+
+  private def spectralCutDistributed(sym: DataFrame, deg: DataFrame, c: Long,
+      rounds: Int): DataFrame = {
     // Pseudo-random start via the cross-engine md5-hex hash (the
     // g_walks trick): a structured start (e.g. vertex parity) can be
     // exactly orthogonal to the Fiedler direction on symmetric
@@ -175,40 +150,28 @@ object GraphOps {
     */
   def temporalReach(spark: SparkSession, tEdges: DataFrame,
       maxRounds: Int = 20): DataFrame = {
-    // Checkpoint the UNDIRECTED projection once (round 19): the old
-    // shape checkpointed the symmetric union, whose plan inlines the
-    // caller's lineage TWICE — g_temporal_reach's wedge-join contact
-    // build evaluated two times inside the one checkpoint job (the
-    // g_cc checkpoint-once gate rule, applied here).
-    val und = tEdges.select(col("src"), col("dst"), col("t"))
-      .localCheckpoint(true)
     // Measured dispatch (round 14): earliest-arrival min-folds are
     // integer-exact, so the driver twin is bit-identical
     // (IterativeDispatchSpec); the DF loop stays for contact sets
-    // past the collect bound. Round 19: the gate counts (and the twin
-    // collects) the UNDIRECTED rows and symmetrizes in the driver —
-    // same multiset the symmetric union produced, half the collect
-    // bytes, and CollectMax still bounds the rows COLLECTED (the
-    // in-driver mirror costs 2n tuples ≈ 160 MB worst-case at the
-    // bound, well inside the bench heap; the twin's adjacency state
-    // was already O(2n)).
-    if (!forceDistributed && longKeyed(und, "src", "dst") &&
-        und.count() <= LocalLouvain.CollectMax) {
-      import spark.implicits._
-      val one = und.select(col("src"), col("dst"), col("t").cast("long"))
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-      // Release the projection's checkpoint blocks (round 20, VERDICT
-      // r19 item 9): the twin's result is a driver table with no
-      // lineage on them; a long-lived session would otherwise
-      // accumulate one block set per call.
-      und.unpersist(false)
+    // past the collect bound. The gate counts (and the twin collects)
+    // the UNDIRECTED rows and symmetrizes in the driver — same
+    // multiset as the symmetric union, half the collect bytes (a
+    // checkpoint of the union would also inline the caller's lineage
+    // twice, round 19).
+    import spark.implicits._
+    Dispatch.gated("temporalReach", tEdges.select(col("src"), col("dst"), col("t")),
+        LocalLouvain.CollectMax, keys = Seq("src", "dst", "t")) { rs =>
+      val one = rs.map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
       val rows = one ++ one.map { case (s, d, tt) => (d, s, tt) }
       val source = rows.map(_._1).min
-      return LocalIterative.temporalReach(rows, source, maxRounds)
-        .toDF("vertex", "arr")
-    }
-    // Distributed path: the symmetric union now scans the checkpoint
-    // twice per use instead of re-evaluating the caller's lineage.
+      Some(LocalIterative.temporalReach(rows, source, maxRounds)
+        .toDF("vertex", "arr"))
+    } { und => temporalReachDistributed(und, maxRounds) }
+  }
+
+  private def temporalReachDistributed(und: DataFrame, maxRounds: Int): DataFrame = {
+    // The symmetric union scans the checkpoint twice per use instead
+    // of re-evaluating the caller's lineage.
     val sym = und.unionByName(und.select(col("dst").as("src"),
       col("src").as("dst"), col("t")))
     val verts = sym.select(col("src").as("vertex")).distinct()
@@ -903,35 +866,33 @@ object GraphOps {
     // so a driver BFS is bit-identical to the Pregel run it stands in
     // for (IterativeDispatchSpec pins it) — and a Pregel launch on a
     // bounded-V graph is scheduling, not work.
-    if (!forceDistributed && longKeyed(edges, "src", "dst") &&
-        edges.count() <= LocalLouvain.CollectMax / 2) {
-      import spark.implicits._
-      val e0 = edges.select(col("src"), col("dst")).collect()
-        .map(r => (r.getLong(0), r.getLong(1)))
-      val rows = e0 ++ e0.map(p => (p._2, p._1))
+    import spark.implicits._
+    Dispatch.gated("shortestPaths", edges.select(col("src"), col("dst")),
+        LocalLouvain.CollectMax / 2) { rs =>
+      val e0 = rs.map(r => (r.getLong(0), r.getLong(1)))
+      val rows = e0 ++ e0.map(_.swap)
       val seeds: Seq[Long] =
         if (landmarks.nonEmpty) landmarks
         else rows.map(_._1).distinct.sorted.take(3).toSeq
-      return LocalIterative.hopDistances(rows, seeds)
-        .toDF("vertex", "landmark", "hops")
+      Some(LocalIterative.hopDistances(rows, seeds)
+        .toDF("vertex", "landmark", "hops"))
+    } { e2 =>
+      import org.apache.spark.graphx.lib.ShortestPaths
+      // Hops ignore weights; the canonical projection also keeps a
+      // caller frame's extra columns (BenchDist's 4-column parquet)
+      // out of the positional self-union (VERDICT r17 item 4).
+      val e3 = e2.select(col("src"), col("dst"), lit(1.0).as("weight"))
+      val g = GraphBuilder.toGraphX(
+        e3.unionAll(e3.select(col("dst").as("src"), col("src").as("dst"), col("weight"))))
+      val marks =
+        if (landmarks.nonEmpty) landmarks
+        else g.vertices.keys.takeOrdered(3).toSeq
+      val res = ShortestPaths.run(g, marks).vertices
+        .flatMap { case (id, spmap) =>
+          spmap.toSeq.map { case (lm, d) => (id, lm, d.toLong) }
+        }
+      spark.createDataFrame(res).toDF("vertex", "landmark", "hops")
     }
-    import org.apache.spark.graphx.lib.ShortestPaths
-    // Project to the canonical 3 columns BEFORE the positional
-    // self-union: a caller frame carrying extra columns (BenchDist's
-    // 4-column (src, dst, weight, t) parquet) would otherwise
-    // misalign or fail the unionAll (VERDICT r17 item 4 — the
-    // workaround previously lived at the call site).
-    val e3 = edges.select(col("src"), col("dst"), col("weight"))
-    val g = GraphBuilder.toGraphX(
-      e3.unionAll(e3.select(col("dst").as("src"), col("src").as("dst"), col("weight"))))
-    val marks =
-      if (landmarks.nonEmpty) landmarks
-      else g.vertices.keys.takeOrdered(3).toSeq
-    val res = ShortestPaths.run(g, marks).vertices
-      .flatMap { case (id, spmap) =>
-        spmap.toSeq.map { case (lm, d) => (id, lm, d.toLong) }
-      }
-    spark.createDataFrame(res).toDF("vertex", "landmark", "hops")
   }
 
   /** Directed triad census over a (src, dst) edge table: counts the
@@ -1036,21 +997,23 @@ object GraphOps {
   def weightedShortestPaths(spark: SparkSession, edges: DataFrame,
       landmarks: Seq[Long] = Seq.empty, rounds: Int = 6): DataFrame = {
     import spark.implicits._
-    val sym = edges
-      .select(col("src"), col("dst"), col("weight").cast("long").as("w"))
-      .unionAll(edges.select(col("dst").as("src"), col("src").as("dst"),
-        col("weight").cast("long").as("w")))
-      .localCheckpoint(true)
-    if (!forceDistributed && longKeyed(sym, "src", "dst") &&
-        sym.count() <= LocalLouvain.CollectMax) {
-      val rows = sym.select(col("src"), col("dst"), col("w")).collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+    Dispatch.gated("weightedShortestPaths", edges.select(col("src"), col("dst"),
+        col("weight").cast("long").as("w")), LocalLouvain.CollectMax / 2) { rs =>
+      val one = rs.map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+      val rows = one ++ one.map { case (s, d, w) => (d, s, w) }
       val seeds: Seq[Long] =
         if (landmarks.nonEmpty) landmarks
         else rows.map(_._1).distinct.sorted.take(3).toSeq
-      return LocalIterative.weightedSssp(rows, seeds, rounds)
-        .toDF("vertex", "landmark", "wdist")
-    }
+      Some(LocalIterative.weightedSssp(rows, seeds, rounds)
+        .toDF("vertex", "landmark", "wdist"))
+    } { e => weightedSsspDistributed(spark,
+      e.unionAll(e.select(col("dst").as("src"), col("src").as("dst"), col("w"))),
+      landmarks, rounds) }
+  }
+
+  private def weightedSsspDistributed(spark: SparkSession, sym: DataFrame,
+      landmarks: Seq[Long], rounds: Int): DataFrame = {
+    import spark.implicits._
     val lms =
       if (landmarks.nonEmpty) landmarks.toDF("v")
       else sym.select(col("src").as("v")).distinct().orderBy(col("v")).limit(3)
@@ -1332,22 +1295,21 @@ object GraphOps {
     * key. */
   def coreness(spark: SparkSession, edges: DataFrame,
       rounds: Int = 12): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val sym = edges.select(col("src"), col("dst"))
-      .unionAll(edges.select(col("dst").as("src"), col("src").as("dst")))
-      .repartition(col("dst"))
-      .localCheckpoint(true)
+    import spark.implicits._
     // Measured dispatch (round 14): the h-index fixpoint is pure
     // integer arithmetic — the driver twin is bit-identical and the
     // 12-round unrolled oracle keeps matching (IterativeDispatchSpec).
-    if (!forceDistributed && longKeyed(sym, "src", "dst") &&
-        sym.count() <= LocalLouvain.CollectMax) {
-      import spark.implicits._
-      val rows = sym.select(col("src"), col("dst")).collect()
-        .map(r => (r.getLong(0), r.getLong(1)))
-      return LocalIterative.coreness(rows, rounds)
-        .toDF("vertex", "coreness").orderBy(col("vertex"))
-    }
+    Dispatch.gated("coreness", edges.select(col("src"), col("dst")),
+        LocalLouvain.CollectMax / 2) { rs =>
+      val one = rs.map(r => (r.getLong(0), r.getLong(1)))
+      Some(LocalIterative.coreness(one ++ one.map(_.swap), rounds)
+        .toDF("vertex", "coreness").orderBy(col("vertex")))
+    } { e => corenessDistributed(
+      e.unionAll(e.select(col("dst").as("src"), col("src").as("dst")))
+        .repartition(col("dst")).localCheckpoint(true), rounds) }
+  }
+
+  private def corenessDistributed(sym: DataFrame, rounds: Int): DataFrame = {
     var c = sym.groupBy(col("src")).agg(count(lit(1)).as("c"))
       .select(col("src").as("vertex"), col("c")).localCheckpoint(true)
     // The label table is one (vertex, long) row per vertex — while it
@@ -1517,29 +1479,24 @@ object GraphOps {
 
   private def randomWalksUncached(spark: SparkSession, edges: DataFrame,
       steps: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    // Checkpoint the symmetric pairs ONCE (round 19): the gate count,
-    // the twin's collect and the distributed window build all read
-    // these blocks (the checkpoint-once gate rule).
-    val sym = edges.select(col("src"), col("dst"))
-      .unionAll(edges.select(col("dst").as("src"), col("src").as("dst")))
-      .localCheckpoint(true)
+    import spark.implicits._
     // Measured dispatch (round 19): the rank pick is integer-exact
     // (60-bit md5 bridge mod degree), so the driver twin is
     // bit-identical (IterativeDispatchSpec); what the DF loop pays at
     // small V is `steps` exploding joins' plan analysis + shuffles,
     // not arithmetic. The loop below stays the at-scale shape.
-    if (!forceDistributed && longKeyed(sym, "src", "dst") &&
-        sym.count() <= LocalLouvain.CollectMax) {
-      import spark.implicits._
-      val rows = sym.collect().map(r => (r.getLong(0), r.getLong(1)))
-      // Scratch release (round 20, VERDICT r19 item 9): the twin's
-      // output has no lineage on the symmetric checkpoint.
-      sym.unpersist(false)
-      return LocalIterative.randomWalks(rows, steps)
+    Dispatch.gated("randomWalksUncached", edges.select(col("src"), col("dst")),
+        LocalLouvain.CollectMax / 2) { rs =>
+      val one = rs.map(r => (r.getLong(0), r.getLong(1)))
+      Some(LocalIterative.randomWalks(one ++ one.map(_.swap), steps)
         .toDF("walk_id", "step", "vertex")
-        .orderBy(col("walk_id"), col("step"))
-    }
+        .orderBy(col("walk_id"), col("step")))
+    } { e => randomWalksDistributed(
+      e.unionAll(e.select(col("dst").as("src"), col("src").as("dst"))), steps) }
+  }
+
+  private def randomWalksDistributed(sym: DataFrame, steps: Int): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
     val adj = sym
       .withColumn("r",
         row_number().over(Window.partitionBy(col("src")).orderBy(col("dst"))) - 1)
@@ -1547,8 +1504,6 @@ object GraphOps {
       .select(col("src").as("a_src"), col("dst").as("a_dst"),
         col("r").as("a_r"), col("deg").as("a_deg"))
       .localCheckpoint(true)
-    // adj's eager checkpoint is the only consumer of sym's blocks.
-    sym.unpersist(false)
     var cur = adj.select(col("a_src").as("walk_id")).distinct()
       .select(col("walk_id"), col("walk_id").as("vertex"))
     val perStep = scala.collection.mutable.ArrayBuffer[DataFrame](
@@ -1618,30 +1573,22 @@ object GraphOps {
 
   private def minimumSpanningForestUncached(spark: SparkSession,
       edges: DataFrame, maxRounds: Int): DataFrame = {
-    // LAZY checkpoint: the dispatch gate's stats below are the
-    // materializing full scan (the g_lpa fold); on the distributed
-    // path the first comp build's distinct is (also a full scan).
-    val e = edges.select(col("src"), col("dst"),
-      col("weight").cast("double").as("w")).localCheckpoint(false)
     // Measured dispatch (round 16): under the STRICT (w, src, dst)
     // total order the minimum forest is UNIQUE (cycle property), so
     // a driver Kruskal is bit-identical to the Borůvka loop by
     // theorem — IterativeDispatchSpec pins it anyway. Declines on
     // null or NaN weights (the twin's getDouble/sort would NPE or
-    // diverge on NaN ordering; the longKeyed decline discipline).
-    if (!forceDistributed && longKeyed(e, "src", "dst") && {
-      val st = e.agg(count(lit(1)).as("n"), count(col("w")).as("nw"),
-        sum(when(isnan(col("w")), 1L).otherwise(0L)).as("nans"))
-        .collect().head
-      st.getLong(0) <= LocalLouvain.CollectMax &&
-        st.getLong(0) == st.getLong(1) &&
-        (st.isNullAt(2) || st.getLong(2) == 0L)
-    }) {
-      import spark.implicits._
-      val rows = e.collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-      return LocalIterative.kruskal(rows).toDF("src", "dst", "weight")
-    }
+    // diverge on NaN ordering).
+    import spark.implicits._
+    Dispatch.gated("minimumSpanningForestUncached", edges.select(col("src"),
+        col("dst"), col("weight").cast("double").as("w")), LocalLouvain.CollectMax,
+        admit = Seq(Dispatch.noNulls(col("w")), Dispatch.noNaN(col("w")))) { rs =>
+      Some(LocalIterative.kruskal(rs.map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))))
+        .toDF("src", "dst", "weight"))
+    } { e => boruvka(e, maxRounds) }
+  }
+
+  private def boruvka(e: DataFrame, maxRounds: Int): DataFrame = {
     var comp = e.select(col("src").as("vertex"))
       .union(e.select(col("dst").as("vertex"))).distinct()
       .withColumn("label", col("vertex")).localCheckpoint(true)
@@ -1668,7 +1615,7 @@ object GraphOps {
           .join(comp.select(col("vertex").as("src"), col("label").as("ls")), Seq("src"))
           .join(comp.select(col("vertex").as("dst"), col("label").as("ld")), Seq("dst"))
           .select(col("ls").as("src"), col("ld").as("dst"), lit(1.0).as("weight"))
-        val cc = connectedComponents(spark, pe)
+        val cc = connectedComponents(e.sparkSession, pe)
         val next = comp
           .join(cc.select(col("vertex").as("label"), col("component")), Seq("label"), "left")
           .select(col("vertex"), coalesce(col("component"), col("label")).as("label"))
@@ -1732,27 +1679,28 @@ object GraphOps {
     * trade exactness or determinism for it. */
   def node2vecWalks(spark: SparkSession, edges: DataFrame, steps: Int = 4,
       wReturn: Int = 1, wCommon: Int = 2, wOut: Int = 4): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    // Checkpoint-once + measured driver dispatch (round 19, the
-    // randomWalksUncached shape): the second-order biased pick is an
-    // integer cum/tot sample — bit-identical in the twin
-    // (IterativeDispatchSpec) — and the DF loop pays per step an
-    // exploding join, a membership left-join and two windows over the
-    // exploded stream, which at small V is plan/shuffle overhead.
-    val sym = edges.select(col("src"), col("dst"))
-      .unionAll(edges.select(col("dst").as("src"), col("src").as("dst")))
-      .localCheckpoint(true)
-    if (!forceDistributed && longKeyed(sym, "src", "dst") &&
-        sym.count() <= LocalLouvain.CollectMax) {
-      import spark.implicits._
-      val rows = sym.collect().map(r => (r.getLong(0), r.getLong(1)))
-      // Scratch release (round 20, VERDICT r19 item 9).
-      sym.unpersist(false)
-      return LocalIterative.node2vecWalks(rows, steps,
+    import spark.implicits._
+    // Measured driver dispatch (round 19, the randomWalksUncached
+    // shape): the second-order biased pick is an integer cum/tot
+    // sample — bit-identical in the twin (IterativeDispatchSpec) —
+    // and the DF loop pays per step an exploding join, a membership
+    // left-join and two windows over the exploded stream, which at
+    // small V is plan/shuffle overhead.
+    Dispatch.gated("node2vecWalks", edges.select(col("src"), col("dst")),
+        LocalLouvain.CollectMax / 2) { rs =>
+      val one = rs.map(r => (r.getLong(0), r.getLong(1)))
+      Some(LocalIterative.node2vecWalks(one ++ one.map(_.swap), steps,
           wReturn.toLong, wCommon.toLong, wOut.toLong)
         .toDF("walk_id", "step", "vertex")
-        .orderBy(col("walk_id"), col("step"))
-    }
+        .orderBy(col("walk_id"), col("step")))
+    } { e => node2vecDistributed(
+      e.unionAll(e.select(col("dst").as("src"), col("src").as("dst"))),
+      steps, wReturn, wCommon, wOut) }
+  }
+
+  private def node2vecDistributed(sym: DataFrame, steps: Int, wReturn: Int,
+      wCommon: Int, wOut: Int): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
     val adj = sym
       .withColumn("r",
         row_number().over(Window.partitionBy(col("src")).orderBy(col("dst"))) - 1)
@@ -1760,8 +1708,6 @@ object GraphOps {
       .select(col("src").as("a_src"), col("dst").as("a_dst"),
         col("r").as("a_r"), col("deg").as("a_deg"))
       .localCheckpoint(true)
-    // adj's eager checkpoint is the only consumer of sym's blocks.
-    sym.unpersist(false)
     // Membership is a SET in the twin (binarySearch) — dedupe it here
     // too so parallel edges / self-loops in the input cannot multiply
     // candidate rows through the left join and shift the cum/tot pick
@@ -1811,29 +1757,23 @@ object GraphOps {
   def connectedComponents(spark: SparkSession, edges: DataFrame): DataFrame = {
     // Measured driver dispatch (round 18 — the g_cc watch item):
     // min-member CC labels are PATH-INDEPENDENT, so below the bound
-    // this GraphX entry rides ConnectedComponentsDF.run, whose own
-    // gate takes the min-root union-find — ONE driver twin shared by
-    // both CC surfaces, bit-identical by definition. A GraphX Pregel
-    // launch on a bounded graph is scheduling, not work: same code,
-    // same data measured 1.0 s across rounds 14-17 and 2.4-4.2 s
-    // under this session's host band, purely launch latency (the
-    // calib-spin blind spot — scheduling latency is invisible to a
-    // compute loop). The GraphX loop below stays the at-scale shape
-    // alongside cc_df's star contraction.
-    // Checkpoint the narrow projection ONCE before probing (round 19
-    // — ADVICE r18 item 2, the d_dup_clusters gate rule): the gate
-    // count, run()'s own re-count/collect and the GraphX fallback all
-    // read these blocks instead of re-running the caller's (possibly
-    // expensive, e.g. the MST per-round join) lineage per action.
-    val base = edges.select(col("src"), col("dst"), col("weight"))
-      .localCheckpoint(true)
-    if (!forceDistributed && longKeyed(base, "src", "dst") &&
-        base.count() <= LocalLouvain.CollectMax)
-      return ConnectedComponentsDF.run(spark, base)
-    val g = GraphBuilder.toGraphX(base)
-    val cc = g.connectedComponents().vertices
-    spark.createDataFrame(cc.map { case (id, comp) => (id, comp) })
-      .toDF("vertex", "component")
+    // this GraphX entry runs ConnectedComponentsDF's min-root
+    // union-find — ONE driver twin shared by both CC surfaces,
+    // bit-identical by definition. A GraphX Pregel launch on a
+    // bounded graph is scheduling, not work (same code, same data
+    // measured 1.0 s to 4.2 s with the host's launch latency). The
+    // GraphX loop stays the at-scale shape alongside cc_df's star
+    // contraction.
+    import spark.implicits._
+    Dispatch.gated("connectedComponents",
+        edges.select(col("src"), col("dst"), col("weight")), LocalLouvain.CollectMax) { rs =>
+      Some(ConnectedComponentsDF.unionFind(rs.map(r => (r.getLong(0), r.getLong(1))))
+        .toSeq.toDF("vertex", "component"))
+    } { base =>
+      val cc = GraphBuilder.toGraphX(base).connectedComponents().vertices
+      spark.createDataFrame(cc.map { case (id, comp) => (id, comp) })
+        .toDF("vertex", "component")
+    }
   }
 
   /** PageRank, fixed iteration count (deterministic). GraphX PageRank
@@ -1901,29 +1841,26 @@ object GraphOps {
     * one join + one aggregation over a checkpointed fraction table. */
   def pageRankInteger(spark: SparkSession, edges: DataFrame,
       iters: Int = 10): DataFrame = {
-    val fr = pageRankFrame(edges)
+    import spark.implicits._
     // Measured dispatch (round 14): the recursion is pure truncating
     // integer arithmetic, so the driver twin is BIT-IDENTICAL to the
     // DataFrame loop (IterativeDispatchSpec pins it; the unrolled-SQL
     // oracle keeps hash-matching either way) — and at small V the DF
     // loop's cost is per-round plan compile, not arithmetic.
-    if (!forceDistributed && longKeyed(fr, "src", "dst") &&
-        fr.count() <= LocalLouvain.CollectMax) {
-      import spark.implicits._
-      val rows = fr.select(col("src"), col("dst"), col("w"), col("wdeg"))
-        .collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-      LocalIterative.pageRankInt(rows, iters)
-        .toDF("vertex", "rank_e6").orderBy(col("vertex"))
-    } else pageRankIntegerDistributed(spark, fr, iters)
+    Dispatch.gated("pageRankInteger", pageRankFrame(edges), LocalLouvain.CollectMax) { rs =>
+      Some(LocalIterative.pageRankInt(rs.map(r =>
+          (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))), iters)
+        .toDF("vertex", "rank_e6").orderBy(col("vertex")))
+    } { fr => pageRankIntegerDistributed(spark, fr, iters) }
   }
 
+  /** (src, dst, w, wdeg) over the symmetrized long-cast edges. */
   private[graph] def pageRankFrame(edges: DataFrame): DataFrame = {
     val both = edges.select(col("src"), col("dst"), col("weight").cast("long").as("w"))
       .unionAll(edges.select(col("dst").as("src"), col("src").as("dst"),
         col("weight").cast("long").as("w")))
     val wdeg = both.groupBy(col("src")).agg(sum(col("w")).as("wdeg"))
-    both.join(wdeg, Seq("src")).localCheckpoint(true)
+    both.join(wdeg, Seq("src")).select(col("src"), col("dst"), col("w"), col("wdeg"))
   }
 
   private[graph] def pageRankIntegerDistributed(spark: SparkSession,
@@ -1983,14 +1920,12 @@ object GraphOps {
     // (IterativeDispatchSpec pins it; the unrolled oracle matches
     // either path). Both paths read the SAME long-cast weights, so
     // no integrality gate is needed — the cast is the contract.
-    if (!forceDistributed && longKeyed(sym, "src", "dst") &&
-        sym.count() <= LocalLouvain.CollectMax) {
-      import spark.implicits._
-      val rows = sym.collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-      LocalIterative.eigenCentrality(rows, iters)
-        .toDF("vertex", "eig_e6").orderBy(col("vertex"))
-    } else eigenCentralityDistributed(spark, sym, iters)
+    import spark.implicits._
+    Dispatch.gated("eigenCentrality", sym, LocalLouvain.CollectMax) { rs =>
+      Some(LocalIterative.eigenCentrality(
+          rs.map(r => (r.getLong(0), r.getLong(1), r.getLong(2))), iters)
+        .toDF("vertex", "eig_e6").orderBy(col("vertex")))
+    } { eigenCentralityDistributed(spark, _, iters) }
   }
 
   private[graph] def eigenCentralityDistributed(spark: SparkSession,
@@ -2067,14 +2002,15 @@ object GraphOps {
     // Measured dispatch (round 14): truncating-integer recursion ⇒
     // the driver twin is bit-identical (incl. the per-round headroom
     // guard); the DF loop below stays as the at-scale path.
-    if (!forceDistributed && longKeyed(fr, "src", "dst") &&
-        fr.count() <= LocalLouvain.CollectMax) {
-      import spark.implicits._
-      val rows = fr.select(col("src"), col("dst"), col("w")).collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-      return LocalIterative.katz(rows, iters, bound)
-        .toDF("vertex", "katz_e6").orderBy(col("vertex"))
-    }
+    import spark.implicits._
+    Dispatch.gated("katzCentrality", fr, LocalLouvain.CollectMax) { rs =>
+      Some(LocalIterative.katz(rs.map(r => (r.getLong(0), r.getLong(1), r.getLong(2))),
+          iters, bound).toDF("vertex", "katz_e6").orderBy(col("vertex")))
+    } { katzDistributed(_, iters, bound, maxWSum) }
+  }
+
+  private def katzDistributed(fr: DataFrame, iters: Int, bound: Long,
+      maxWSum: Long): DataFrame = {
     var x = fr.select(col("src").as("vertex")).distinct()
       .withColumn("katz", lit(1000000L))
       .localCheckpoint(true)
@@ -2179,21 +2115,18 @@ object GraphOps {
     * checkpointed fraction table. */
   def personalizedPageRank(spark: SparkSession, edges: DataFrame,
       landmarks: Seq[Long] = Seq.empty, iters: Int = 10): DataFrame = {
-    val fr = pageRankFrame(edges)
+    import spark.implicits._
     // Same measured dispatch + bit-identity argument as
     // [[pageRankInteger]] — the restart set is the only delta.
-    if (!forceDistributed && longKeyed(fr, "src", "dst") &&
-        fr.count() <= LocalLouvain.CollectMax) {
-      import spark.implicits._
-      val rows = fr.select(col("src"), col("dst"), col("w"), col("wdeg"))
-        .collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
+    Dispatch.gated("personalizedPageRank", pageRankFrame(edges),
+        LocalLouvain.CollectMax) { rs =>
+      val rows = rs.map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
       val seeds: Set[Long] =
         if (landmarks.nonEmpty) landmarks.toSet
         else rows.map(_._1).distinct.sorted.take(3).toSet
-      LocalIterative.personalizedPageRank(rows, seeds, iters)
-        .toDF("vertex", "rank_e6").orderBy(col("vertex"))
-    } else personalizedPageRankDistributed(spark, fr, landmarks, iters)
+      Some(LocalIterative.personalizedPageRank(rows, seeds, iters)
+        .toDF("vertex", "rank_e6").orderBy(col("vertex")))
+    } { personalizedPageRankDistributed(spark, _, landmarks, iters) }
   }
 
   private[graph] def personalizedPageRankDistributed(spark: SparkSession,
@@ -2243,24 +2176,27 @@ object GraphOps {
     * excluded from their own sums. */
   def betweennessCentrality(spark: SparkSession, edges: DataFrame,
       landmarks: Seq[Long] = Seq.empty, maxLevels: Int = 6): DataFrame = {
-    val sym = edges.select(col("src"), col("dst"))
-      .unionAll(edges.select(col("dst").as("src"), col("src").as("dst")))
-      .localCheckpoint(true)
+    import spark.implicits._
     // Measured dispatch (round 14): forward σ counts and the
     // backward per-term floor-divided dependency fold are integers
     // end to end — the driver twin is bit-identical and the unrolled
     // oracle keeps matching (IterativeDispatchSpec).
-    if (!forceDistributed && longKeyed(sym, "src", "dst") &&
-        sym.count() <= LocalLouvain.CollectMax) {
-      import spark.implicits._
-      val rows = sym.select(col("src"), col("dst")).collect()
-        .map(r => (r.getLong(0), r.getLong(1)))
+    Dispatch.gated("betweennessCentrality", edges.select(col("src"), col("dst")),
+        LocalLouvain.CollectMax / 2) { rs =>
+      val one = rs.map(r => (r.getLong(0), r.getLong(1)))
+      val rows = one ++ one.map(_.swap)
       val seeds: Seq[Long] =
         if (landmarks.nonEmpty) landmarks
         else rows.map(_._1).distinct.sorted.take(3).toSeq
-      return LocalIterative.betweenness(rows, seeds, maxLevels)
-        .toDF("vertex", "bc_e6").orderBy(col("vertex"))
-    }
+      Some(LocalIterative.betweenness(rows, seeds, maxLevels)
+        .toDF("vertex", "bc_e6").orderBy(col("vertex")))
+    } { e => betweennessDistributed(spark,
+      e.unionAll(e.select(col("dst").as("src"), col("src").as("dst"))),
+      landmarks, maxLevels) }
+  }
+
+  private def betweennessDistributed(spark: SparkSession, sym: DataFrame,
+      landmarks: Seq[Long], maxLevels: Int): DataFrame = {
     val verts = sym.select(col("src").as("v")).distinct()
     val seeds: Seq[Long] =
       if (landmarks.nonEmpty) landmarks
@@ -2349,11 +2285,7 @@ object GraphOps {
     // rounds the final select would reference a column that never
     // exists. Fail loudly instead of with an AnalysisException.
     require(iters >= 1, s"hits needs at least one iteration, got $iters")
-    // LAZY checkpoint: the dispatch gate's count below is a full scan
-    // and doubles as the materializing action (the g_scc one-job
-    // lesson); when the gate short-circuits, the first loop action is
-    // also a full scan over e.
-    val e = edges.select(col("src"), col("dst")).distinct().localCheckpoint(false)
+    import spark.implicits._
     // Measured dispatch (round 16, the round-14 twin family): the
     // loop is integer-exact (Long sums are accumulation-order
     // independent; div truncates identically on the driver), so the
@@ -2361,13 +2293,14 @@ object GraphOps {
     // The DataFrame loop below is the unchanged 100 TB path — at
     // bench scale its cost is 10 per-half-round plan compiles, not
     // arithmetic (the plan-compile-bound family).
-    if (!forceDistributed && longKeyed(e, "src", "dst") &&
-        e.count() <= LocalLouvain.CollectMax) {
-      val rows = e.collect().map(r => (r.getLong(0), r.getLong(1)))
-      import spark.implicits._
-      return LocalIterative.hits(rows, iters).toDF("id", "role", "score_e6")
-        .orderBy(col("role"), col("id"))
-    }
+    Dispatch.gated("hits", edges.select(col("src"), col("dst")).distinct(),
+        LocalLouvain.CollectMax) { rs =>
+      Some(LocalIterative.hits(rs.map(r => (r.getLong(0), r.getLong(1))), iters)
+        .toDF("id", "role", "score_e6").orderBy(col("role"), col("id")))
+    } { hitsDistributed(_, iters) }
+  }
+
+  private def hitsDistributed(e: DataFrame, iters: Int): DataFrame = {
     var hubs = e.select(col("src").as("id")).distinct()
       .withColumn("h", lit(1000000L))
       .localCheckpoint(true)
@@ -2403,46 +2336,27 @@ object GraphOps {
     * LPA is unweighted — wrong for weighted co-occurrence graphs).
     * localCheckpoint per round keeps the plan flat. */
   def labelPropagation(spark: SparkSession, edges: DataFrame, iters: Int = 10): DataFrame = {
-    // LAZY checkpoint: the dispatch gate's stats aggregate below is a
-    // FULL scan and doubles as the materializing action (the g_scc
-    // one-job lesson) — the round-14 null/integrality gate on top of
-    // an eager checkpoint cost g_lpa an extra materialization job
-    // per call (1.91 → 2.47 s). When the gate short-circuits
-    // (forceDistributed / non-Long keys) the loop's first per-round
-    // moved-count is the materializer — also a full scan, so the
-    // truncated lineage never hides unmaterialized partitions.
-    val sym = edges
-      .select(col("src"), col("dst"), col("weight"))
-      .unionAll(edges.select(col("dst").as("src"), col("src").as("dst"), col("weight")))
-      .localCheckpoint(false)
+    import spark.implicits._
     // Measured dispatch (round 14): synchronous parity-alternating
     // LPA is deterministic; with INTEGRAL weights the double sums are
     // order-independent-exact on both paths, so the driver twin is
     // bit-identical (the unrolled g_lpa / g_modularity_of oracles
-    // keep matching). Fractional weights stay distributed.
-    if (!forceDistributed && longKeyed(sym, "src", "dst") && {
-      // count(weight) == count(*) declines dispatch on ANY null
-      // weight — max(abs(w − round(w))) ignores nulls, and the
-      // driver twin's getDouble would NPE where the distributed
-      // loop tolerates them (the longKeyed decline-to-dispatch
-      // discipline, applied to nullability).
-      val st = sym.agg(count(lit(1)).as("n"),
-        count(col("weight")).as("nw"),
-        max(abs(col("weight") - org.apache.spark.sql.functions
-          .round(col("weight")))).as("frac"))
-        .collect().head
-      st.getLong(0) <= LocalLouvain.CollectMax &&
-        st.getLong(0) == st.getLong(1) &&
-        (st.isNullAt(2) || st.getDouble(2) == 0.0)
-    }) {
-      import spark.implicits._
-      val rows = sym
-        .select(col("src"), col("dst"), col("weight").cast("double"))
-        .collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-      return LocalIterative.labelPropagation(rows, iters)
-        .toDF("vertex", "label")
-    }
+    // keep matching). Fractional weights stay distributed, and so do
+    // null weights — the twin's double read would NPE where the
+    // distributed loop tolerates them.
+    val w = col("weight")
+    Dispatch.gated("labelPropagation", edges.select(col("src"), col("dst"), w),
+        LocalLouvain.CollectMax / 2,
+        admit = Seq(Dispatch.noNulls(w), Dispatch.integral(w))) { rs =>
+      val one = rs.map(r => (r.getLong(0), r.getLong(1), r.getAs[Number](2).doubleValue))
+      Some(LocalIterative.labelPropagation(
+          one ++ one.map { case (s, d, x) => (d, s, x) }, iters)
+        .toDF("vertex", "label"))
+    } { e => lpaDistributed(e.unionAll(
+      e.select(col("dst").as("src"), col("src").as("dst"), col("weight"))), iters) }
+  }
+
+  private def lpaDistributed(sym: DataFrame, iters: Int): DataFrame = {
     var labels = sym.select(col("src").as("vertex"))
       .distinct()
       .withColumn("label", col("vertex"))
@@ -2667,30 +2581,28 @@ object GraphOps {
       // (same planted partitions, level-Q ≡ modularityOf) rides the
       // existing GraphOpsSpec/GraftGraphSpec/LeidenSpec assertions,
       // which now exercise the driver path at test scale.
-      val dispatchable = !forceDistributed && resolution == 1.0 &&
-        longKeyed(edges, "src", "dst") && {
-        val st = edges.agg(count(lit(1)).as("n"),
-          max(abs(col("weight") - round(col("weight")))).as("frac"))
-          .collect().head
-        st.getLong(0) <= LocalLouvain.CollectMax &&
-          (st.isNullAt(1) || st.getDouble(1) == 0.0)
-      }
-      if (dispatchable) {
-        val rows = edges.select(col("src").cast("long"),
-          col("dst").cast("long"), col("weight").cast("double"))
-          .collect()
-          .map(r => (r.getLong(0), r.getLong(1), math.round(r.getDouble(2))))
-        val (assign, lv) = LocalLouvain.clusterWithLevels(rows.toSeq)
+      Dispatch.gated("louvainFor", edges.select(col("src"), col("dst"), col("weight")),
+          LocalLouvain.CollectMax, admit = lit(resolution == 1.0) +: exactWeights("weight")) { rs =>
+        val (assign, lv) = LocalLouvain.clusterWithLevels(integralRows(rs).toSeq)
         val rdd = spark.sparkContext.parallelize(assign.toSeq).cache()
-        (rdd, lv.map(l => LouvainLevel(l._1, l._2, l._3, l._4)))
-      } else {
+        Some((rdd, lv.map(l => LouvainLevel(l._1, l._2, l._3, l._4))))
+      } { e =>
         val (assignment, levels) =
-          Louvain.run(GraphBuilder.toGraphX(edges), resolution = resolution)
+          Louvain.run(GraphBuilder.toGraphX(e), resolution = resolution)
         assignment.cache()
         (assignment, levels)
       }
     })
   }
+
+  /** Louvain twin admission: the driver ledger is exact-integer, so
+    * weights must be non-null and integral (fractional weights, as
+    * similarity graphs have, run on GraphX). */
+  private def exactWeights(w: String): Seq[Column] =
+    Seq(Dispatch.noNulls(col(w)), Dispatch.integral(col(w)))
+
+  private def integralRows(rs: Array[org.apache.spark.sql.Row]): Array[(Long, Long, Long)] =
+    rs.map(r => (r.getLong(0), r.getLong(1), math.round(r.getAs[Number](2).doubleValue)))
 
   /** Louvain communities at the final level. `resolution` is the γ of
     * generalized modularity (1.0 = classic). */
@@ -2757,7 +2669,6 @@ object GraphOps {
         greatest(col("src"), col("dst")).as("dst"),
         col("cs").as("community"))
       .distinct()
-      .localCheckpoint(true)
     // Measured dispatch (round 14): within the driver bound, one
     // union-find over the collected intra edges IS the whole
     // refinement — intra edges never cross communities, so global
@@ -2771,11 +2682,10 @@ object GraphOps {
     // path. Output is bit-identical on both paths: connected
     // communities keep their min member, splits take per-component
     // min members, community-isolated vertices become singletons.
-    if (!forceDistributed &&
-        math.max(intra.count(), a.count()) <= LocalLouvain.CollectMax)
-      refineDriver(spark, a, intra)
-    else
-      refineDistributed(spark, a, intra)
+    Dispatch.gated("refineCommunities", intra, LocalLouvain.CollectMax,
+        admit = Seq(lit(a.count() <= LocalLouvain.CollectMax))) { rs =>
+      Some(refineRows(spark, a, rs.map(r => (r.getLong(0), r.getLong(1)))))
+    } { refineDistributed(spark, a, _) }
   }
 
   /** Driver refinement: min-root union-find over the collected intra
@@ -2783,30 +2693,15 @@ object GraphOps {
     * bit-identical to [[refineDistributed]] (LeidenSpec pins the
     * equality on planted splits). */
   private[graph] def refineDriver(spark: SparkSession, a: DataFrame,
-      intra: DataFrame): DataFrame = {
-    val es = intra.select(col("src"), col("dst")).collect()
-      .map(r => (r.getLong(0), r.getLong(1)))
+      intra: DataFrame): DataFrame =
+    refineRows(spark, a, intra.select(col("src"), col("dst")).collect()
+      .map(r => (r.getLong(0), r.getLong(1))))
+
+  private def refineRows(spark: SparkSession, a: DataFrame,
+      es: Array[(Long, Long)]): DataFrame = {
     val av = a.collect().map(r => (r.getLong(0), r.getLong(1)))
-    val parent = scala.collection.mutable.LongMap.empty[Long]
-    def find(x: Long): Long = {
-      var r = x
-      while (parent.getOrElse(r, r) != r) r = parent.getOrElse(r, r)
-      var c = x
-      while (parent.getOrElse(c, c) != c) {
-        val nx = parent.getOrElse(c, c); parent(c) = r; c = nx
-      }
-      r
-    }
-    es.foreach { case (x, y) =>
-      val (rx, ry) = (find(x), find(y))
-      if (rx != ry) {
-        if (rx < ry) parent(ry) = rx else parent(rx) = ry
-      }
-    }
-    val touched = es.iterator.flatMap(e => Iterator(e._1, e._2)).toSet
-    val rows = av.map { case (v, c) =>
-      (v, c, if (touched(v)) find(v) else v)
-    }
+    val label = ConnectedComponentsDF.unionFind(es).toMap
+    val rows = av.map { case (v, c) => (v, c, label.getOrElse(v, v)) }
     spark.createDataFrame(rows.toSeq)
       .toDF("vertex", "community_louvain", "community")
       .orderBy(col("vertex"))
@@ -2873,17 +2768,15 @@ object GraphOps {
     * worth milliseconds; the tiny-fits-are-scheduling-bound lesson).
     * Past the bound — a genuinely huge batch or a fold holding
     * millions of communities — the distributed GraphX path below is
-    * the 100 TB shape, unchanged. */
-  def louvainOnSuper(spark: SparkSession, sup: DataFrame): DataFrame = {
-    if (!forceDistributed && sup.count() <= LocalLouvain.CollectMax) {
-      val rows = sup.select(col("a"), col("b"), col("w").cast("double"))
-        .collect()
-        .map(r => (r.getLong(0), r.getLong(1), math.round(r.getDouble(2))))
-      val assign = LocalLouvain.cluster(rows.toSeq)
-      return spark.createDataFrame(assign.toSeq).toDF("sv", "community")
-    }
-    louvainOnSuperGraphX(spark, sup)
-  }
+    * the 100 TB shape, unchanged. Fractional or null weights also go
+    * to GraphX: the driver ledger is exact-integer and would round
+    * them (weights in (0, 0.5) would vanish). */
+  def louvainOnSuper(spark: SparkSession, sup: DataFrame): DataFrame =
+    Dispatch.gated("louvainOnSuper", sup.select(col("a"), col("b"), col("w")),
+        LocalLouvain.CollectMax, keys = Seq("a", "b"), admit = exactWeights("w")) { rs =>
+      Some(spark.createDataFrame(LocalLouvain.cluster(integralRows(rs).toSeq).toSeq)
+        .toDF("sv", "community"))
+    } { louvainOnSuperGraphX(spark, _) }
 
   private[graft] def louvainOnSuperGraphX(spark: SparkSession,
       sup: DataFrame): DataFrame = {

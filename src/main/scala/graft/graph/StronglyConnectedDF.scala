@@ -38,38 +38,22 @@ object StronglyConnectedDF {
   /** @param edges directed (src, dst) DataFrame; self-loops ignored.
     * @return (vertex, scc_id) with scc_id = min member id. */
   def run(spark: SparkSession, edges: DataFrame, maxOuter: Int = 30,
-      maxInner: Int = 100): DataFrame =
-    sccDispatch(spark, edges, maxOuter, maxInner)
-
-  /** Measured driver dispatch (round 16, the round-14 twin family):
-    * SCC labels are CANONICAL (min member id), so any correct
-    * algorithm emits identical rows — twin equality is a theorem,
-    * like the MST unique-forest argument. Below the collect bound
-    * the coloring loop's cost is per-round plan compile + fixpoint
-    * signatures, not arithmetic; the driver runs one iterative
-    * Tarjan pass instead. The coloring loop is the unchanged 100 TB
-    * path. Checkpoint the narrow projection ONCE before the gate
-    * count + collect (the ConnectedComponentsDF probe rule) — but
-    * LAZILY: the gate count() is itself a full scan, so one job
-    * materializes and counts (the g_scc one-job rule, as hits does).
-    * An eager checkpoint here would materialize the whole edge set
-    * to executor-local storage even when the distributed branch is
-    * taken — at 100 TB that is a full extra write (round-16 ADVICE).
-    * When forceDistributed short-circuits the count, the first
-    * action inside runDistributed materializes it instead. */
-  private def sccDispatch(spark: SparkSession, edges: DataFrame,
-      maxOuter: Int, maxInner: Int): DataFrame = {
-    val base = edges
-      .select(col("src").cast("long").as("src"),
-        col("dst").cast("long").as("dst"))
-      .localCheckpoint(false)
-    if (!GraphOps.forceDistributed &&
-        base.count() <= LocalLouvain.CollectMax) {
-      val rows = base.collect().map(r => (r.getLong(0), r.getLong(1)))
-      import spark.implicits._
-      return LocalIterative.tarjanScc(rows).toDF("vertex", "scc_id")
-    }
-    runDistributed(spark, base, maxOuter, maxInner)
+      maxInner: Int = 100): DataFrame = {
+    // Measured driver dispatch (round 16, the round-14 twin family):
+    // SCC labels are CANONICAL (min member id), so any correct
+    // algorithm emits identical rows — twin equality is a theorem,
+    // like the MST unique-forest argument. Below the collect bound
+    // the coloring loop's cost is per-round plan compile + fixpoint
+    // signatures, not arithmetic; the driver runs one iterative
+    // Tarjan pass instead. The coloring loop is the unchanged 100 TB
+    // path.
+    import spark.implicits._
+    Dispatch.gated("sccDispatch", edges.select(
+        col("src").cast("long").as("src"), col("dst").cast("long").as("dst")),
+        LocalLouvain.CollectMax) { rs =>
+      Some(LocalIterative.tarjanScc(rs.map(r => (r.getLong(0), r.getLong(1))))
+        .toDF("vertex", "scc_id"))
+    } { runDistributed(spark, _, maxOuter, maxInner) }
   }
 
   private[graft] def runDistributed(spark: SparkSession, edges: DataFrame,

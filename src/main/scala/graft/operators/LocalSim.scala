@@ -2,7 +2,7 @@ package graft.operators
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions.col
 
 /** Driver-side twins of the BOUNDED similarity hot paths (round 20 —
@@ -55,22 +55,14 @@ private[operators] object LocalSim {
     }
   }
 
-  /** Collect (vec_id, embedding) sorted by vec_id; floats widen
+  /** Collected (vec_id, embedding) rows sorted by vec_id; floats widen
     * exactly as the expressions do. Caller gates the size. */
-  def corpusOf(emb: DataFrame): Corpus = {
-    import org.apache.spark.sql.types.{ArrayType, FloatType}
-    val isFloat = emb.schema("embedding").dataType match {
-      case ArrayType(FloatType, _) => true
-      case _ => false
-    }
-    val rows = emb.select(col("vec_id"), col("embedding")).collect()
-      .sortBy(_.getLong(0))
-    val ids = rows.map(_.getLong(0))
-    val vecs = rows.map { r =>
-      if (isFloat) r.getSeq[Float](1).iterator.map(_.toDouble).toArray
-      else r.getSeq[Double](1).toArray
-    }
-    new Corpus(ids, vecs)
+  def corpusOf(rows: Array[Row]): Corpus = {
+    val sorted = rows.sortBy(_.getLong(0))
+    new Corpus(sorted.map(_.getLong(0)), sorted.map(_.getSeq[Any](1).iterator.map {
+      case f: Float => f.toDouble
+      case d: Double => d
+    }.toArray))
   }
 
   /** Spark `round(x * 1e4, 0).cast("long")` — HALF_UP BigDecimal on

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.graph.{Dispatch, LocalLouvain}
 import graft.functions.VectorFunctions._
 
 /** Similarity search over the embeddings table (SURVEY §2 rows
@@ -508,49 +509,50 @@ object Similarity {
     * at scale instead of broadcasting it. */
   def knnGraphFrom(emb: DataFrame, candidatePairs: DataFrame,
       k: Int = TopK): DataFrame = {
-    import graft.graph.GraphOps
     // Measured driver dispatch (round 20, the exactKnnEdges family):
     // when the corpus is within the exact bound AND the candidate
     // pairs fit the collect cap, score + top-k in the driver — the
     // capped limit+collect materializes the candidate plan ONCE (a
     // too-big pair set declines and only then does the DataFrame path
-    // re-evaluate it). At scale the emb count gate declines before
-    // the candidate plan is touched. Serves the IVF candidate path
-    // and the PQ-SDC re-rank; LocalSimSpec pins both-path equality.
-    if (!GraphOps.forceDistributed && LocalSim.twinnable(emb) &&
-        emb.count() <= ExactKnnMaxRows &&
-        candidatePairs.schema("vec_id").dataType ==
-          org.apache.spark.sql.types.LongType &&
-        candidatePairs.schema("candidate_id").dataType ==
-          org.apache.spark.sql.types.LongType) {
-      val cap = graft.graph.LocalLouvain.CollectMax
-      val rows = candidatePairs.select(col("vec_id"), col("candidate_id"))
+    // re-evaluate it). At scale the corpus gate declines before the
+    // candidate plan is touched. Serves the IVF candidate path and
+    // the PQ-SDC re-rank; LocalSimSpec pins both-path equality.
+    val longPairs = Seq("vec_id", "candidate_id").forall(c =>
+      candidatePairs.schema(c).dataType == org.apache.spark.sql.types.LongType)
+    Dispatch.gated("knnGraphFrom", corpus(emb), ExactKnnMaxRows, keys = Seq("vec_id"),
+        admit = Seq(lit(LocalSim.twinnable(emb) && longPairs))) { rs =>
+      val cap = LocalLouvain.CollectMax
+      val pairs = candidatePairs.select(col("vec_id"), col("candidate_id"))
         .limit((cap + 1).toInt).collect()
-      if (rows.length <= cap) {
-        val spark = emb.sparkSession
-        return spark.createDataFrame(
-            LocalSim.pairsTopK(LocalSim.corpusOf(emb),
-              rows.map(r => (r.getLong(0), r.getLong(1))), k))
-          .toDF("vec_id", "neighbor_id", "rank", "sim_e4")
-      }
+      if (pairs.length > cap) None
+      else Some(emb.sparkSession.createDataFrame(
+          LocalSim.pairsTopK(LocalSim.corpusOf(rs),
+            pairs.map(r => (r.getLong(0), r.getLong(1))), k))
+        .toDF("vec_id", "neighbor_id", "rank", "sim_e4"))
+    } { e =>
+      // Norms hoisted to the per-vector lookups (round 20): each
+      // candidate-pair evaluation pays one dot fold instead of three.
+      val e1 = e.select(col("vec_id"), col("embedding"),
+        normCol(col("embedding")).as("nrm1"))
+      val e2 = e.select(col("vec_id").as("nb"), col("embedding").as("e2"),
+        normCol(col("embedding")).as("nrm2"))
+      val scored = candidatePairs
+        .select(col("vec_id"), col("candidate_id").as("nb"))
+        .filter(col("vec_id") =!= col("nb"))
+        .dropDuplicates("vec_id", "nb")
+        .join(e1, Seq("vec_id"))
+        .join(e2, Seq("nb"))
+        .select(col("vec_id"), col("nb"),
+          hoistedCosine(innerProduct(col("embedding"), col("e2")),
+            col("nrm1"), col("nrm2")).as("sim"))
+      topKEdges(scored, k)
     }
-    // Norms hoisted to the per-vector lookups (round 20): each
-    // candidate-pair evaluation pays one dot fold instead of three.
-    val e1 = emb.select(col("vec_id"), col("embedding"),
-      normCol(col("embedding")).as("nrm1"))
-    val e2 = emb.select(col("vec_id").as("nb"), col("embedding").as("e2"),
-      normCol(col("embedding")).as("nrm2"))
-    val scored = candidatePairs
-      .select(col("vec_id"), col("candidate_id").as("nb"))
-      .filter(col("vec_id") =!= col("nb"))
-      .dropDuplicates("vec_id", "nb")
-      .join(e1, Seq("vec_id"))
-      .join(e2, Seq("nb"))
-      .select(col("vec_id"), col("nb"),
-        hoistedCosine(innerProduct(col("embedding"), col("e2")),
-          col("nrm1"), col("nrm2")).as("sim"))
-    topKEdges(scored, k)
   }
+
+  /** The (vec_id, embedding) projection every similarity twin gates
+    * on. */
+  private def corpus(emb: DataFrame): DataFrame =
+    emb.select(col("vec_id"), col("embedding"))
 
   /** Sign-LSH candidate pairs over the whole table (both directions):
     * a band-key self-join emitting bare (vec_id, candidate_id) rows —
@@ -663,12 +665,12 @@ object Similarity {
   private[graft] def knnGraphOf(emb: DataFrame, k: Int,
       exactMaxRows: Long): DataFrame = {
     val n = emb.count()
-    if (n <= exactMaxRows) exactKnnEdges(emb, n, k)
+    if (n <= exactMaxRows) exactKnnEdges(emb, k)
     // The measured count sizes the banding (lshParamsFor): the fixed
     // 8×2 test-scale banding is n²/4-per-band above the bound.
     else {
       val (bands, rows) = lshParamsFor(n)
-      lshKnnEdges(emb, n, bands, rows, k)
+      lshKnnEdges(emb, bands, rows, k)
     }
   }
 
@@ -681,17 +683,13 @@ object Similarity {
     * bit-identity argument; LocalSimSpec pins both-path equality).
     * The DataFrame path stays verbatim — it IS the shape the at-scale
     * branches reuse. */
-  private def exactKnnEdges(emb: DataFrame, n: Long, k: Int): DataFrame = {
-    import graft.graph.GraphOps
-    if (!GraphOps.forceDistributed && LocalSim.twinnable(emb) &&
-        n > 0 && n <= ExactKnnMaxRows) {
-      val spark = emb.sparkSession
-      return spark.createDataFrame(
-          LocalSim.exactTopK(LocalSim.corpusOf(emb), k))
-        .toDF("vec_id", "neighbor_id", "rank", "sim_e4")
-    }
-    topKEdges(knnScoredExact(emb), k)
-  }
+  private def exactKnnEdges(emb: DataFrame, k: Int): DataFrame =
+    Dispatch.gated("exactKnnEdges", corpus(emb), ExactKnnMaxRows, keys = Seq("vec_id"),
+        admit = Seq(lit(LocalSim.twinnable(emb)), count(lit(1)) > 0)) { rs =>
+      Some(emb.sparkSession.createDataFrame(
+          LocalSim.exactTopK(LocalSim.corpusOf(rs), k))
+        .toDF("vec_id", "neighbor_id", "rank", "sim_e4"))
+    } { e => topKEdges(knnScoredExact(e), k) }
 
   /** LSH-candidate kNN edges with the same measured driver dispatch:
     * at test scale the fixed 8×2 banding has 4 buckets, so the band
@@ -701,19 +699,14 @@ object Similarity {
     * expression and scores the identical deduped candidate set. Past
     * [[ExactKnnMaxRows]] the DataFrame path below is the 100 TB
     * shape, unchanged. */
-  private def lshKnnEdges(emb: DataFrame, n: Long, bands: Int, rows: Int,
-      k: Int): DataFrame = {
-    import graft.graph.GraphOps
-    if (!GraphOps.forceDistributed && LocalSim.twinnable(emb) &&
-        n > 0 && n <= ExactKnnMaxRows) {
-      val spark = emb.sparkSession
-      return spark.createDataFrame(
-          LocalSim.lshTopK(LocalSim.corpusOf(emb), EmbeddingDim, bands,
-            rows, k))
-        .toDF("vec_id", "neighbor_id", "rank", "sim_e4")
-    }
-    knnGraphFrom(emb, lshCandidatePairsBanded(emb, bands, rows), k)
-  }
+  private def lshKnnEdges(emb: DataFrame, bands: Int, rows: Int,
+      k: Int): DataFrame =
+    Dispatch.gated("lshKnnEdges", corpus(emb), ExactKnnMaxRows, keys = Seq("vec_id"),
+        admit = Seq(lit(LocalSim.twinnable(emb)), count(lit(1)) > 0)) { rs =>
+      Some(emb.sparkSession.createDataFrame(
+          LocalSim.lshTopK(LocalSim.corpusOf(rs), EmbeddingDim, bands, rows, k))
+        .toDF("vec_id", "neighbor_id", "rank", "sim_e4"))
+    } { e => knnGraphFrom(e, lshCandidatePairsBanded(e, bands, rows), k) }
 
   // One kNN edge table per (session, embeddings identity, k), built
   // once and checkpointed: e_knn_graph and e_embed_clusters (and any
@@ -859,7 +852,7 @@ object Similarity {
     // bound, the same knnGraphFrom shape past it.
     val n = emb.count()
     val (bands, rows) = lshParamsFor(n)
-    withSampledRecall(emb, lshKnnEdges(emb, n, bands, rows, k), k)
+    withSampledRecall(emb, lshKnnEdges(emb, bands, rows, k), k)
   }
 
   /** The IVF-candidate kNN graph as a first-class query — the second
@@ -895,32 +888,29 @@ object Similarity {
     // arithmetic the driver does in milliseconds under the bound.
     // Base rows collect once (the loop reads base twice). LocalSimSpec
     // pins both-path equality; the loop stays the at-scale shape.
-    {
-      import graft.graph.GraphOps
-      if (!GraphOps.forceDistributed && LocalSim.twinnable(emb) &&
-          emb.count() <= ExactKnnMaxRows) {
-        val spark = emb.sparkSession
-        val baseRows = base.select(col("vec_id"), col("neighbor_id"),
-            col("sim_e4")).collect()
-          .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-        return spark.createDataFrame(
-            LocalSim.descentTopK(LocalSim.corpusOf(emb), baseRows, k))
-          .toDF("vec_id", "neighbor_id", "rank", "sim_e4")
-      }
+    Dispatch.gated("nnDescentFrom", corpus(emb), ExactKnnMaxRows, keys = Seq("vec_id"),
+        admit = Seq(lit(LocalSim.twinnable(emb)))) { rs =>
+      val baseRows = base.select(col("vec_id"), col("neighbor_id"),
+          col("sim_e4")).collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+      Some(emb.sparkSession.createDataFrame(
+          LocalSim.descentTopK(LocalSim.corpusOf(rs), baseRows, k))
+        .toDF("vec_id", "neighbor_id", "rank", "sim_e4"))
+    } { e =>
+      val fwd = base.select(col("vec_id"), col("neighbor_id"))
+      val revRanked = Window.partitionBy(col("neighbor_id"))
+        .orderBy(col("sim_e4").desc, col("vec_id").asc)
+      val rev = base.withColumn("rrank", row_number().over(revRanked))
+        .filter(col("rrank") <= k)
+        .select(col("neighbor_id").as("vec_id"), col("vec_id").as("neighbor_id"))
+      val b = fwd.union(rev)
+        .select(col("vec_id").as("pivot"), col("neighbor_id").as("m"))
+      val non = b.join(b.select(col("pivot"), col("m").as("candidate_id")), Seq("pivot"))
+        .select(col("m").as("vec_id"), col("candidate_id"))
+      val cands = fwd.select(col("vec_id"), col("neighbor_id").as("candidate_id"))
+        .union(non)
+      knnGraphFrom(e, cands, k)
     }
-    val fwd = base.select(col("vec_id"), col("neighbor_id"))
-    val revRanked = Window.partitionBy(col("neighbor_id"))
-      .orderBy(col("sim_e4").desc, col("vec_id").asc)
-    val rev = base.withColumn("rrank", row_number().over(revRanked))
-      .filter(col("rrank") <= k)
-      .select(col("neighbor_id").as("vec_id"), col("vec_id").as("neighbor_id"))
-    val b = fwd.union(rev)
-      .select(col("vec_id").as("pivot"), col("neighbor_id").as("m"))
-    val non = b.join(b.select(col("pivot"), col("m").as("candidate_id")), Seq("pivot"))
-      .select(col("m").as("vec_id"), col("candidate_id"))
-    val cands = fwd.select(col("vec_id"), col("neighbor_id").as("candidate_id"))
-      .union(non)
-    knnGraphFrom(emb, cands, k)
   }
 
   /** NN-descent over the sign-LSH base graph as a first-class query,
@@ -941,7 +931,7 @@ object Similarity {
       // The inline LSH base keeps the fixed 8×2 test-scale banding
       // (d_embed_dup's oracle inlines those planes); it now routes
       // through lshKnnEdges so the round-20 twin serves it too.
-      else nnDescentFrom(emb, lshKnnEdges(emb, n, LshBands, LshRows, k), k)
+      else nnDescentFrom(emb, lshKnnEdges(emb, LshBands, LshRows, k), k)
     withSampledRecall(emb, refined, k)
   }
 
@@ -964,32 +954,32 @@ object Similarity {
     * graph does the narrowing, the re-score keeps it honest. */
   private[operators] def beamSearchFrom(emb: DataFrame, edges: DataFrame,
       queries: DataFrame, seeds: DataFrame, k: Int = TopK,
-      beamWidth: Int = BeamWidth, rounds: Int = BeamRounds): DataFrame = {
-    import graft.graph.GraphOps
+      beamWidth: Int = BeamWidth, rounds: Int = BeamRounds): DataFrame =
     // Measured driver dispatch (round 20, the LocalSim family): each
     // beam round is joins + a window + a checkpoint over |Q|·width
     // rows — plan-compile-bound micro-rounds. The twin replays the
     // identical expand/re-score/keep-best loop over collected parts;
     // LocalSimSpec pins both-path equality. The loop below stays the
     // at-scale shape.
-    if (!GraphOps.forceDistributed && LocalSim.twinnable(emb) &&
-        emb.count() <= ExactKnnMaxRows &&
-        queries.count() <= 4096) {
-      val cap = graft.graph.LocalLouvain.CollectMax
+    Dispatch.gated("beamSearchFrom", corpus(emb), ExactKnnMaxRows, keys = Seq("vec_id"),
+        admit = Seq(lit(LocalSim.twinnable(emb) && queries.count() <= 4096))) { rs =>
+      val cap = LocalLouvain.CollectMax
       val edgeRows = edges.select(col("vec_id"), col("neighbor_id"))
         .limit((cap + 1).toInt).collect()
-      if (edgeRows.length <= cap) {
-        val spark = emb.sparkSession
-        return spark.createDataFrame(LocalSim.beamTopK(
-            LocalSim.corpusOf(emb),
-            edgeRows.map(r => (r.getLong(0), r.getLong(1))),
-            LocalSim.queriesOf(queries),
-            seeds.select(col("query_id"), col("vec_id")).collect()
-              .map(r => (r.getLong(0), r.getLong(1))),
-            k, beamWidth, rounds))
-          .toDF("query_id", "neighbor_id", "rank", "sim_e4")
-      }
-    }
+      if (edgeRows.length > cap) None
+      else Some(emb.sparkSession.createDataFrame(LocalSim.beamTopK(
+          LocalSim.corpusOf(rs),
+          edgeRows.map(r => (r.getLong(0), r.getLong(1))),
+          LocalSim.queriesOf(queries),
+          seeds.select(col("query_id"), col("vec_id")).collect()
+            .map(r => (r.getLong(0), r.getLong(1))),
+          k, beamWidth, rounds))
+        .toDF("query_id", "neighbor_id", "rank", "sim_e4"))
+    } { beamSearchDistributed(_, edges, queries, seeds, k, beamWidth, rounds) }
+
+  private def beamSearchDistributed(emb: DataFrame, edges: DataFrame,
+      queries: DataFrame, seeds: DataFrame, k: Int, beamWidth: Int,
+      rounds: Int): DataFrame = {
     val q = broadcast(queries)
     val sym = edges.select(col("vec_id"), col("neighbor_id"))
       .unionAll(edges.select(col("neighbor_id").as("vec_id"),
@@ -1145,7 +1135,6 @@ object Similarity {
   private[graft] def hnswDescend(spark: SparkSession, dir: String,
       refined: DataFrame, levels: DataFrame, maxLevel: Int,
       k: Int): DataFrame = {
-    import graft.graph.GraphOps
     val emb = Tables.embeddings(spark, dir)
       .select(col("vec_id"), col("embedding"))
     val queries = emb.filter(col("vec_id") < QueryLimit)
@@ -1159,23 +1148,28 @@ object Similarity {
     // must see the same values it wrote); the recall audit stays on
     // the result either way. LocalSimSpec pins both-path equality;
     // the loop below is the at-scale shape.
-    if (!GraphOps.forceDistributed && LocalSim.twinnable(emb) &&
-        emb.count() <= ExactKnnMaxRows) {
-      val cap = graft.graph.LocalLouvain.CollectMax
+    Dispatch.gated("hnswDescend", emb, ExactKnnMaxRows, keys = Seq("vec_id"),
+        admit = Seq(lit(LocalSim.twinnable(emb)))) { rs =>
+      val cap = LocalLouvain.CollectMax
       val refinedRows = refined.select(col("vec_id"), col("neighbor_id"))
         .limit((cap + 1).toInt).collect()
-      if (refinedRows.length <= cap) {
+      if (refinedRows.length > cap) None
+      else {
         val lvlRows = levels.select(col("vec_id"), col("lvl")).collect()
           .map(r => (r.getLong(0), r.getInt(1)))
-        return withRecall(spark, dir,
+        Some(withRecall(spark, dir,
           spark.createDataFrame(LocalSim.hnswDescendTopK(
-              LocalSim.corpusOf(emb),
+              LocalSim.corpusOf(rs),
               refinedRows.map(r => (r.getLong(0), r.getLong(1))),
               lvlRows, maxLevel, LocalSim.queriesOf(queries), k,
               HnswDescentWidth, BeamWidth, BeamRounds))
-            .toDF("query_id", "neighbor_id", "rank", "sim_e4"))
+            .toDF("query_id", "neighbor_id", "rank", "sim_e4")))
       }
-    }
+    } { e => withRecall(spark, dir, hnswDistributed(e, queries, refined, levels, maxLevel, k)) }
+  }
+
+  private def hnswDistributed(emb: DataFrame, queries: DataFrame, refined: DataFrame,
+      levels: DataFrame, maxLevel: Int, k: Int): DataFrame = {
     // Entry set: every top-layer vertex serves every query (the top
     // layer is n/8^maxLevel ≈ fanout-sized by construction). Enter
     // at the highest REALIZED level, not the nominal maxLevel:
@@ -1216,8 +1210,7 @@ object Similarity {
         entry.unionAll(expand).dropDuplicates("query_id", "vec_id"),
         HnswDescentWidth)
     }
-    withRecall(spark, dir,
-      beamSearchFrom(emb, refined, queries, entry, k))
+    beamSearchFrom(emb, refined, queries, entry, k)
   }
 
   // ---- Product quantization (round 8) ----
@@ -1560,25 +1553,27 @@ object Similarity {
     * wide ever shuffles. */
   def cosineThresholdPairs(emb: DataFrame, minSimE4: Long,
       exactMaxRows: Long = ExactKnnMaxRows): DataFrame = {
-    import graft.graph.GraphOps
-    val measured = emb.count()
     // Measured driver dispatch (round 20): same twin family as
     // exactKnnEdges/lshKnnEdges — identical scores, identical pair
     // sets, both branches (LocalSimSpec pins both-path equality); the
     // DataFrame branches below stay the at-scale shapes.
-    if (!GraphOps.forceDistributed && LocalSim.twinnable(emb) &&
-        measured > 0 && measured <= ExactKnnMaxRows) {
-      val spark = emb.sparkSession
-      import spark.implicits._
-      val c = LocalSim.corpusOf(emb)
+    val spark = emb.sparkSession
+    import spark.implicits._
+    Dispatch.gated("cosineThresholdPairs", corpus(emb), ExactKnnMaxRows, keys = Seq("vec_id"),
+        admit = Seq(lit(LocalSim.twinnable(emb)), count(lit(1)) > 0)) { rs =>
+      val c = LocalSim.corpusOf(rs)
       val pairs =
-        if (measured <= exactMaxRows) LocalSim.thresholdPairs(c, minSimE4)
+        if (rs.length <= exactMaxRows) LocalSim.thresholdPairs(c, minSimE4)
         else {
-          val (bands, rows) = lshParamsFor(measured)
+          val (bands, rows) = lshParamsFor(rs.length)
           LocalSim.lshThresholdPairs(c, EmbeddingDim, bands, rows, minSimE4)
         }
-      return pairs.toDF("src", "dst")
-    }
+      Some(pairs.toDF("src", "dst"))
+    } { e => thresholdPairsDistributed(e, e.count(), minSimE4, exactMaxRows) }
+  }
+
+  private def thresholdPairsDistributed(emb: DataFrame, measured: Long,
+      minSimE4: Long, exactMaxRows: Long): DataFrame = {
     // Norms hoisted per vector on both branches (round 20): the
     // threshold score is round(hoisted_sim · 1e4) — bit-equal, since
     // the hoisted sim double is bit-equal (see hoistedCosine).
@@ -1716,21 +1711,21 @@ object Similarity {
     // family): the band join + distinct is all scheduling at test
     // scale; the twin derives the same 8×2 band keys, scores the same
     // collision pairs, and emits the same thresholded distinct rows
-    // (full oracle hash pins it; LocalSimSpec pins both paths).
-    {
-      import graft.graph.GraphOps
-      val emb0 = Tables.embeddings(spark, dir)
-        .select(col("vec_id"), col("embedding"))
-      val n = emb0.count()
-      if (!GraphOps.forceDistributed && LocalSim.twinnable(emb0) &&
-          n > 0 && n <= ExactKnnMaxRows) {
-        import spark.implicits._
-        return LocalSim.embedDupPairs(LocalSim.corpusOf(emb0),
-            EmbeddingDim, LshBands, LshRows, 4000L)
-          .toDF("vec_a", "vec_b", "cos_e4")
-          .orderBy(col("vec_a"), col("vec_b"))
-      }
-    }
+    // (full oracle hash pins it; LocalSimSpec pins both paths). The
+    // distributed branch reads the memoized band table, not the
+    // corpus projection.
+    import spark.implicits._
+    val emb = Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))
+    Dispatch.gated("embedDup", emb, ExactKnnMaxRows, keys = Seq("vec_id"),
+        admit = Seq(lit(LocalSim.twinnable(emb)), count(lit(1)) > 0)) { rs =>
+      Some(LocalSim.embedDupPairs(LocalSim.corpusOf(rs),
+          EmbeddingDim, LshBands, LshRows, 4000L)
+        .toDF("vec_a", "vec_b", "cos_e4")
+        .orderBy(col("vec_a"), col("vec_b")))
+    } { _ => embedDupDistributed(spark, dir) }
+  }
+
+  private def embedDupDistributed(spark: SparkSession, dir: String): DataFrame = {
     val e = banded(spark, dir)
     val a = e.select(col("band"), col("key"),
       col("vec_id").as("vec_a"), col("embedding").as("emb_a"))

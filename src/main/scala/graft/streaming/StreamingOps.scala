@@ -77,8 +77,8 @@ object StreamingOps {
     * verdict: mutating session-global `spark.sql.shuffle.partitions`
     * around the stream build silently re-plans any CONCURRENT batch
     * query in the same session at 8 partitions — the same
-    * session-global-mutation class as the forceDistributed @volatile
-    * discipline). `spark.newSession()` shares the SparkContext but
+    * session-global-mutation class the process-global dispatch
+    * switches had). `spark.newSession()` shares the SparkContext but
     * isolates SQL conf, so the parent session is never touched;
     * StateSizingSpec proves a batch query planned mid-stream keeps
     * session parallelism. The partition count is fixed at the first
@@ -924,119 +924,75 @@ object StreamingOps {
     * discontinuity falls back to the parquet state, so the carry can
     * never change what a fold computes. Bounded, miss-only eviction
     * (the round-18 memo-boundary lesson). */
-  private val ccFoldCarry = scala.collection.concurrent.TrieMap
+  private[streaming] val ccFoldCarry = scala.collection.concurrent.TrieMap
     .empty[String, (Long, scala.collection.mutable.LongMap[Long])]
 
   /** Test hook: drop a sink's carry (simulates a restart). */
   private[graft] def dropCcCarry(sink: String): Unit =
     ccFoldCarry.remove(sink): Unit
 
-  /** The driver twin of [[mergeCc]]'s per-batch fold (round 20 — the
-    * same plan-compile-bound shape [[mergeLouvainDispatch]] replaced:
-    * state parquet read-back + two contraction joins + the inner CC's
-    * own checkpoint/count/collect + two recompose joins + the write,
-    * ~8 plan compiles per micro-batch for arithmetic the driver does
-    * in microseconds). Bit-identical by construction: min-member CC
-    * labels are PATH-INDEPENDENT, and the twin composes them through
-    * the carried labels with exactly the fold's coalesce/anti-join
-    * semantics — the union-find below IS the engine
-    * [[graft.graph.ConnectedComponentsDF.run]] dispatches to under
-    * these bounds. Gate: Long keys, batch and prior state within the
-    * collect bound; past either the distributed fold below is
-    * untouched (the 100 TB shape). IncrementalCcSpec pins per-batch
-    * state equality and the carry-free fallback. */
-  private[graft] def mergeCcDispatch(sink: String, batch: DataFrame,
-      id: Long): Boolean = {
-    import graft.graph.{GraphOps, LocalLouvain}
-    val lt = org.apache.spark.sql.types.LongType
-    val dispatchable = !GraphOps.forceDistributed && !foldDistributedOnly &&
-      batch.schema("src").dataType == lt &&
-      batch.schema("dst").dataType == lt
-    if (!dispatchable) return false
-    val n = batch.agg(count(lit(1))).collect().head.getLong(0)
-    if (n > LocalLouvain.CollectMax) return false
-    val spark = batch.sparkSession
-    import spark.implicits._
-    val prevDir = new java.io.File(s"$sink/v${id - 1}")
-    // State source: the carry when it is exactly the previous batch's
-    // fold, else the parquet state (counted before collecting — past
-    // the bound the distributed fold owns it).
-    val state = ccFoldCarry.get(sink) match {
-      case Some((last, lab)) if last == id - 1 => Some(lab)
-      case _ if !prevDir.exists() =>
-        Some(scala.collection.mutable.LongMap.empty[Long])
-      case _ =>
-        val labDf = spark.read.parquet(prevDir.getPath)
-        if (labDf.count() > LocalLouvain.CollectMax) None
-        else {
-          val lab = scala.collection.mutable.LongMap.empty[Long]
-          labDf.select(col("vertex"), col("component")).collect()
-            .foreach(r => lab(r.getLong(0)) = r.getLong(1))
-          Some(lab)
-        }
-    }
-    state match {
-      case None => false
-      case Some(lab) =>
-        val rows = batch.select(col("src"), col("dst")).collect()
-          .map(r => (r.getLong(0), r.getLong(1)))
-        // Contract batch edges through the current labels (new
-        // vertices stay themselves — same coalesce as the fold), then
-        // min-root union-find over the contracted pairs: exactly what
-        // the fold's inner ConnectedComponentsDF.run dispatches to.
-        val parent = scala.collection.mutable.LongMap.empty[Long]
-        def find(x: Long): Long = {
-          var r = x
-          while (parent.getOrElse(r, r) != r) r = parent.getOrElse(r, r)
-          var c = x
-          while (parent.getOrElse(c, c) != c) {
-            val nx = parent(c); parent(c) = r; c = nx
-          }
-          r
-        }
-        val contracted = rows.map { case (s, d) =>
-          (lab.getOrElse(s, s), lab.getOrElse(d, d))
-        }
-        contracted.foreach { case (u, v) =>
-          val (ru, rv) = (find(u), find(v))
-          if (ru != rv) {
-            if (ru < rv) parent(rv) = ru else parent(ru) = rv
-          }
-        }
-        // cc2 labels representatives and genuinely new vertices; the
-        // recomposition mirrors the fold's left-join coalesce (labeled
-        // vertices re-map through their representative's new label)
-        // plus its anti-join (cc2 vertices not yet labeled arrive).
-        val cc2 = scala.collection.mutable.LongMap.empty[Long]
-        contracted.foreach { case (u, v) =>
-          if (!cc2.contains(u)) cc2(u) = find(u)
-          if (!cc2.contains(v)) cc2(v) = find(v)
-        }
-        val newLab = scala.collection.mutable.LongMap.empty[Long]
-        lab.foreach { case (v, c) => newLab(v) = cc2.getOrElse(c, c) }
-        cc2.foreach { case (x, cx) => if (!lab.contains(x)) newLab(x) = cx }
-        newLab.toSeq.toDF("vertex", "component").coalesce(1)
-          .write.mode("overwrite").parquet(s"$sink/v$id")
-        if (ccFoldCarry.size > 8 && !ccFoldCarry.contains(sink))
-          ccFoldCarry.clear()
-        ccFoldCarry.update(sink, (id, newLab))
-        true
-    }
-  }
-
   private[graft] def mergeCc(sink: String)(df: DataFrame, id: Long): Unit = {
+    import graft.graph.{ConnectedComponentsDF, Dispatch, LocalLouvain}
     val spark = df.sparkSession
-    val batch = df.select(col("src"), col("dst"))
+    import spark.implicits._
+    val prev = new java.io.File(s"$sink/v${id - 1}")
+    // State source for the driver twin: the carry when it is exactly
+    // the previous batch's fold, else the parquet state.
+    val carry = ccFoldCarry.get(sink).collect { case (last, lab) if last == id - 1 => lab }
+    lazy val labDf = spark.read.parquet(prev.getPath).select(col("vertex"), col("component"))
+    val carried = carry.map(_.size.toLong)
+      .getOrElse(if (prev.exists()) labDf.count() else 0L)
     // Measured driver dispatch (round 20, the round-14 twin family):
     // within the collect bound the whole per-batch fold runs in the
     // driver, carrying the labels across micro-batches so batches 1+
-    // skip the parquet read-back entirely. The distributed fold below
-    // stays verbatim as the at-scale shape.
-    if (mergeCcDispatch(sink, batch, id)) return
-    // The distributed fold owns the state now — a driver carry from
-    // an earlier batch would go stale the moment this fold writes.
-    ccFoldCarry.remove(sink): Unit
-    val prev = new java.io.File(s"$sink/v${id - 1}")
+    // skip the parquet read-back (state read-back + two contraction
+    // joins + the inner CC + two recompose joins + the write were ~8
+    // plan compiles per micro-batch). Bit-identical by construction:
+    // min-member CC labels are PATH-INDEPENDENT, and the twin
+    // composes them through the carried labels with exactly the
+    // fold's coalesce/anti-join semantics. The gate bounds the
+    // carried labels plus the batch; the twin declines when the new
+    // labels (carry plus the batch's endpoints) would outgrow the
+    // bound, so the carry never does. IncrementalCcSpec pins
+    // per-batch state equality and the carry-free fallback.
+    Dispatch.gated("mergeCcDispatch", df.select(col("src"), col("dst")),
+        LocalLouvain.CollectMax, carried = carried) { rows =>
+      val lab = carry.getOrElse {
+        val m = scala.collection.mutable.LongMap.empty[Long]
+        if (prev.exists()) labDf.collect().foreach(r => m(r.getLong(0)) = r.getLong(1))
+        m
+      }
+      // Contract batch edges through the current labels (new vertices
+      // stay themselves — same coalesce as the fold); the union-find
+      // over the contracted pairs is what the fold's inner
+      // ConnectedComponentsDF.run dispatches to.
+      val cc2 = scala.collection.mutable.LongMap.from(ConnectedComponentsDF.unionFind(
+        rows.map(r => (lab.getOrElse(r.getLong(0), r.getLong(0)),
+          lab.getOrElse(r.getLong(1), r.getLong(1))))))
+      // Recomposition mirrors the fold's left-join coalesce (labeled
+      // vertices re-map through their representative's new label)
+      // plus its anti-join (cc2 vertices not yet labeled arrive).
+      val newLab = scala.collection.mutable.LongMap.empty[Long]
+      lab.foreach { case (v, c) => newLab(v) = cc2.getOrElse(c, c) }
+      cc2.foreach { case (x, cx) => if (!lab.contains(x)) newLab(x) = cx }
+      if (newLab.size > LocalLouvain.CollectMax) None
+      else {
+        newLab.toSeq.toDF("vertex", "component").coalesce(1)
+          .write.mode("overwrite").parquet(s"$sink/v$id")
+        if (ccFoldCarry.size > 8 && !ccFoldCarry.contains(sink)) ccFoldCarry.clear()
+        ccFoldCarry.update(sink, (id, newLab))
+        Some(())
+      }
+    } { batch =>
+      // The distributed fold owns the state now — a driver carry from
+      // an earlier batch would go stale the moment this fold writes.
+      ccFoldCarry.remove(sink)
+      mergeCcDistributed(spark, sink, batch, id, prev)
+    }
+  }
+
+  private def mergeCcDistributed(spark: SparkSession, sink: String, batch: DataFrame,
+      id: Long, prev: java.io.File): Unit = {
     val state =
       if (!prev.exists()) graft.graph.ConnectedComponentsDF.run(spark, batch)
       else {
@@ -1162,140 +1118,99 @@ object StreamingOps {
     .empty[String, (Long, scala.collection.mutable.LongMap[Long],
       scala.collection.mutable.HashMap[(Long, Long), Double])]
 
-  /** The driver twin of [[mergeLouvain]]'s per-batch fold (round 20 —
-    * VERDICT r19 item 1; the round-14 measured-dispatch family).
-    * Measured at sf0.1: each distributed fold pays ~8 jobs of plan
-    * analysis + tiny shuffles (state read-back, two contraction
-    * joins, the louvainOnSuper count+collect, two relabel joins) for
-    * arithmetic the driver does in milliseconds — the
-    * plan-compile-bound family. Within the gate the fold is
-    * BIT-IDENTICAL to the distributed path: contraction and
-    * super-edge sums are exact double adds of integral weights
-    * (order-free), and [[graft.graph.LocalLouvain.cluster]] — the
-    * same engine louvainOnSuper dispatches to under exactly these
-    * bounds — is row-order-insensitive (ascending sweeps, min-id tie
-    * breaks). Gate: Long keys, non-null integral weights, and batch +
-    * prior state within the collect bound (past it louvainOnSuper
-    * would run GraphX, whose labels may legitimately differ — so the
-    * twin declines). Returns true when it ran and wrote v<id>;
-    * IncrementalLouvainSpec pins fold-state equality both paths. */
   /** Test hook: drop a sink's carry (simulates a restart). */
   private[graft] def dropLouvainCarry(sink: String): Unit =
     louvainFoldCarry.remove(sink): Unit
 
-  /** Test-only hatch forcing the OUTER fold distributed while the
-    * inner louvainOnSuper keeps its own measured dispatch — the
-    * surface the driver twin actually replaces (bit-identical labels).
-    * GraphOps.forceDistributed forces BOTH layers — the fully
-    * distributed at-scale chain, whose GraphX labels are path-specific
-    * and pinned at partition level by the existing spec. */
-  @volatile private[graft] var foldDistributedOnly = false
-  private[graft] def withFoldDistributed[T](f: => T): T = {
-    foldDistributedOnly = true
-    try f finally foldDistributedOnly = false
-  }
-
-  private[graft] def mergeLouvainDispatch(sink: String, batch: DataFrame,
-      id: Long): Boolean = {
-    import graft.graph.{GraphOps, LocalLouvain}
-    val lt = org.apache.spark.sql.types.LongType
-    val dispatchable = !GraphOps.forceDistributed && !foldDistributedOnly &&
-      batch.schema("src").dataType == lt &&
-      batch.schema("dst").dataType == lt
-    if (!dispatchable) return false
-    val st = batch.agg(count(lit(1)).as("n"),
-      max(abs(col("weight") - round(col("weight")))).as("frac"),
-      count(col("weight")).as("nw")).collect().head
-    val n = st.getLong(0)
-    if (n > LocalLouvain.CollectMax || st.getLong(2) != n ||
-        (!st.isNullAt(1) && st.getDouble(1) != 0.0)) return false
-    val spark = batch.sparkSession
-    import spark.implicits._
-    val prevDir = new java.io.File(s"$sink/v${id - 1}")
-    // State source: the carry when it is exactly the previous batch's
-    // fold, else the parquet state (counted before collecting — past
-    // the bound the distributed fold owns it).
-    val state = louvainFoldCarry.get(sink) match {
-      case Some((last, lab, sup)) if last == id - 1 =>
-        // Clone before mutating: a fold that dies midway must not
-        // leave a half-contracted map behind a still-valid carry id.
-        Some((lab.clone(), sup.clone()))
-      case _ if !prevDir.exists() =>
-        Some((scala.collection.mutable.LongMap.empty[Long],
-          scala.collection.mutable.HashMap.empty[(Long, Long), Double]))
-      case _ =>
-        val labDf = spark.read.parquet(s"${prevDir.getPath}/labels")
-        val supDf = spark.read.parquet(s"${prevDir.getPath}/super")
-        if (labDf.count() > LocalLouvain.CollectMax ||
-            supDf.count() > LocalLouvain.CollectMax) None
-        else {
-          val lab = scala.collection.mutable.LongMap.empty[Long]
-          labDf.select(col("vertex"), col("community")).collect()
-            .foreach(r => lab(r.getLong(0)) = r.getLong(1))
-          val sup = scala.collection.mutable.HashMap.empty[(Long, Long), Double]
-          supDf.select(col("a"), col("b"), col("w")).collect()
-            .foreach(r => sup((r.getLong(0), r.getLong(1))) = r.getDouble(2))
-          Some((lab, sup))
-        }
-    }
-    state match {
-      case None => false
-      case Some((lab, sup)) =>
-        // The merged super graph must stay inside the bound that
-        // makes louvainOnSuper's driver dispatch (and so this twin)
-        // the path the distributed fold would take.
-        if (sup.size + n > LocalLouvain.CollectMax) return false
-        val rows = batch.select(col("src"), col("dst"), col("weight"))
-          .collect()
-        // Contract batch edges through the current labels; unlabeled
-        // (new) vertices stay themselves — same coalesce as the fold.
-        rows.foreach { r =>
-          val a0 = lab.getOrElse(r.getLong(0), r.getLong(0))
-          val b0 = lab.getOrElse(r.getLong(1), r.getLong(1))
-          val k = if (a0 <= b0) (a0, b0) else (b0, a0)
-          sup(k) = sup.getOrElse(k, 0.0) + r.getDouble(2)
-        }
-        val assign = LocalLouvain.cluster(
-          sup.iterator.map { case ((a, b), w) => (a, b, math.round(w)) }.toSeq)
-        val prevComms = lab.values.toSet
-        val newLab = scala.collection.mutable.LongMap.empty[Long]
-        lab.foreach { case (v, c) =>
-          assign.get(c).foreach(c2 => newLab(v) = c2)
-        }
-        assign.foreach { case (sv, c) => if (!prevComms(sv)) newLab(sv) = c }
-        val sup2 = scala.collection.mutable.HashMap.empty[(Long, Long), Double]
-        sup.foreach { case ((a, b), w) =>
-          val ca = assign(a); val cb = assign(b)
-          val k = if (ca <= cb) (ca, cb) else (cb, ca)
-          sup2(k) = sup2.getOrElse(k, 0.0) + w
-        }
-        newLab.toSeq.toDF("vertex", "community").coalesce(1)
-          .write.mode("overwrite").parquet(s"$sink/v$id/labels")
-        sup2.toSeq.map { case ((a, b), w) => (a, b, w) }
-          .toDF("a", "b", "w").coalesce(1)
-          .write.mode("overwrite").parquet(s"$sink/v$id/super")
-        if (louvainFoldCarry.size > 8 && !louvainFoldCarry.contains(sink))
-          louvainFoldCarry.clear()
-        louvainFoldCarry.update(sink, (id, newLab, sup2))
-        true
-    }
-  }
-
   private[graft] def mergeLouvain(sink: String)(df: DataFrame, id: Long): Unit = {
+    import graft.graph.{Dispatch, LocalLouvain}
     val spark = df.sparkSession
     import spark.implicits._
-    val batch = df.select(col("src"), col("dst"), col("weight").cast("double"))
-    // Measured driver dispatch (round 20 — VERDICT r19 item 1, the
-    // round-14 twin family): within the collect bound the whole
-    // per-batch fold runs in the driver, carrying (labels, super)
-    // across micro-batches so batches 1+ skip the parquet read-back
-    // entirely. The distributed fold below stays verbatim as the
-    // at-scale shape.
-    if (mergeLouvainDispatch(sink, batch, id)) return
-    // The distributed fold owns the state now — a driver carry from
-    // an earlier batch would go stale the moment this fold writes.
-    louvainFoldCarry.remove(sink): Unit
     val prev = new java.io.File(s"$sink/v${id - 1}")
+    // State source for the driver twin: the carry when it is exactly
+    // the previous batch's fold, else the parquet state.
+    val carry = louvainFoldCarry.get(sink)
+      .collect { case (last, lab, sup) if last == id - 1 => (lab, sup) }
+    lazy val labDf = spark.read.parquet(s"${prev.getPath}/labels")
+    lazy val supDf = spark.read.parquet(s"${prev.getPath}/super")
+    val (labN, supN) = carry.map(c => (c._1.size.toLong, c._2.size.toLong))
+      .getOrElse(if (prev.exists()) (labDf.count(), supDf.count()) else (0L, 0L))
+    // Measured driver dispatch (round 20 — VERDICT r19 item 1, the
+    // round-14 twin family): each distributed fold pays ~8 jobs of
+    // plan analysis + tiny shuffles (state read-back, two contraction
+    // joins, the louvainOnSuper gate, two relabel joins) for
+    // arithmetic the driver does in milliseconds. Within the gate the
+    // fold is BIT-IDENTICAL to the distributed path: contraction and
+    // super-edge sums are exact double adds of integral weights
+    // (order-free), and LocalLouvain.cluster — the engine
+    // louvainOnSuper dispatches to under exactly these bounds — is
+    // row-order-insensitive (ascending sweeps, min-id tie breaks).
+    // Gate: Long keys, non-null integral weights, and the carried
+    // super graph plus the batch within the collect bound (past it
+    // louvainOnSuper would run GraphX, whose labels may legitimately
+    // differ). The carry is (labels, super edges) across
+    // micro-batches, so batches 1+ skip the parquet read-back.
+    // IncrementalLouvainSpec pins fold-state equality both paths.
+    Dispatch.gated("mergeLouvainDispatch",
+        df.select(col("src"), col("dst"), col("weight").cast("double").as("weight")),
+        LocalLouvain.CollectMax, carried = supN,
+        admit = Seq(lit(labN <= LocalLouvain.CollectMax),
+          Dispatch.noNulls(col("weight")), Dispatch.integral(col("weight")))) { rows =>
+      // Clone a carry before mutating: a fold that dies midway must
+      // not leave a half-contracted map behind a still-valid carry id.
+      val (lab, sup) = carry.map { case (l, s) => (l.clone(), s.clone()) }.getOrElse {
+        val l = scala.collection.mutable.LongMap.empty[Long]
+        val s = scala.collection.mutable.HashMap.empty[(Long, Long), Double]
+        if (prev.exists()) {
+          labDf.select(col("vertex"), col("community")).collect()
+            .foreach(r => l(r.getLong(0)) = r.getLong(1))
+          supDf.select(col("a"), col("b"), col("w")).collect()
+            .foreach(r => s((r.getLong(0), r.getLong(1))) = r.getDouble(2))
+        }
+        (l, s)
+      }
+      // Contract batch edges through the current labels; unlabeled
+      // (new) vertices stay themselves — same coalesce as the fold.
+      rows.foreach { r =>
+        val a0 = lab.getOrElse(r.getLong(0), r.getLong(0))
+        val b0 = lab.getOrElse(r.getLong(1), r.getLong(1))
+        val k = if (a0 <= b0) (a0, b0) else (b0, a0)
+        sup(k) = sup.getOrElse(k, 0.0) + r.getDouble(2)
+      }
+      val assign = LocalLouvain.cluster(
+        sup.iterator.map { case ((a, b), w) => (a, b, math.round(w)) }.toSeq)
+      val prevComms = lab.values.toSet
+      val newLab = scala.collection.mutable.LongMap.empty[Long]
+      lab.foreach { case (v, c) =>
+        assign.get(c).foreach(c2 => newLab(v) = c2)
+      }
+      assign.foreach { case (sv, c) => if (!prevComms(sv)) newLab(sv) = c }
+      val sup2 = scala.collection.mutable.HashMap.empty[(Long, Long), Double]
+      sup.foreach { case ((a, b), w) =>
+        val ca = assign(a); val cb = assign(b)
+        val k = if (ca <= cb) (ca, cb) else (cb, ca)
+        sup2(k) = sup2.getOrElse(k, 0.0) + w
+      }
+      newLab.toSeq.toDF("vertex", "community").coalesce(1)
+        .write.mode("overwrite").parquet(s"$sink/v$id/labels")
+      sup2.toSeq.map { case ((a, b), w) => (a, b, w) }
+        .toDF("a", "b", "w").coalesce(1)
+        .write.mode("overwrite").parquet(s"$sink/v$id/super")
+      if (louvainFoldCarry.size > 8 && !louvainFoldCarry.contains(sink))
+        louvainFoldCarry.clear()
+      louvainFoldCarry.update(sink, (id, newLab, sup2))
+      Some(())
+    } { batch =>
+      // The distributed fold owns the state now — a driver carry from
+      // an earlier batch would go stale the moment this fold writes.
+      louvainFoldCarry.remove(sink)
+      mergeLouvainDistributed(spark, sink, batch, id, prev)
+    }
+  }
+
+  private def mergeLouvainDistributed(spark: SparkSession, sink: String,
+      batch: DataFrame, id: Long, prev: java.io.File): Unit = {
+    import spark.implicits._
     val (lab, supPrev) =
       if (!prev.exists())
         (Seq.empty[(Long, Long)].toDF("vertex", "community"),

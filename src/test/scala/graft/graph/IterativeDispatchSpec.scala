@@ -8,8 +8,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * DataFrame loop it stands in for — not approximately, not up to
   * ordering: the same rows. Pinned on the real sf0.001 co-occurrence
   * graph (complete-ish, weighted, the shape the queries run), using
-  * the test-only forceDistributed escape hatch to reach the at-scale
-  * path on a small input. */
+  * the session-scoped `spark.graft.dispatch.distributed` override
+  * (ForcedDispatch) to reach the at-scale path on a small input. */
 class IterativeDispatchSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTestSession.spark
 
@@ -20,7 +20,7 @@ class IterativeDispatchSpec extends AnyFunSuite {
 
   private def bothPaths(f: => DataFrame): (Seq[Seq[Any]], Seq[Seq[Any]]) = {
     val drv = rowsOf(f)
-    val dist = GraphOps.withForcedDistributed(rowsOf(f))
+    val dist = ForcedDispatch.distributed(spark)(rowsOf(f))
     (drv, dist)
   }
 
@@ -72,7 +72,7 @@ class IterativeDispatchSpec extends AnyFunSuite {
     def sp(e: DataFrame) = rowsOf(GraphOps.shortestPaths(spark, e)
       .orderBy(col("vertex"), col("landmark")))
     assert(sp(e4) == sp(edges) && sp(e4).nonEmpty)        // driver BFS
-    val (d4, d3) = GraphOps.withForcedDistributed((sp(e4), sp(edges)))
+    val (d4, d3) = ForcedDispatch.distributed(spark)((sp(e4), sp(edges)))
     assert(d4 == d3 && d4.nonEmpty)                       // Pregel path
     // pageRank's GraphX float sums are not run-to-run bit-stable, so
     // pin arity-robustness (same vertices), not value equality.
@@ -108,7 +108,7 @@ class IterativeDispatchSpec extends AnyFunSuite {
     val t = GraphBuilder.supplierTemporalEdges(spark, "/root/testdata/sf0.001")
     val o = org.apache.spark.sql.functions.col _
     val drv = rowsOf(GraphOps.temporalReach(spark, t).orderBy(o("vertex")))
-    val dist = GraphOps.withForcedDistributed(
+    val dist = ForcedDispatch.distributed(spark)(
       rowsOf(GraphOps.temporalReach(spark, t).orderBy(o("vertex"))))
     assert(drv == dist)
     assert(drv.nonEmpty)
@@ -123,7 +123,7 @@ class IterativeDispatchSpec extends AnyFunSuite {
       .orderBy(o("walk_id"), o("step"))
     val drv = rowsOf(w)
     GraphOps.clearWalkMemos(spark)
-    val dist = GraphOps.withForcedDistributed(rowsOf(w))
+    val dist = ForcedDispatch.distributed(spark)(rowsOf(w))
     GraphOps.clearWalkMemos(spark)
     assert(drv == dist)
     assert(drv.nonEmpty)
@@ -185,7 +185,7 @@ class IterativeDispatchSpec extends AnyFunSuite {
       .run(spark, edges.select(o("src"), o("dst")))
       .orderBy(o("vertex"))
     val drv = rowsOf(cc)
-    val dist = GraphOps.withForcedDistributed(rowsOf(cc))
+    val dist = ForcedDispatch.distributed(spark)(rowsOf(cc))
     assert(drv == dist)
     assert(drv.nonEmpty)
   }
@@ -202,37 +202,23 @@ class IterativeDispatchSpec extends AnyFunSuite {
     assert(r.length == 3)
   }
 
-  test("dispatch-site checklist: every forceDistributed gate has twin-equality coverage") {
+  test("dispatch-site checklist: every Dispatch.gated site has twin-equality coverage") {
     // The oracle gates no longer exercise the DataFrame loops below
     // the collect bound, so the at-scale correctness burden sits on
-    // explicit both-path equality tests. This checklist parses the
-    // dispatch gates out of GraphOps.scala and fails when a NEW gate
-    // lands without being recorded here next to the spec that pins
-    // its equality — record it ONLY after writing that test.
-    val files = Seq(
-      "src/main/scala/graft/graph/GraphOps.scala",
-      "src/main/scala/graft/graph/ConnectedComponentsDF.scala",
-      "src/main/scala/graft/graph/StronglyConnectedDF.scala",
-      "src/main/scala/graft/streaming/StreamingOps.scala",
-      "src/main/scala/graft/operators/Similarity.scala")
-    var cur = "<none>"
-    val sites = scala.collection.mutable.LinkedHashSet.empty[String]
-    // Member-indent defs ONLY (≤ 2 leading spaces before modifiers):
-    // a nested local def between the method header and its gate would
-    // otherwise capture the attribution and let the checklist pass
-    // (or fail) under the wrong name (round-15 ADVICE).
-    val defRe =
-      """^ {0,2}(?:(?:private|protected)(?:\[\w+\])?\s+)?(?:final\s+)?def (\w+)""".r
-    files.foreach { f =>
-      val src = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(f)),
-        java.nio.charset.StandardCharsets.UTF_8)
-      src.split("\n", -1).foreach { ln =>
-        defRe.findFirstMatchIn(ln).foreach(m => cur = m.group(1))
-        if (ln.contains("!forceDistributed") ||
-            ln.contains("!GraphOps.forceDistributed")) sites += cur
+    // explicit both-path equality tests. This checklist collects the
+    // `Dispatch.gated("<site>"` literals from src/main and fails when
+    // a NEW site lands without being recorded here next to the spec
+    // that pins its equality — record it ONLY after writing that test.
+    val siteRe = """Dispatch\.gated\("(\w+)"""".r
+    val sites = scala.collection.mutable.ArrayBuffer.empty[String]
+    val walk = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
+    try walk.iterator().forEachRemaining { f =>
+      if (f.toString.endsWith(".scala")) {
+        val src = new String(java.nio.file.Files.readAllBytes(f),
+          java.nio.charset.StandardCharsets.UTF_8)
+        siteRe.findAllMatchIn(src).foreach(m => sites += m.group(1))
       }
-    }
+    } finally walk.close()
     val covered = Map(
       "spectralCut" -> "IterativeDispatchSpec",
       "temporalReach" -> "IterativeDispatchSpec",
@@ -250,7 +236,8 @@ class IterativeDispatchSpec extends AnyFunSuite {
         "IterativeDispatchSpec (driver Kruskal == Borůvka)",
       "refineCommunities" -> "LeidenSpec (refineDriver == refineDistributed)",
       "louvainOnSuper" -> "IncrementalLouvainSpec (driver vs GraphX partitions)",
-      "run" -> "IterativeDispatchSpec (ConnectedComponentsDF union-find)",
+      "connectedComponentsDF" ->
+        "IterativeDispatchSpec (ConnectedComponentsDF union-find)",
       "connectedComponents" ->
         "IterativeDispatchSpec (GraphX entry: union-find == Pregel CC)",
       "hits" -> "IterativeDispatchSpec (driver hits == DataFrame loop)",
@@ -280,6 +267,10 @@ class IterativeDispatchSpec extends AnyFunSuite {
         "LocalSimSpec (driver beam rounds == DF expand/rescore loop)",
       "hnswDescend" ->
         "LocalSimSpec (driver layer descent == DF level loop + beam)")
+    // A site name is the coverage key: two gates sharing one would let
+    // the second inherit the first's entry.
+    val dups = sites.diff(sites.distinct)
+    assert(dups.isEmpty, s"dispatch site names used twice: $dups")
     val missing = sites.filterNot(covered.contains)
     assert(missing.isEmpty,
       s"dispatch sites without a recorded twin-equality test: $missing")
@@ -295,7 +286,7 @@ class IterativeDispatchSpec extends AnyFunSuite {
     GraphOps.clearMstMemos(spark)
     val drv = rowsOf(mst)
     GraphOps.clearMstMemos(spark)
-    val dist = GraphOps.withForcedDistributed(rowsOf(mst))
+    val dist = ForcedDispatch.distributed(spark)(rowsOf(mst))
     GraphOps.clearMstMemos(spark)
     assert(drv == dist)
     assert(drv.nonEmpty)
@@ -309,7 +300,7 @@ class IterativeDispatchSpec extends AnyFunSuite {
       .map(r => r.getLong(0) -> r.getLong(1))
       .groupBy(_._2).values.map(_.map(_._1).toSet).toSet
     val drv = partOf(GraphOps.louvain(spark, edges))
-    val dist = GraphOps.withForcedDistributed(
+    val dist = ForcedDispatch.distributed(spark)(
       partOf(GraphOps.louvain(spark, edges.limit(edges.count().toInt))))
     // The sf0.001 co-occurrence graph is complete (K10 suppliers) —
     // both engines must agree on the one-community optimum; richer
@@ -331,7 +322,7 @@ class IterativeDispatchSpec extends AnyFunSuite {
     import spark.implicits._
     val e = Seq.empty[(Long, Long, Double)].toDF("src", "dst", "weight")
     assert(GraphOps.hits(spark, e).collect().isEmpty)
-    assert(GraphOps.withForcedDistributed(
+    assert(ForcedDispatch.distributed(spark)(
       GraphOps.hits(spark, e).collect()).isEmpty)
   }
 

@@ -17,7 +17,7 @@ class SccDfSpec extends AnyFunSuite {
     def labels(): Set[(Long, Long)] = StronglyConnectedDF.run(spark, df)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val drv = labels()
-    val dist = GraphOps.withForcedDistributed(labels())
+    val dist = ForcedDispatch.distributed(spark)(labels())
     assert(drv == dist, "driver Tarjan != distributed coloring")
     drv.groupBy(_._2).map { case (c, vs) => c -> vs.map(_._1).toSet }
   }

@@ -3,13 +3,14 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.graph.{GraphOps, SparkTestSession}
+import graft.graph.{ForcedDispatch, SparkTestSession}
 
 /** Round-20 driver twins of the bounded similarity paths (LocalSim):
   * every gate's twin must emit BIT-IDENTICAL rows to the DataFrame
   * path it stands in for — same scores, same tiebreaks, same pair
-  * sets — pinned on the real embeddings corpora via the
-  * forceDistributed hatch (the IterativeDispatchSpec convention). */
+  * sets — pinned on the real embeddings corpora via the forced
+  * dispatch override (ForcedDispatch, the IterativeDispatchSpec
+  * convention). */
 class LocalSimSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTestSession.spark
 
@@ -21,7 +22,7 @@ class LocalSimSpec extends AnyFunSuite {
 
   private def bothPaths(f: => DataFrame): (Seq[Seq[Any]], Seq[Seq[Any]]) = {
     val drv = rowsOf(f)
-    val dist = GraphOps.withForcedDistributed(rowsOf(f))
+    val dist = ForcedDispatch.distributed(spark)(rowsOf(f))
     (drv, dist)
   }
 
@@ -65,7 +66,7 @@ class LocalSimSpec extends AnyFunSuite {
     // Build one fixed base on the DF path, then descend both ways
     // from the SAME base (the twin also collects it).
     val e = emb(sf001)
-    val base = GraphOps.withForcedDistributed(
+    val base = ForcedDispatch.distributed(spark)(
       Similarity.knnGraphOf(e, 10, 1L).localCheckpoint(true))
     val (drv, dist) = bothPaths(Similarity.nnDescentFrom(e, base, 10))
     assert(drv == dist)

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import graft.graph.SparkTestSession
+import graft.graph.{ForcedDispatch, SparkTestSession}
 
 /** mergeCcDispatch (round 20): the per-batch driver twin of the
   * streaming CC fold must leave BIT-IDENTICAL (vertex, component)
@@ -45,7 +45,7 @@ class IncrementalCcSpec extends AnyFunSuite {
     val sx = sink()
     // Fold-only hatch: the DF fold with the inner CC's own measured
     // dispatch is the exact surface the twin replaces.
-    StreamingOps.withFoldDistributed { fold(sx) }
+    ForcedDispatch.distributed(spark, "mergeLouvainDispatch,mergeCcDispatch") { fold(sx) }
     batches.indices.foreach { i =>
       assert(labelsOf(sd, i.toLong) == labelsOf(sx, i.toLong),
         s"labels diverge at batch $i")
@@ -54,6 +54,25 @@ class IncrementalCcSpec extends AnyFunSuite {
     assert(labelsOf(sd, 2L).values.toSet == Set(0L))
     assert(labelsOf(sd, 2L).keySet ==
       Set(0L, 1L, 2L, 10L, 11L, 20L, 21L))
+  }
+
+  test("a carry at the collect bound hands the batch to the distributed fold") {
+    // ADVICE r20 (medium): the carry-hit path must bound the carried
+    // labels, or a long stream of small batches grows driver state
+    // without limit. Seed the carry at the bound; a one-edge batch
+    // must then fold distributed and drop the carry.
+    import spark.implicits._
+    import graft.graph.{Dispatch, LocalLouvain}
+    val s = sink()
+    val full = scala.collection.mutable.LongMap.empty[Long]
+    (0L until LocalLouvain.CollectMax).foreach(v => full(v) = v)
+    StreamingOps.ccFoldCarry.update(s, (0L, full))
+    val (twin0, dist0) = Dispatch.taken.getOrElse("mergeCcDispatch", (0L, 0L))
+    StreamingOps.mergeCc(s)(Seq((-5L, -6L)).toDF("src", "dst"), 1L)
+    val (twin1, dist1) = Dispatch.taken("mergeCcDispatch")
+    assert(twin1 == twin0 && dist1 == dist0 + 1, "the fold did not run distributed")
+    assert(!StreamingOps.ccFoldCarry.contains(s), "the carry survived the distributed fold")
+    assert(labelsOf(s, 1L) == Map(-6L -> -6L, -5L -> -6L))
   }
 
   test("driver fold without the carry (parquet fallback) folds identically") {

@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.graph.SparkTestSession
+import graft.graph.{ForcedDispatch, SparkTestSession}
 
 /** s_stream_louvain is rows-only (an iterative multi-level fold has
   * no SQL form): these pin the three contract properties on planted
@@ -70,12 +70,12 @@ class IncrementalLouvainSpec extends AnyFunSuite {
     }
     val sx = sink()
     // Fold-only hatch: the DF fold with louvainOnSuper's own measured
-    // dispatch is the exact surface the twin replaces (full
-    // forceDistributed would also push the inner Louvain onto GraphX,
+    // dispatch is the exact surface the twin replaces (forcing every
+    // site would also push the inner Louvain onto GraphX,
     // whose labels are path-specific — partition-level equivalence for
     // that layer is pinned by "driver-side super Louvain matches the
     // GraphX path's partition" below).
-    StreamingOps.withFoldDistributed {
+    ForcedDispatch.distributed(spark, "mergeLouvainDispatch,mergeCcDispatch") {
       batches.zipWithIndex.foreach { case (b, i) =>
         StreamingOps.mergeLouvain(sx)(b.toDF("src", "dst", "weight"), i.toLong)
       }
@@ -233,6 +233,26 @@ class IncrementalLouvainSpec extends AnyFunSuite {
       .toDF("a", "b", "w")
     val gap2 = StreamingOps.louvainDriftGapE6(spark, edges, lab2, sup2)
     assert(gap2 == 0L, s"converged state estimated nonzero drift: $gap2")
+  }
+
+  test("fractional super weights go to GraphX instead of rounding to zero") {
+    // A streaming batch with fractional weights declines the driver
+    // fold, so the distributed fold hands louvainOnSuper a fractional
+    // super graph. Rounding its weights in (0, 0.5) to 0 would leave
+    // every vertex a singleton; the integrality admission term sends
+    // it to GraphX instead.
+    import spark.implicits._
+    val all8 = Seq(0L, 1L, 2L, 3L, 10L, 11L, 12L, 13L)
+    val cl = (clique(Seq(0L, 1L, 2L, 3L)) ++ clique(Seq(10L, 11L, 12L, 13L)))
+      .map(e => (e._1, e._2)).toSet
+    val sup = (for { a <- all8; b <- all8 if a < b } yield
+      (a, b, if (cl((a, b))) 0.4 else 0.01)).toDF("a", "b", "w")
+    def partOf(df: org.apache.spark.sql.DataFrame): Set[Set[Long]] =
+      df.collect().map(r => r.getLong(0) -> r.getLong(1))
+        .groupBy(_._2).values.map(_.map(_._1).toSet).toSet
+    val got = partOf(graft.graph.GraphOps.louvainOnSuper(spark, sup))
+    assert(got.exists(_.size > 1), s"every vertex a singleton: $got")
+    assert(got == partOf(graft.graph.GraphOps.louvainOnSuperGraphX(spark, sup)))
   }
 
   test("driver-side super Louvain matches the GraphX path's partition") {

@@ -15,8 +15,8 @@ import graft.graph.SparkTestSession
   *  2. CONCURRENCY SAFETY — `withStateParts` builds the stream on a
   *     CLONED session, so a concurrent batch query in the parent
   *     session can never plan at state parallelism (the
-  *     session-global-mutation class the round-14 forceDistributed
-  *     @volatile fix addressed for GraphOps).
+  *     session-global-mutation class the session-scoped dispatch
+  *     override replaced for GraphOps).
   */
 class StateSizingSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTestSession.spark
