@@ -217,10 +217,14 @@ object GraphBuilder {
 
   /** Edge DataFrame (src, dst, weight) → GraphX undirected weighted
     * graph. EdgePartition2D bounds vertex replication to 2√P at
-    * cluster scale. Partitioning inherits the session's parallelism —
-    * measured at sf0.1, shrinking partitions to "match" the small
-    * graph serialized the per-round message compute and cost 3-5×,
-    * so the message work, not task scheduling, dominates rounds.
+    * cluster scale. The partition count is the input's, not the
+    * session's parallelism: AQE coalesces small shuffle outputs, so
+    * `canonicalEdges` of a 75k-edge graph arrives as ONE partition on
+    * a 4-core host and the graph keeps it. One run that forced
+    * `partitionBy(EdgePartition2D, defaultParallelism)` on that input
+    * was slower in Louvain.run (23.8 → 35.0 s wall, executor CPU
+    * 19.1 → 39.4 s, scheduler delay 3.7 → 12.7 s; single runs on a
+    * drifting host), so the input's partitioning stays.
     */
   def toGraphX(edges: DataFrame): Graph[Double, Double] = {
     val edgeRdd = edges

@@ -157,10 +157,13 @@ object LocalLouvain {
   /** [[cluster]] plus the per-level (level, Q, nCommunities,
     * nVertices) trail [[graft.graph.Louvain.run]] reports — the same
     * loop contract (record the level AFTER its local moves, apply
-    * the moves to the composed assignment unconditionally, contract
-    * and continue only while Q improved by > minDeltaQ and the graph
-    * still shrinks), so the driver dispatch is a drop-in for the
-    * GraphX engine's (assignment, levels) pair. Q per level is the
+    * the moves to the composed assignment, contract and continue only
+    * while Q improved by > minDeltaQ and the graph still shrinks), so
+    * the driver dispatch is a drop-in for the GraphX engine's
+    * (assignment, levels) pair. The GraphX engine also drops a level
+    * whose Q fell below its predecessor's (its simultaneous moves can
+    * lower Q); here every move is a sequential exact positive gain, so
+    * a level never lowers Q and every level is applied. Q per level is the
     * exact-BigInt ledger (4m·Σw_in − Σ sumd²) / 4m² — one double
     * division, the modularityOf convention, so the "rescored final
     * level equals modularityOf" spec holds bit-closer than the
@@ -197,7 +200,8 @@ object LocalLouvain {
       val nComm = assign.values.toSet.size.toLong
       levels += ((level, q, nComm, nVert))
       // Apply the level's moves to the composed assignment whether or
-      // not the loop continues — the GraphX engine does the same.
+      // not the loop continues — the GraphX engine does the same for
+      // every level that does not lower Q, which exact moves never do.
       val canon: Map[Long, Long] = assign.groupBy(_._2).iterator
         .flatMap { case (_, ms) =>
           val mn = ms.keys.min; ms.keys.map(_ -> mn)
