@@ -107,10 +107,7 @@ object Bench {
           // stray caches): leftovers tax later queries with heap
           // pressure. Cross-query memos are the only state meant to
           // outlive a query (and die between sweeps, below).
-          val keep = GraphOps.retainedRddIds
-          spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
-            if (!keep(id)) rdd.unpersist(blocking = false)
-          }
+          Memo.sweep(spark)
           name -> dt
         }
       series += calibSec()

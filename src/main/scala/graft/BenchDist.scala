@@ -148,14 +148,11 @@ object BenchDist {
     def sweep(): Seq[(String, Double)] =
       families.filter { case (n, _) => only.forall(_.contains(n)) }
         .map { case (name, fn) =>
-          // Cold per family: cross-query memos (louvainCache,
-          // mstCache, coEdges) would otherwise let leiden ride
-          // louvain's run and report a warm-memo figure.
+          // Cold per family: cross-query memos (Louvain, MST,
+          // co-edges) would otherwise let leiden ride louvain's run
+          // and report a warm-memo figure.
           GraphOps.clearAllMemos(spark)
-          val keep = GraphOps.retainedRddIds
-          spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
-            if (!keep(id)) rdd.unpersist(blocking = false)
-          }
+          Memo.sweep(spark)
           val t0 = System.nanoTime()
           val n =
             try fn().count()

@@ -140,10 +140,7 @@ object BenchDistAnn {
         .map { case (name, cold, fn) =>
           if (cold) {
             graft.graph.GraphOps.clearAllMemos(spark)
-            val keep = graft.graph.GraphOps.retainedRddIds
-            spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
-              if (!keep(id)) rdd.unpersist(blocking = false)
-            }
+            Memo.sweep(spark)
           }
           val t0 = System.nanoTime()
           val n =

@@ -10,15 +10,14 @@ object SparkEntry {
 
   /** Write-once side output for the source round-trip queries
     * (edge-list TSV, JSON, partitioned parquet). The cache key folds
-    * in the source table's length+mtime, so regenerated testdata
+    * in the source table's [[Memo.fileTag]], so regenerated testdata
     * invalidates stale copies instead of silently serving old data.
     * The _SUCCESS guard is driver-local java.io — correct for this
     * local-FS bench; a cluster deployment would key a shared-FS path
     * the same way. */
   private def cachedSideOutput(dir: String, table: String, kind: String)
       (write: String => Unit): String = {
-    val src = new java.io.File(s"$dir/$table.parquet")
-    val key = java.lang.Long.toHexString(src.length() ^ src.lastModified())
+    val key = Memo.fileTag(s"$dir/$table.parquet")
     val out = s"/tmp/graft_${kind}_${dir.replaceAll("[^A-Za-z0-9]", "_")}_$key"
     if (!new java.io.File(out + "/_SUCCESS").exists()) write(out)
     out

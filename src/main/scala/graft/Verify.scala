@@ -79,10 +79,7 @@ object Verify {
       }
       // Same per-query scratch-state sweep as Bench: 50+ queries of
       // leftover localCheckpoint blocks add up in an 8 GiB heap.
-      val keep = graft.graph.GraphOps.retainedRddIds
-      spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
-        if (!keep(id)) rdd.unpersist(blocking = false)
-      }
+      Memo.sweep(spark)
     }
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${jq(k)}: ${jq(v)}" }.mkString("{", ",", "}")

@@ -65,7 +65,7 @@ object Dispatch {
   }
 
   /** The backing RDD when `df` already IS a checkpoint readout. */
-  private def checkpointRdd(df: DataFrame): Option[RDD[_]] =
+  private[graft] def checkpointRdd(df: DataFrame): Option[RDD[_]] =
     df.queryExecution.analyzed match {
       case r: LogicalRDD if r.rdd.getStorageLevel != StorageLevel.NONE =>
         Some(r.rdd)

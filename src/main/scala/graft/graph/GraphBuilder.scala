@@ -38,45 +38,10 @@ object GraphBuilder {
   // The canonical graph is the engine's materialized input artifact:
   // at 100 TB you build the co-occurrence edge list ONCE (it is the
   // graph), persist it, and run every analytic against that table —
-  // not re-derive it per query. The memo is that artifact in-session:
-  // keyed by (session, lineitem file identity) like the Louvain memo,
-  // bounded, and its checkpoint blocks are declared in
-  // retainedRddIds so the Bench/Verify per-query sweep keeps them.
-  //
-  // INVALIDATION CONTRACT: eviction (when more than 4 dataset
-  // identities have been touched) unpersists localCheckpoint-backed
-  // blocks, whose truncated lineage CANNOT be recomputed — any
-  // DataFrame returned by an earlier call that a caller still holds
-  // fails permanently on its next action. Derive what you need from
-  // a returned DataFrame before touching a 5th dataset, or re-call
-  // the builder (cheap cache hit while the entry is live). The same
-  // contract governs Dedup.signatureBase/ngramHashes. The sequential
-  // Bench/Verify sweep touches ≤ 2 identities and never trips this.
-  private val coEdgesCache =
-    scala.collection.concurrent.TrieMap.empty[(String, String), (DataFrame, Set[Int])]
+  // not re-derive it per query. The memo is that artifact in-session,
+  // keyed by the lineitem file's identity (contract: graft.Memo).
+  private val coEdgesMemo = graft.Memo[String, DataFrame](4)
 
-  /** RDD ids backing memoized edge lists (Bench/Verify must not
-    * unpersist them between queries). */
-  def retainedRddIds: Set[Int] = coEdgesCache.values.flatMap(_._2).toSet
-
-  /** Release memoized edge builds owned by `spark`; foreign-context
-    * entries are dropped without touching RDDs (ids are per-context
-    * counters). Used by the Bench suite-repeat. */
-  private[graft] def clearMemos(spark: SparkSession): Unit = {
-    val ctx = System.identityHashCode(spark).toString
-    val sc = spark.sparkContext
-    coEdgesCache.foreach { case (k, (_, ids)) =>
-      if (k._1 == ctx)
-        ids.foreach(id => sc.getPersistentRDDs.get(id).foreach(_.unpersist(false)))
-    }
-    coEdgesCache.clear()
-  }
-
-  /** Supplier co-occurrence graph: an undirected edge (s1, s2) with
-    * weight = number of orders in which both suppliers appear.
-    * This is the engine's standard derived test graph (SURVEY §3).
-    * Memoized per (session, data identity) as a localCheckpoint —
-    * every graph analytic shares one build, the persist-once shape. */
   /** TEMPORAL supplier co-occurrence edges: one (src, dst, t) row per
     * (supplier pair, order day) — the time-stamped sibling of
     * [[supplierCoEdges]] for time-respecting traversals. t is the
@@ -99,33 +64,24 @@ object GraphBuilder {
       .distinct()
   }
 
-  def supplierCoEdges(spark: SparkSession, dir: String): DataFrame = {
-    val src = new java.io.File(s"$dir/lineitem.parquet")
-    val key = (System.identityHashCode(spark).toString,
-      s"$dir:${src.lastModified}:${src.length}")
-    val sc = spark.sparkContext
-    if (coEdgesCache.size > 4 && !coEdgesCache.contains(key)) {
-      coEdgesCache.values.foreach { case (_, ids) =>
-        ids.foreach(id => sc.getPersistentRDDs.get(id).foreach(_.unpersist(false)))
-      }
-      coEdgesCache.clear()
-    }
-    coEdgesCache.getOrElseUpdate(key, {
-      val before = sc.getPersistentRDDs.keySet.toSet
+  /** Supplier co-occurrence graph: an undirected edge (s1, s2) with
+    * weight = number of orders in which both suppliers appear.
+    * This is the engine's standard derived test graph (SURVEY §3).
+    * Memoized per (session, data identity) as a localCheckpoint —
+    * every graph analytic shares one build, the persist-once shape. */
+  def supplierCoEdges(spark: SparkSession, dir: String): DataFrame =
+    coEdgesMemo(spark, graft.Memo.fileKey(Seq(s"$dir/lineitem.parquet"))) {
       val os = Tables.lineitem(spark, dir)
         .select(col("l_orderkey"), col("l_suppkey"))
         .distinct()
       val a = os.select(col("l_orderkey"), col("l_suppkey").as("src"))
       val b = os.select(col("l_orderkey"), col("l_suppkey").as("dst"))
-      val built = a.join(b, Seq("l_orderkey"))
+      a.join(b, Seq("l_orderkey"))
         .filter(col("src") < col("dst"))
         .groupBy(col("src"), col("dst"))
         .agg(count(lit(1)).cast("double").as("weight"))
         .localCheckpoint(true)
-      val ids = sc.getPersistentRDDs.keySet.toSet -- before
-      (built, ids)
-    })._1
-  }
+    }
 
   /** DIRECTED bipartite purchase edges customer → supplier: one
     * distinct (o_custkey, l_suppkey) edge per customer-supplier pair

@@ -1439,43 +1439,18 @@ object GraphOps {
     * of graph size, no adjacency arrays, no per-vertex collect.
     * Steps unroll a fixed count (`steps` joins), the
     * fixed-round-oracle contract. */
-  // Memoized walk corpus per (session, edges identity, steps): the
-  // corpus generator (g_walks) and every consumer of the corpus
-  // (g_walk_pmi's skip-gram statistics) share ONE checkpointed build —
-  // the persist-once contract of the canonical-edges/signature memos.
-  // Eviction invalidation contract: keys carry the edges plan's
-  // semanticHash + per-file (path, mtime, length), so an in-place
-  // regeneration is a memo MISS; the bounded map evicts wholesale
-  // past 4 entries; checkpoint blocks are declared in retainedRddIds.
-  private val walkCache = scala.collection.concurrent.TrieMap
-    .empty[(String, Int, String, Int), (DataFrame, Set[Int])]
-
-  private[graft] def walkCacheRddIds: Set[Int] =
-    walkCache.values.flatMap(_._2).toSet
-
-  private[graft] def clearWalkMemos(spark: SparkSession): Unit = {
-    val ctx = System.identityHashCode(spark).toString
-    val sc = spark.sparkContext
-    walkCache.foreach { case (k, (_, ids)) =>
-      if (k._1 == ctx)
-        ids.foreach(id => sc.getPersistentRDDs.get(id).foreach(_.unpersist(false)))
-    }
-    walkCache.clear()
-  }
+  // Memoized walk corpus per (session, edges plan, input files,
+  // steps): the corpus generator (g_walks) and every consumer of the
+  // corpus (g_walk_pmi's skip-gram statistics) share ONE checkpointed
+  // build (contract: graft.Memo).
+  private val walkMemo = graft.Memo[(Int, String, Int), DataFrame](4)
 
   def randomWalks(spark: SparkSession, edges: DataFrame,
-      steps: Int = 4): DataFrame = {
-    val key = (System.identityHashCode(spark).toString,
-      edges.queryExecution.analyzed.semanticHash(), dataKey(edges), steps)
-    val sc = spark.sparkContext
-    if (walkCache.size > 4 && !walkCache.contains(key)) clearWalkMemos(spark)
-    walkCache.getOrElseUpdate(key, {
-      val before = sc.getPersistentRDDs.keySet.toSet
-      val built = randomWalksUncached(spark, edges, steps).localCheckpoint(true)
-      val ids = sc.getPersistentRDDs.keySet.toSet -- before
-      (built, ids)
-    })._1
-  }
+      steps: Int = 4): DataFrame =
+    walkMemo(spark, (edges.queryExecution.analyzed.semanticHash(),
+        graft.Memo.dataKey(edges), steps)) {
+      randomWalksUncached(spark, edges, steps).localCheckpoint(true)
+    }
 
   private def randomWalksUncached(spark: SparkSession, edges: DataFrame,
       steps: Int): DataFrame = {
@@ -1533,43 +1508,18 @@ object GraphOps {
     * narrow (w, src, dst) structs) + one CC pass over the PICKED
     * edges only (≤ one per component — a forest, vastly smaller than
     * the graph). State is one (vertex, label) row per vertex. */
-  // Memoized Borůvka forest per (session, edges identity, rounds):
-  // the rows-only edge list (g_mst) and the scalar readout
-  // (g_mst_weight) share ONE checkpointed build — the walkCache
-  // contract verbatim (semanticHash + per-file (path, mtime, length)
-  // keys so in-place regeneration is a memo MISS, bounded map,
-  // checkpoint blocks declared in retainedRddIds; memo-miss spec in
-  // GraphOpsSpec).
-  private val mstCache = scala.collection.concurrent.TrieMap
-    .empty[(String, Int, String, Int), (DataFrame, Set[Int])]
-
-  private[graft] def mstCacheRddIds: Set[Int] =
-    mstCache.values.flatMap(_._2).toSet
-
-  private[graft] def clearMstMemos(spark: SparkSession): Unit = {
-    val ctx = System.identityHashCode(spark).toString
-    val sc = spark.sparkContext
-    mstCache.foreach { case (k, (_, ids)) =>
-      if (k._1 == ctx)
-        ids.foreach(id => sc.getPersistentRDDs.get(id).foreach(_.unpersist(false)))
-    }
-    mstCache.clear()
-  }
+  // Memoized Borůvka forest per (session, edges plan, input files,
+  // rounds): the rows-only edge list (g_mst) and the scalar readout
+  // (g_mst_weight) share ONE checkpointed build (contract:
+  // graft.Memo; memo-miss spec in MstSpec).
+  private val mstMemo = graft.Memo[(Int, String, Int), DataFrame](4)
 
   def minimumSpanningForest(spark: SparkSession, edges: DataFrame,
-      maxRounds: Int = 32): DataFrame = {
-    val key = (System.identityHashCode(spark).toString,
-      edges.queryExecution.analyzed.semanticHash(), dataKey(edges), maxRounds)
-    val sc = spark.sparkContext
-    if (mstCache.size > 4 && !mstCache.contains(key)) clearMstMemos(spark)
-    mstCache.getOrElseUpdate(key, {
-      val before = sc.getPersistentRDDs.keySet.toSet
-      val built = minimumSpanningForestUncached(spark, edges, maxRounds)
-        .localCheckpoint(true)
-      val ids = sc.getPersistentRDDs.keySet.toSet -- before
-      (built, ids)
-    })._1
-  }
+      maxRounds: Int = 32): DataFrame =
+    mstMemo(spark, (edges.queryExecution.analyzed.semanticHash(),
+        graft.Memo.dataKey(edges), maxRounds)) {
+      minimumSpanningForestUncached(spark, edges, maxRounds).localCheckpoint(true)
+    }
 
   private def minimumSpanningForestUncached(spark: SparkSession,
       edges: DataFrame, maxRounds: Int): DataFrame = {
@@ -2493,81 +2443,22 @@ object GraphOps {
   // One Louvain run serves both the assignment and the level-stats
   // queries when they execute in the same session against the same
   // input (the assignment RDD is small: one (id, community) pair per
-  // vertex). Keyed by session + logical plan semantic hash + the
-  // identity (path, mtime, length) of every input file, so
-  // regenerating a file at the same path within one session misses
-  // the memo instead of serving stale assignments.
-  private val louvainCache =
-    scala.collection.concurrent.TrieMap.empty[
-      (String, Int, String, Double),
-      (org.apache.spark.rdd.RDD[(org.apache.spark.graphx.VertexId, Long)], Seq[LouvainLevel])]
+  // vertex). Keyed by the logical plan's semantic hash + the identity
+  // of every input file, so regenerating a file at the same path
+  // within one session misses the memo instead of serving stale
+  // assignments (contract: graft.Memo).
+  private val louvainMemo = graft.Memo[(Int, String, Double),
+    (org.apache.spark.rdd.RDD[(org.apache.spark.graphx.VertexId, Long)], Seq[LouvainLevel])](4)
 
-  /** RDD ids the Bench/Verify per-query sweep must not unpersist:
-    * memoized Louvain assignments, the memoized canonical edge
-    * builds ([[GraphBuilder.retainedRddIds]]), the memoized dedup
-    * signature tables and the memoized kNN edge table are the only
-    * cross-query state. */
-  def retainedRddIds: Set[Int] =
-    louvainCache.values.map(_._1.id).toSet ++
-      walkCacheRddIds ++
-      mstCacheRddIds ++
-      GraphBuilder.retainedRddIds ++
-      graft.operators.Dedup.retainedRddIds ++
-      graft.operators.Similarity.retainedRddIds ++
-      graft.operators.TextAnalysis.retainedRddIds
-
-  /** Release EVERY cross-query memo owned by `spark` (Louvain
-    * assignments, canonical edges, dedup signatures/n-grams, kNN
-    * table, IVF quantizer) — the Bench suite-repeat calls this
-    * between sweeps so each sweep measures the same cold-memo build
-    * costs a fresh round would. Foreign-context entries are dropped
-    * without unpersist calls (per-context RDD id counters — see the
-    * eviction note in Similarity.knnGraph). */
-  def clearAllMemos(spark: SparkSession): Unit = {
-    val ctx = System.identityHashCode(spark).toString
-    louvainCache.foreach { case (k, (rdd, _)) =>
-      if (k._1 == ctx) rdd.unpersist(blocking = false)
-    }
-    louvainCache.clear()
-    clearWalkMemos(spark)
-    clearMstMemos(spark)
-    GraphBuilder.clearMemos(spark)
-    graft.operators.Dedup.clearMemos(spark)
-    graft.operators.Similarity.clearMemos(spark)
-    graft.operators.TextAnalysis.clearMemos(spark)
-  }
-
-  /** Identity of the data behind a DataFrame's file sources: sorted
-    * (path, mtime, length) per input file. Plans over non-file data
-    * (e.g. local relations) embed their rows in the semantic hash, so
-    * an empty string is safe there. Metadata-only — no data read. */
-  private def dataKey(edges: DataFrame): String = {
-    val files = edges.inputFiles
-    if (files.isEmpty) ""
-    else {
-      val conf = edges.sparkSession.sparkContext.hadoopConfiguration
-      files.sorted.map { f =>
-        val p = new org.apache.hadoop.fs.Path(f)
-        val st = p.getFileSystem(conf).getFileStatus(p)
-        s"$f:${st.getModificationTime}:${st.getLen}"
-      }.mkString("|")
-    }
-  }
+  /** Release EVERY cross-query memo owned by `spark` — the Bench
+    * suite-repeat calls this between sweeps so each sweep measures the
+    * same cold-memo build costs a fresh round would. */
+  def clearAllMemos(spark: SparkSession): Unit = graft.Memo.clear(spark)
 
   private def louvainFor(spark: SparkSession, edges: DataFrame,
-      resolution: Double) = {
-    val key = (System.identityHashCode(spark).toString,
-      edges.queryExecution.analyzed.semanticHash(),
-      dataKey(edges),
-      resolution)
-    // Bounded: evict (and release) everything when the cache grows
-    // past a handful of graphs — the memo exists so the assignment
-    // and level-stats queries share one run, not as a general cache.
-    if (louvainCache.size > 4 && !louvainCache.contains(key)) {
-      louvainCache.values.foreach(_._1.unpersist(blocking = false))
-      louvainCache.clear()
-    }
-    louvainCache.getOrElseUpdate(key, {
+      resolution: Double) =
+    louvainMemo(spark, (edges.queryExecution.analyzed.semanticHash(),
+        graft.Memo.dataKey(edges), resolution)) {
       // Measured dispatch (round 14, the triangleCount lesson): a
       // graph within LocalLouvain.CollectMax edges with exactly
       // integral weights at classic resolution clusters DRIVER-side —
@@ -2592,8 +2483,7 @@ object GraphOps {
         assignment.cache()
         (assignment, levels)
       }
-    })
-  }
+    }
 
   /** Louvain twin admission: the driver ledger is exact-integer, so
     * weights must be non-null and integral (fractional weights, as

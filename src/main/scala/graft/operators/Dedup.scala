@@ -221,102 +221,45 @@ object Dedup {
   // production shape as the memoized canonical edge build: at 100 TB
   // you compute signatures in one corpus pass, persist them, and fan
   // them out to every pair source and every downstream consumer
-  // (d_dup_clusters, p_clean_corpus, incremental runs). Keyed by
-  // (session, file identity); an entry built without MinHash upgrades
-  // in place when a MinHash consumer arrives. Eviction and the
-  // upgrade path unpersist non-recomputable localCheckpoint blocks —
-  // see the INVALIDATION CONTRACT note in GraphBuilder: previously
-  // returned DataFrames die when a 5th dataset identity is touched
-  // (or, here, when the MinHash upgrade replaces a minhash-less
-  // entry a caller still holds).
-  private val sigCache = scala.collection.concurrent.TrieMap
-    .empty[(String, String), (DataFrame, Boolean, Set[Int])]
+  // (d_dup_clusters, p_clean_corpus, incremental runs). Keyed by the
+  // documents file's identity; an entry built without MinHash is
+  // rebuilt in place when a MinHash consumer arrives, which releases
+  // the old table like an eviction does (contract: graft.Memo).
+  private val sigMemo = graft.Memo[String, (DataFrame, Boolean)](4)
 
   // Distinct (doc_id, md5(word n-gram)) rows — the shared input of
   // every corpus-wide n-gram consumer (cross-doc df, containment,
   // decontamination). Same persist-once rationale and keying as the
   // signature table; one corpus scan serves them all.
-  private val ngramCache = scala.collection.concurrent.TrieMap
-    .empty[(String, String, Int), (DataFrame, Set[Int])]
-
-  /** RDD ids backing memoized signature/n-gram tables (kept by the
-    * Bench/Verify sweep). */
-  def retainedRddIds: Set[Int] =
-    sigCache.values.flatMap(_._3).toSet ++ ngramCache.values.flatMap(_._2).toSet
-
-  /** Release the memoized signature/n-gram artifacts owned by `spark`
-    * and drop foreign-context entries without touching RDDs (ids are
-    * per-context counters). Used by the Bench suite-repeat. */
-  private[graft] def clearMemos(spark: SparkSession): Unit = {
-    val ctx = System.identityHashCode(spark).toString
-    val sc = spark.sparkContext
-    def release(ids: Set[Int]): Unit =
-      ids.foreach(id => sc.getPersistentRDDs.get(id).foreach(_.unpersist(false)))
-    sigCache.foreach { case (k, (_, _, ids)) => if (k._1 == ctx) release(ids) }
-    sigCache.clear()
-    ngramCache.foreach { case (k, (_, ids)) => if (k._1 == ctx) release(ids) }
-    ngramCache.clear()
-  }
+  private val ngramMemo = graft.Memo[(String, Int), DataFrame](4)
 
   /** Distinct (doc_id, h = md5(word n-gram)) over the corpus,
     * memoized per (session, data identity, n). */
   private[operators] def ngramHashes(spark: SparkSession, dir: String,
-      n: Int): DataFrame = {
-    val src = new java.io.File(s"$dir/documents.parquet")
-    val key = (System.identityHashCode(spark).toString,
-      s"$dir:${src.lastModified}:${src.length}", n)
-    val sc = spark.sparkContext
-    if (ngramCache.size > 4 && !ngramCache.contains(key)) {
-      ngramCache.values.foreach { case (_, ids) =>
-        ids.foreach(id => sc.getPersistentRDDs.get(id).foreach(_.unpersist(false)))
-      }
-      ngramCache.clear()
-    }
-    ngramCache.getOrElseUpdate(key, {
-      val before = sc.getPersistentRDDs.keySet.toSet
-      val built = Tables.documents(spark, dir)
+      n: Int): DataFrame =
+    ngramMemo(spark, (graft.Memo.fileKey(Seq(s"$dir/documents.parquet")), n)) {
+      Tables.documents(spark, dir)
         .select(col("doc_id"),
           explode(array_distinct(TF.wordShingles(col("text"), n))).as("ng"))
         .select(col("doc_id"), md5(col("ng")).as("h"))
         .localCheckpoint(true)
-      val ids = sc.getPersistentRDDs.keySet.toSet -- before
-      (built, ids)
-    })._1
-  }
+    }
 
-  private def signatureBase(spark: SparkSession, dir: String,
-      includeMinhash: Boolean): DataFrame = {
-    val src = new java.io.File(s"$dir/documents.parquet")
-    val key = (System.identityHashCode(spark).toString,
-      s"$dir:${src.lastModified}:${src.length}")
-    val sc = spark.sparkContext
-    def release(ids: Set[Int]): Unit =
-      ids.foreach(id => sc.getPersistentRDDs.get(id).foreach(_.unpersist(false)))
-    if (sigCache.size > 4 && !sigCache.contains(key)) {
-      sigCache.values.foreach(v => release(v._3))
-      sigCache.clear()
-    }
-    sigCache.get(key) match {
-      case Some((df, hasMinhash, _)) if hasMinhash || !includeMinhash => df
-      case stale =>
-        stale.foreach(v => release(v._3))
-        val sigCols = Seq(
-          col("doc_id"),
-          md5(col("text")).as("h"),
-          CatalystText.simhash64(TF.tokens(col("text"))).as("fp")) ++
-          (if (includeMinhash)
-            Seq(TF.minhashSignature(
-              array_distinct(TF.wordShingles(col("text"), 3)), MinhashK).as("sig"))
-          else Nil)
-        val before = sc.getPersistentRDDs.keySet.toSet
-        val built = Tables.documents(spark, dir)
-          .select(sigCols: _*)
-          .localCheckpoint(true)
-        val ids = sc.getPersistentRDDs.keySet.toSet -- before
-        sigCache.put(key, (built, includeMinhash, ids))
-        built
-    }
-  }
+  private[graft] def signatureBase(spark: SparkSession, dir: String,
+      includeMinhash: Boolean): DataFrame =
+    sigMemo(spark, graft.Memo.fileKey(Seq(s"$dir/documents.parquet")),
+        reuse = _._2 || !includeMinhash) {
+      val sigCols = Seq(
+        col("doc_id"),
+        md5(col("text")).as("h"),
+        CatalystText.simhash64(TF.tokens(col("text"))).as("fp")) ++
+        (if (includeMinhash)
+          Seq(TF.minhashSignature(
+            array_distinct(TF.wordShingles(col("text"), 3)), MinhashK).as("sig"))
+        else Nil)
+      (Tables.documents(spark, dir).select(sigCols: _*).localCheckpoint(true),
+        includeMinhash)
+    }._1
 
   def dupPairs(spark: SparkSession, dir: String,
       includeMinhash: Boolean = true): DataFrame = {

@@ -191,8 +191,7 @@ object Relational {
     * with the 5% verdict convention (sketch QUALITY under the oracle,
     * not its bits). lgConfigK=12 → ~1.6% standard error. */
   def qSketchUnion(spark: SparkSession, dir: String): DataFrame = {
-    val src = new java.io.File(s"$dir/events.parquet")
-    val key = java.lang.Long.toHexString(src.length() ^ src.lastModified())
+    val key = graft.Memo.fileTag(s"$dir/events.parquet")
     val stem = dir.replaceAll("[^A-Za-z0-9]", "_")
     val skDir = s"/tmp/graft_hll_${stem}_$key"
     if (!new java.io.File(s"$skDir/_SUCCESS").exists()) {

@@ -298,14 +298,10 @@ object Similarity {
   // query entry, repeated searches and the candidate-pair generator
   // all share ONE k-means fit, exactly as a production deployment
   // persists centroids once and searches many times.
-  private val centroidCache = scala.collection.concurrent.TrieMap
-    .empty[(String, String), Array[Array[Double]]]
+  private val centroidMemo = graft.Memo[String, Array[Array[Double]]](8)
 
-  private def embeddingsKey(spark: SparkSession, dir: String): (String, String) = {
-    val src = new java.io.File(s"$dir/embeddings.parquet")
-    (System.identityHashCode(spark).toString,
-      s"$dir:${src.lastModified}:${src.length}")
-  }
+  private def embeddingsKey(dir: String): String =
+    graft.Memo.fileKey(Seq(s"$dir/embeddings.parquet"))
 
   /** Fit the IVF coarse quantizer and return its centroids — the
     * artifact a production deployment persists once and reuses across
@@ -313,12 +309,8 @@ object Similarity {
     * bounded seeded sample of unit-normalized vectors, exactly as the
     * model-path spec oracle does. Memoized per (session, embeddings
     * identity). */
-  def fitIvfCentroids(spark: SparkSession, dir: String): Array[Array[Double]] = {
-    if (centroidCache.size > 8 && !centroidCache.contains(embeddingsKey(spark, dir)))
-      centroidCache.clear()
-    centroidCache.getOrElseUpdate(embeddingsKey(spark, dir),
-      fitIvfCentroidsUncached(spark, dir))
-  }
+  def fitIvfCentroids(spark: SparkSession, dir: String): Array[Array[Double]] =
+    centroidMemo(spark, embeddingsKey(dir))(fitIvfCentroidsUncached(spark, dir))
 
   private def fitIvfCentroidsUncached(spark: SparkSession, dir: String): Array[Array[Double]] = {
     import org.apache.spark.ml.clustering.KMeans
@@ -713,125 +705,37 @@ object Similarity {
   // facade composition) share the single most expensive similarity
   // artifact instead of re-scoring all pairs per query — the same
   // persist-once shape as the canonical edge and dedup-signature
-  // memos, with the same INVALIDATION CONTRACT (see GraphBuilder).
-  private val knnCache = scala.collection.concurrent.TrieMap
-    .empty[(String, String, Int), (DataFrame, Set[Int])]
+  // memos (contract: graft.Memo).
+  private val knnMemo = graft.Memo[(String, Int), DataFrame](4)
 
-  // The NN-descent-REFINED graph is itself a persist-once artifact
-  // (round 18 — VERDICT r17 item 5): e_hnsw's layer stack and
-  // e_nn_descent's at-scale path both consume exactly ONE descent
-  // round over the memoized base graph, so the ~5-8 s refinement is
-  // paid once per (session, embeddings identity, k) per sweep
-  // instead of once per query. Same INVALIDATION CONTRACT as
-  // knnCache: the key carries the source file's mtime+length, so an
-  // in-place regeneration of embeddings.parquet misses the memo and
-  // rebuilds; entries owned by a different context are dropped
-  // without unpersist (per-context RDD id counters).
-  private val refinedCache = scala.collection.concurrent.TrieMap
-    .empty[(String, String, Int), (DataFrame, Set[Int])]
-
-  /** RDD ids backing memoized kNN edge tables (the Bench/Verify
-    * per-query sweep must not unpersist them). */
-  def retainedRddIds: Set[Int] =
-    knnCache.values.flatMap(_._2).toSet ++
-      refinedCache.values.flatMap(_._2).toSet
-
-  /** Release every memoized artifact OWNED BY `spark` (its kNN
-    * checkpoint blocks + quantizer entries) and drop the rest without
-    * touching RDDs: recorded ids are per-context sequential counters,
-    * so unpersisting a stale entry's ids through a NEW context could
-    * hit an unrelated live RDD that reused the number. Used by the
-    * Bench suite-repeat to restore cold-memo conditions. */
-  private[graft] def clearMemos(spark: SparkSession): Unit = {
-    val ctx = System.identityHashCode(spark).toString
-    val sc = spark.sparkContext
-    knnCache.foreach { case (k, (_, ids)) =>
-      if (k._1 == ctx)
-        ids.foreach(id => sc.getPersistentRDDs.get(id).foreach(_.unpersist(false)))
-    }
-    knnCache.clear()
-    refinedCache.foreach { case (k, (_, ids)) =>
-      if (k._1 == ctx)
-        ids.foreach(id => sc.getPersistentRDDs.get(id).foreach(_.unpersist(false)))
-    }
-    refinedCache.clear()
-    centroidCache.clear()
-    pqCache.clear()
-  }
+  // The NN-descent-REFINED graph is itself a persist-once artifact:
+  // e_hnsw's layer stack and e_nn_descent's at-scale path both consume
+  // exactly ONE descent round over the memoized base graph, so the
+  // ~5-8 s refinement is paid once per (session, embeddings identity,
+  // k) per sweep instead of once per query.
+  private val refinedMemo = graft.Memo[(String, Int), DataFrame](4)
 
   /** Memoized [[knnGraphOf]] over the embeddings table at `dir`.
     * Unordered — callers that need a presentation order sort. */
-  def knnGraph(spark: SparkSession, dir: String, k: Int = TopK): DataFrame = {
-    val src = new java.io.File(s"$dir/embeddings.parquet")
-    val key = (System.identityHashCode(spark).toString,
-      s"$dir:${src.lastModified}:${src.length}", k)
-    val sc = spark.sparkContext
-    // Evict only on a MISS past the bound: clearing on a hit would
-    // alternate clear/rebuild at the boundary and break the
-    // one-instance-per-key contract the memo specs pin (`eq`).
-    if (knnCache.size > 4 && !knnCache.contains(key)) {
-      // Unpersist only entries owned by THIS context: RDD ids are
-      // per-context counters, so a stale entry's id under a different
-      // (possibly stopped) context may collide with an unrelated live
-      // RDD here. Foreign-context entries are just dropped.
-      knnCache.foreach { case (k, (_, ids)) =>
-        if (k._1 == key._1)
-          ids.foreach(id => sc.getPersistentRDDs.get(id).foreach(_.unpersist(false)))
-      }
-      knnCache.clear()
-    }
-    knnCache.getOrElseUpdate(key, {
-      val before = sc.getPersistentRDDs.keySet.toSet
-      val built = knnGraphOf(
+  def knnGraph(spark: SparkSession, dir: String, k: Int = TopK): DataFrame =
+    knnMemo(spark, (embeddingsKey(dir), k)) {
+      knnGraphOf(
         Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding")), k)
         .localCheckpoint(true)
-      val ids = sc.getPersistentRDDs.keySet.toSet -- before
-      (built, ids)
-    })._1
-  }
+    }
 
   /** Memoized one-round [[nnDescentFrom]] refinement of the memoized
     * [[knnGraph]] — the shared artifact behind e_hnsw and (at scale,
-    * where the dispatched base IS the LSH graph) e_nn_descent. Same
-    * key/eviction/retention contract as [[knnGraph]].
-    *
-    * OWNERSHIP (round 19 — ADVICE r18 item 1): the base [[knnGraph]]
-    * is built/fetched BEFORE the RDD-id snapshot window opens, so the
-    * refined entry's id set can never absorb the base graph's
-    * checkpoint blocks. With the ids in the window, a refinedCache
-    * eviction would unpersist blocks knnCache still serves — and an
-    * unpersisted localCheckpoint cannot be recomputed, so the next
-    * knnGraph hit dies with missing blocks (the exact cross-memo
-    * boundary-bug class the round-18 miss-only-eviction lesson
-    * documents). Spec: SimilaritySpec "refined eviction leaves the
-    * base memo collectable". */
-  def refinedKnnGraph(spark: SparkSession, dir: String, k: Int = TopK): DataFrame = {
-    val src = new java.io.File(s"$dir/embeddings.parquet")
-    val key = (System.identityHashCode(spark).toString,
-      s"$dir:${src.lastModified}:${src.length}", k)
-    val sc = spark.sparkContext
-    // Miss-only eviction, same reason as knnGraph's (the `eq` memo
-    // contract at the size boundary).
-    if (refinedCache.size > 4 && !refinedCache.contains(key)) {
-      refinedCache.foreach { case (kk, (_, ids)) =>
-        if (kk._1 == key._1)
-          ids.foreach(id => sc.getPersistentRDDs.get(id).foreach(_.unpersist(false)))
-      }
-      refinedCache.clear()
-    }
-    refinedCache.getOrElseUpdate(key, {
-      // Base first — its checkpoint ids land in knnCache's entry,
-      // outside the ownership window below.
-      val base = knnGraph(spark, dir, k)
-      val before = sc.getPersistentRDDs.keySet.toSet
+    * where the dispatched base IS the LSH graph) e_nn_descent. Its
+    * entry owns only the refined checkpoint, so evicting it never
+    * frees the base graph's blocks (spec: SkewAndIvfSpec "refined
+    * eviction leaves the base memo collectable"). */
+  def refinedKnnGraph(spark: SparkSession, dir: String, k: Int = TopK): DataFrame =
+    refinedMemo(spark, (embeddingsKey(dir), k)) {
       val emb = Tables.embeddings(spark, dir)
         .select(col("vec_id"), col("embedding"))
-      val built = nnDescentFrom(emb, base, k)
-        .localCheckpoint(true)
-      val ids = sc.getPersistentRDDs.keySet.toSet -- before
-      (built, ids)
-    })._1
-  }
+      nnDescentFrom(emb, knnGraph(spark, dir, k), k).localCheckpoint(true)
+    }
 
   /** The LSH-candidate kNN graph as a first-class query with SAMPLED
     * recall@k appended — the at-scale dispatch path made
@@ -1227,8 +1131,7 @@ object Similarity {
   // Codebooks are the PQ family's persist-once artifact
   // (8×16×8 doubles — driver-scalar sized, no RDD blocks): memoized
   // per (session, embeddings identity) like the IVF quantizer.
-  private val pqCache = scala.collection.concurrent.TrieMap
-    .empty[(String, String), Array[Array[Array[Double]]]]
+  private val pqMemo = graft.Memo[String, Array[Array[Array[Double]]]](8)
 
   /** Fit the PQ codebooks — one k-means per subspace over a bounded
     * seeded sample of IVF RESIDUALS x̂ − c_home(x̂) (Jégou et al.
@@ -1240,10 +1143,8 @@ object Similarity {
     * (localCheckpoint) however many subspaces train on it. Keyed by
     * embeddings identity, which also keys the memoized coarse
     * quantizer the residuals derive from. */
-  def fitPqCodebooks(spark: SparkSession, dir: String): Array[Array[Array[Double]]] = {
-    if (pqCache.size > 8 && !pqCache.contains(embeddingsKey(spark, dir)))
-      pqCache.clear()
-    pqCache.getOrElseUpdate(embeddingsKey(spark, dir), {
+  def fitPqCodebooks(spark: SparkSession, dir: String): Array[Array[Array[Double]]] =
+    pqMemo(spark, embeddingsKey(dir)) {
       import org.apache.spark.ml.clustering.KMeans
       import org.apache.spark.ml.functions.array_to_vector
       val resArr = graft.functions.CatalystText
@@ -1283,8 +1184,7 @@ object Similarity {
           }.toSeq), Duration.Inf).toArray
         } finally pool.shutdown()
       } finally train.unpersist(false)
-    })
-  }
+    }
 
   /** Encode each vector as (vec_id, cell, codes): home cell +
     * per-subspace nearest-centroid indices of its IVF RESIDUAL, via

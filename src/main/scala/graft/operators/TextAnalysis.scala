@@ -689,55 +689,17 @@ object TextAnalysis {
       .limit(topN)
   }
 
-  // Memoized BPE run per (session, docs identity, rounds): the merge
-  // table (t_bpe_merges) and the encoded vocabulary (t_bpe_vocab)
-  // share ONE 10-round training loop. Same invalidation contract as
-  // the walk/signature memos: semanticHash + per-file (path, mtime,
-  // length) keys make in-place regeneration a miss; bounded map;
-  // final-state checkpoint blocks declared in retainedRddIds.
-  private val bpeCache = scala.collection.concurrent.TrieMap.empty[
-    (String, Int, String, Int),
-    (Seq[(Long, String, String, String, Long)], DataFrame, Set[Int])]
-
-  def retainedRddIds: Set[Int] = bpeCache.values.flatMap(_._3).toSet
-
-  private[graft] def clearMemos(spark: SparkSession): Unit = {
-    val ctx = System.identityHashCode(spark).toString
-    val sc = spark.sparkContext
-    bpeCache.foreach { case (k, (_, _, ids)) =>
-      if (k._1 == ctx)
-        ids.foreach(id => sc.getPersistentRDDs.get(id).foreach(_.unpersist(false)))
-    }
-    bpeCache.clear()
-  }
-
-  private def docsKey(docs: DataFrame): String = {
-    val files = docs.inputFiles
-    if (files.isEmpty) ""
-    else {
-      val conf = docs.sparkSession.sparkContext.hadoopConfiguration
-      files.sorted.map { f =>
-        val p = new org.apache.hadoop.fs.Path(f)
-        val st = p.getFileSystem(conf).getFileStatus(p)
-        s"$f:${st.getModificationTime}:${st.getLen}"
-      }.mkString("|")
-    }
-  }
+  // Memoized BPE run per (session, docs plan, input files, rounds):
+  // the merge table (t_bpe_merges) and the encoded vocabulary
+  // (t_bpe_vocab) share ONE 10-round training loop (contract:
+  // graft.Memo).
+  private val bpeMemo = graft.Memo[(Int, String, Int),
+    (Seq[(Long, String, String, String, Long)], DataFrame)](4)
 
   private def bpeCore(spark: SparkSession, docs: DataFrame, rounds: Int)
-      : (Seq[(Long, String, String, String, Long)], DataFrame) = {
-    val key = (System.identityHashCode(spark).toString,
-      docs.queryExecution.analyzed.semanticHash(), docsKey(docs), rounds)
-    val sc = spark.sparkContext
-    if (bpeCache.size > 4 && !bpeCache.contains(key)) clearMemos(spark)
-    val (m, st, _) = bpeCache.getOrElseUpdate(key, {
-      val before = sc.getPersistentRDDs.keySet.toSet
-      val (merges, state) = bpeCoreUncached(spark, docs, rounds)
-      val ids = sc.getPersistentRDDs.keySet.toSet -- before
-      (merges, state, ids)
-    })
-    (m, st)
-  }
+      : (Seq[(Long, String, String, String, Long)], DataFrame) =
+    bpeMemo(spark, (docs.queryExecution.analyzed.semanticHash(),
+        graft.Memo.dataKey(docs), rounds))(bpeCoreUncached(spark, docs, rounds))
 
   private def bpeCoreUncached(spark: SparkSession, docs: DataFrame, rounds: Int)
       : (Seq[(Long, String, String, String, Long)], DataFrame) = {

@@ -330,8 +330,7 @@ object BucketedTable {
     * oracle: identical answers from a layout that rewrote only
     * touched buckets per merge. */
   def qBucketedMerge(spark: SparkSession, dir: String): DataFrame = {
-    val src = new java.io.File(s"$dir/orders.parquet")
-    val key = java.lang.Long.toHexString(src.length() ^ src.lastModified())
+    val key = graft.Memo.fileTag(s"$dir/orders.parquet")
     val stem = dir.replaceAll("[^A-Za-z0-9]", "_")
     val tdir = s"/tmp/graft_btab_${stem}_$key"
     if (versions(tdir).size != 3) {
@@ -363,8 +362,7 @@ object BucketedTable {
     * commit-cost and vacuum contracts are spec-pinned on planted
     * tables (BucketedTableSpec). */
   def qDvMerge(spark: SparkSession, dir: String): DataFrame = {
-    val src = new java.io.File(s"$dir/orders.parquet")
-    val key = java.lang.Long.toHexString(src.length() ^ src.lastModified())
+    val key = graft.Memo.fileTag(s"$dir/orders.parquet")
     val stem = dir.replaceAll("[^A-Za-z0-9]", "_")
     val tdir = s"/tmp/graft_dvtab_${stem}_$key"
     if (versions(tdir).size != 3) {

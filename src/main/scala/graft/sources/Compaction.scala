@@ -67,8 +67,7 @@ object Compaction {
     * files, compacted to ~4; the monthly readout off the compacted
     * copy must equal the plain-table oracle. */
   def qCompaction(spark: SparkSession, dir: String): DataFrame = {
-    val src = new java.io.File(s"$dir/orders.parquet")
-    val key = java.lang.Long.toHexString(src.length() ^ src.lastModified())
+    val key = graft.Memo.fileTag(s"$dir/orders.parquet")
     val stem = dir.replaceAll("[^A-Za-z0-9]", "_")
     val root = s"/tmp/graft_compact_${stem}_$key"
     if (!new java.io.File(s"$root/_built").exists()) {

@@ -139,8 +139,7 @@ object MaterializedView {
     * derived average computed from algebraic state — oracle-equal to
     * a direct full-table GROUP BY. */
   def qIncrementalMv(spark: SparkSession, dir: String): DataFrame = {
-    val src = new java.io.File(s"$dir/orders.parquet")
-    val key = java.lang.Long.toHexString(src.length() ^ src.lastModified())
+    val key = graft.Memo.fileTag(s"$dir/orders.parquet")
     val stem = dir.replaceAll("[^A-Za-z0-9]", "_")
     val root = s"/tmp/graft_mv_${stem}_$key"
     val landing = s"$root/landing"

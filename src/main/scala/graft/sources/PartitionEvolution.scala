@@ -23,8 +23,7 @@ object PartitionEvolution {
   /** Build the two-spec fixture: orders before 1998 partitioned by
     * o_year (spec v1), 1998+ by (o_year, o_month) (spec v2). */
   private[sources] def fixture(spark: SparkSession, dir: String): String = {
-    val src = new java.io.File(s"$dir/orders.parquet")
-    val key = java.lang.Long.toHexString(src.length() ^ src.lastModified())
+    val key = graft.Memo.fileTag(s"$dir/orders.parquet")
     val stem = dir.replaceAll("[^A-Za-z0-9]", "_")
     val root = s"/tmp/graft_pevo_${stem}_$key"
     if (!new java.io.File(s"$root/_built").exists()) {

@@ -94,8 +94,7 @@ object SkipIndex {
   // ---- fixtures over the orders table -------------------------------
 
   private def layoutRoot(dir: String, layout: String): String = {
-    val f = new java.io.File(s"$dir/orders.parquet")
-    val key = java.lang.Long.toHexString(f.length() ^ f.lastModified())
+    val key = graft.Memo.fileTag(s"$dir/orders.parquet")
     val stem = dir.replaceAll("[^A-Za-z0-9]", "_")
     s"/tmp/graft_skip_${stem}_$key/$layout"
   }

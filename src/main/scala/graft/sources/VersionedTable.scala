@@ -120,8 +120,7 @@ object VersionedTable {
     * file identity so regenerated testdata rebuilds it instead of
     * serving stale versions. */
   private def fixtureDir(spark: SparkSession, dir: String): String = {
-    val src = new java.io.File(s"$dir/orders.parquet")
-    val key = java.lang.Long.toHexString(src.length() ^ src.lastModified())
+    val key = graft.Memo.fileTag(s"$dir/orders.parquet")
     val stem = dir.replaceAll("[^A-Za-z0-9]", "_")
     val tdir = s"/tmp/graft_vtab_${stem}_$key"
     if (versions(tdir).size != 3) {

@@ -52,25 +52,18 @@ object StreamingOps {
   /** Measured state-keyspace estimate: approx_count_distinct of the
     * op's state-key expression over the batch copy of the streamed
     * table — one tiny single-column scan, memoized on the file's
-    * (mtime, length) identity (the GraphBuilder invalidation
-    * contract; values are plain Longs, not session-bound artifacts,
-    * so no session key is needed). An order-of-magnitude-honest
+    * identity (contract: graft.Memo). An order-of-magnitude-honest
     * proxy expression is fine — sizing only needs the magnitude. */
-  private val keyCountCache = scala.collection.concurrent.TrieMap
-    .empty[(String, String, String, Long, Long), Long]
+  private val keyCountMemo = graft.Memo[(String, String), Long](64)
 
   private[streaming] def approxKeys(spark: SparkSession, dir: String,
-      table: String, keyExpr: String): Long = {
-    val f = new java.io.File(s"$dir/$table.parquet")
-    val k = (dir, table, keyExpr, f.lastModified(), f.length())
-    if (keyCountCache.size > 64) keyCountCache.clear()
-    keyCountCache.getOrElseUpdate(k, {
+      table: String, keyExpr: String): Long =
+    keyCountMemo(spark, (graft.Memo.fileKey(Seq(s"$dir/$table.parquet")), keyExpr)) {
       val src = if (table == "events") graft.Tables.events(spark, dir)
         else spark.read.parquet(s"$dir/$table.parquet")
       src.selectExpr(s"approx_count_distinct($keyExpr) AS k")
         .first().getLong(0)
-    })
-  }
+    }
 
   /** Run a streaming op with stream-STATE partitioning sized to its
     * measured keyspace — on a CLONED session (round 16; the round-15
@@ -868,8 +861,7 @@ object StreamingOps {
     * (the oracle), BECAUSE the merge is associative — not because
     * the batching was lucky. */
   def streamCdcSnapshot(spark: SparkSession, dir: String): DataFrame = {
-    val src = new java.io.File(s"$dir/events.parquet")
-    val key = java.lang.Long.toHexString(src.length() ^ src.lastModified())
+    val key = graft.Memo.fileTag(s"$dir/events.parquet")
     val stem = dir.replaceAll("[^A-Za-z0-9]", "_")
     val srcDir = s"/tmp/graft_cdcsrc_${stem}_$key"
     if (!new java.io.File(s"$srcDir/_SUCCESS").exists()) {
@@ -1039,8 +1031,7 @@ object StreamingOps {
     * (`g_cc`'s oracle), BECAUSE the merge is associative — not
     * because the batching was lucky. */
   def streamCcIncremental(spark: SparkSession, dir: String): DataFrame = {
-    val src = new java.io.File(s"$dir/lineitem.parquet")
-    val key = java.lang.Long.toHexString(src.length() ^ src.lastModified())
+    val key = graft.Memo.fileTag(s"$dir/lineitem.parquet")
     val stem = dir.replaceAll("[^A-Za-z0-9]", "_")
     val srcDir = s"/tmp/graft_ccsrc_${stem}_$key"
     if (!new java.io.File(s"$srcDir/_SUCCESS").exists()) {
@@ -1546,8 +1537,7 @@ object StreamingOps {
     * Louvain's, both under the same exact-integer `modularityOf`
     * metric on the complete edge set. */
   def streamLouvainIncremental(spark: SparkSession, dir: String): DataFrame = {
-    val src = new java.io.File(s"$dir/lineitem.parquet")
-    val key = java.lang.Long.toHexString(src.length() ^ src.lastModified())
+    val key = graft.Memo.fileTag(s"$dir/lineitem.parquet")
     val stem = dir.replaceAll("[^A-Za-z0-9]", "_")
     val srcDir = s"/tmp/graft_lvsrc_${stem}_$key"
     if (!new java.io.File(s"$srcDir/_SUCCESS").exists()) {
@@ -1624,8 +1614,7 @@ object StreamingOps {
       .option("maxFilesPerTrigger", "1")
       .parquet(dir)
       .select(col("doc_id"), col("lang"), col("n_chars"))
-    val src = new java.io.File(s"$dir/documents.parquet")
-    val key = java.lang.Long.toHexString(src.length() ^ src.lastModified())
+    val key = graft.Memo.fileTag(s"$dir/documents.parquet")
     val sink = s"/tmp/graft_fb_${dir.replaceAll("[^A-Za-z0-9]", "_")}_$key"
     val q = docs.writeStream.foreachBatch(landBatch(sink) _).start()
     try q.processAllAvailable()
@@ -1701,8 +1690,7 @@ object StreamingOps {
     * Readout = the final MV, oracle-equal to the direct GROUP BY. */
   def streamIncrementalMv(spark: SparkSession, dir: String): DataFrame = {
     import graft.sources.MaterializedView
-    val src = new java.io.File(s"$dir/orders.parquet")
-    val key = java.lang.Long.toHexString(src.length() ^ src.lastModified())
+    val key = graft.Memo.fileTag(s"$dir/orders.parquet")
     val stem = dir.replaceAll("[^A-Za-z0-9]", "_")
     val root = s"/tmp/graft_smv_${stem}_$key"
     val landing = s"$root/landing"
@@ -1806,8 +1794,7 @@ object StreamingOps {
     withStateParts(spark, approxKeys(spark, dir, "events", "user_id")) { spark =>
     import spark.implicits._
     import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
-    val src = new java.io.File(s"$dir/events.parquet")
-    val key = java.lang.Long.toHexString(src.length() ^ src.lastModified())
+    val key = graft.Memo.fileTag(s"$dir/events.parquet")
     val stem = dir.replaceAll("[^A-Za-z0-9]", "_")
     val srcDir = s"/tmp/graft_cdcsrc_${stem}_$key"
     if (!new java.io.File(s"$srcDir/_SUCCESS").exists()) {

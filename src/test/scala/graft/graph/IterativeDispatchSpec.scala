@@ -122,9 +122,9 @@ class IterativeDispatchSpec extends AnyFunSuite {
     def w = GraphOps.randomWalks(spark, edges)
       .orderBy(o("walk_id"), o("step"))
     val drv = rowsOf(w)
-    GraphOps.clearWalkMemos(spark)
+    GraphOps.clearAllMemos(spark)
     val dist = ForcedDispatch.distributed(spark)(rowsOf(w))
-    GraphOps.clearWalkMemos(spark)
+    GraphOps.clearAllMemos(spark)
     assert(drv == dist)
     assert(drv.nonEmpty)
   }
@@ -283,11 +283,11 @@ class IterativeDispatchSpec extends AnyFunSuite {
     // build (same session/plan/file key) — clear it between paths so
     // both actually run.
     def mst = GraphOps.minimumSpanningForest(spark, edges)
-    GraphOps.clearMstMemos(spark)
+    GraphOps.clearAllMemos(spark)
     val drv = rowsOf(mst)
-    GraphOps.clearMstMemos(spark)
+    GraphOps.clearAllMemos(spark)
     val dist = ForcedDispatch.distributed(spark)(rowsOf(mst))
-    GraphOps.clearMstMemos(spark)
+    GraphOps.clearAllMemos(spark)
     assert(drv == dist)
     assert(drv.nonEmpty)
   }

@@ -171,7 +171,7 @@ class SkewAndIvfSpec extends AnyFunSuite {
         .coalesce(1).write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
       dir
     }
-    Similarity.clearMemos(spark)
+    graft.graph.GraphOps.clearAllMemos(spark)
     val dirs = (0 to 6).map(_ => mkDir())
     // Standalone base on dirs(0) puts knnCache one entry AHEAD of
     // refinedCache; during refined(dirs(5))'s build the knnCache
@@ -184,7 +184,7 @@ class SkewAndIvfSpec extends AnyFunSuite {
     val base = Similarity.knnGraph(spark, dirs(5), k = 1)
     assert(base.count() == 3L,
       "base kNN memo must stay collectable after a refined eviction")
-    Similarity.clearMemos(spark)
+    graft.graph.GraphOps.clearAllMemos(spark)
   }
 
   test("embedClusters recovers planted clusters; loner stays a singleton") {
@@ -404,12 +404,11 @@ class SkewAndIvfSpec extends AnyFunSuite {
 
   test("kNN edge table is memoized per (session, embeddings identity, k)") {
     // e_knn_graph and e_embed_clusters must share ONE checkpointed
-    // scoring pass; its blocks are declared to the sweep's keep-set.
+    // scoring pass, and the per-query scratch sweep keeps its blocks.
     val a = Similarity.knnGraph(spark, sf)
+    graft.Memo.sweep(spark)
     assert(a eq Similarity.knnGraph(spark, sf))
-    assert(Similarity.retainedRddIds.nonEmpty)
-    assert(Similarity.retainedRddIds.subsetOf(
-      graft.graph.GraphOps.retainedRddIds))
+    assert(a.count() > 0L)
   }
 
   test("IVF ANN achieves reasonable recall of brute-force top-10") {
