@@ -153,24 +153,24 @@ object Memo {
 
   private lazy val localConf = new Configuration()
 
+  /** (mtime, length) of `path` from its Hadoop `FileStatus`; a missing
+    * path reads as (0, 0). Metadata only. */
+  private[graft] def fileStatus(path: String, conf: Configuration = localConf): (Long, Long) = {
+    val p = new Path(path)
+    try {
+      val st = p.getFileSystem(conf).getFileStatus(p)
+      (st.getModificationTime, st.getLen)
+    } catch { case _: java.io.FileNotFoundException => (0L, 0L) }
+  }
+
   /** Identity of the data in `paths`: path, mtime and length of each,
     * sorted by path and joined without mixing, so two versions of a
-    * file that differ in length or mtime never share a key. A
-    * missing path reads as mtime 0, length 0. Metadata only. */
+    * file that differ in length or mtime never share a key. */
   def fileKey(paths: Seq[String], conf: Configuration = localConf): String =
     paths.sorted.map { f =>
-      val p = new Path(f)
-      val (mtime, len) =
-        try {
-          val st = p.getFileSystem(conf).getFileStatus(p)
-          (st.getModificationTime, st.getLen)
-        } catch { case _: java.io.FileNotFoundException => (0L, 0L) }
+      val (mtime, len) = fileStatus(f, conf)
       s"$f:$mtime:$len"
     }.mkString("|")
-
-  /** [[fileKey]] of one path as a file-name-safe tag, for the on-disk
-    * side outputs keyed by their source file. */
-  def fileTag(path: String): String = fileKey(Seq(path)).replaceAll("[^A-Za-z0-9]", "_")
 
   /** [[fileKey]] of every file a DataFrame reads. Plans over non-file
     * data (local relations) embed their rows in the semantic hash, so

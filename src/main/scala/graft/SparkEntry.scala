@@ -8,46 +8,30 @@ import graft.graph.{GraphBuilder, GraphOps}
 /** Driver contract — see /root/repo/SURVEY.md §2 for the inventory. */
 object SparkEntry {
 
-  /** Write-once side output for the source round-trip queries
-    * (edge-list TSV, JSON, partitioned parquet). The cache key folds
-    * in the source table's [[Memo.fileTag]], so regenerated testdata
-    * invalidates stale copies instead of silently serving old data.
-    * The _SUCCESS guard is driver-local java.io — correct for this
-    * local-FS bench; a cluster deployment would key a shared-FS path
-    * the same way. */
-  private def cachedSideOutput(dir: String, table: String, kind: String)
-      (write: String => Unit): String = {
-    val key = Memo.fileTag(s"$dir/$table.parquet")
-    val out = s"/tmp/graft_${kind}_${dir.replaceAll("[^A-Za-z0-9]", "_")}_$key"
-    if (!new java.io.File(out + "/_SUCCESS").exists()) write(out)
-    out
-  }
-
   // Per-SF-dir side outputs (file-format round-trip fixtures), one
   // named builder per kind so the src_*/g_from_file queries and
   // [[prewarmSideOutputs]] share a single write definition.
   private def sideOutEdgeList(s: SparkSession, d: String): String =
-    cachedSideOutput(d, "lineitem", "edgelist")(p =>
+    SideOutput("edgelist", s"$d/lineitem.parquet")(p =>
       graft.sources.EdgeListSource.write(GraphBuilder.supplierCoEdges(s, d), p))
   private def sideOutEventsPart(s: SparkSession, d: String): String =
-    cachedSideOutput(d, "events", "eventspart")(p =>
+    SideOutput("eventspart", s"$d/events.parquet")(p =>
       Tables.events(s, d).select(col("user_id"), col("event_type"), col("value"))
         .write.mode("overwrite").partitionBy("event_type").parquet(p))
   private def sideOutDocsJson(s: SparkSession, d: String): String =
-    cachedSideOutput(d, "documents", "docsjson")(p =>
+    SideOutput("docsjson", s"$d/documents.parquet")(p =>
       Tables.documents(s, d).select(col("doc_id"), col("text"))
         .write.mode("overwrite").json(p))
   private def sideOutDocsNested(s: SparkSession, d: String): String =
-    cachedSideOutput(d, "documents", "docsnested") { p =>
+    SideOutput("docsnested", s"$d/documents.parquet") { p =>
       val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
       docs.filter(col("doc_id") % 2 === 0)
         .write.mode("overwrite").json(s"$p/even/part")
       docs.filter(col("doc_id") % 2 =!= 0)
         .write.mode("overwrite").json(s"$p/odd/deep/part")
-      new java.io.File(s"$p/_SUCCESS").createNewFile(): Unit
     }
   private def sideOutDocsJsonGz(s: SparkSession, d: String): String =
-    cachedSideOutput(d, "documents", "docsjsongz")(p =>
+    SideOutput("docsjsongz", s"$d/documents.parquet")(p =>
       Tables.documents(s, d).select(col("doc_id"), col("text"))
         .write.mode("overwrite").option("compression", "gzip").json(p))
   /** One pretty-printed JSON ARRAY file (records spanning many
@@ -57,7 +41,7 @@ object SparkEntry {
     * lines into one array locally (corpus-bounded, fixture-only —
     * the READ path is the operator). */
   private def sideOutDocsMultiline(s: SparkSession, d: String): String =
-    cachedSideOutput(d, "documents", "docsmljson") { p =>
+    SideOutput("docsmljson", s"$d/documents.parquet") { p =>
       val nd = s"$p/_nd"
       Tables.documents(s, d).select(col("doc_id"), col("text"))
         .coalesce(1).write.mode("overwrite").json(nd)
@@ -69,59 +53,44 @@ object SparkEntry {
         java.nio.file.Paths.get(s"$p/data"))
       java.nio.file.Files.write(
         java.nio.file.Paths.get(s"$p/data/docs.json"),
-        lines.mkString("[\n", ",\n", "\n]").getBytes("UTF-8"))
-      new java.io.File(s"$p/_SUCCESS").createNewFile(): Unit
+        lines.mkString("[\n", ",\n", "\n]").getBytes("UTF-8")): Unit
     }
   private def sideOutDocsBin(s: SparkSession, d: String): String =
-    cachedSideOutput(d, "documents", "docsbin")(p =>
+    SideOutput("docsbin", s"$d/documents.parquet")(p =>
       graft.sources.BinaryFileSource.writePayloadFiles(
         Tables.documents(s, d).select(col("doc_id"), col("text")), p))
   private def sideOutDocsText(s: SparkSession, d: String): String =
-    cachedSideOutput(d, "documents", "docstext")(p =>
+    SideOutput("docstext", s"$d/documents.parquet")(p =>
       Tables.documents(s, d)
         .select(org.apache.spark.sql.functions
           .concat_ws("\u0001", col("doc_id"), col("text")).as("value"))
         .write.mode("overwrite").text(p))
   private def sideOutDocsOrc(s: SparkSession, d: String): String =
-    cachedSideOutput(d, "documents", "docsorc")(p =>
+    SideOutput("docsorc", s"$d/documents.parquet")(p =>
       Tables.documents(s, d).select(col("doc_id"), col("text"))
         .write.mode("overwrite").orc(p))
   private def sideOutDocsCsv(s: SparkSession, d: String): String =
-    cachedSideOutput(d, "documents", "docscsv")(p =>
+    SideOutput("docscsv", s"$d/documents.parquet")(p =>
       Tables.documents(s, d).select(col("doc_id"), col("text"))
         .write.mode("overwrite")
         .option("header", "true").option("quoteAll", "true")
         .option("escape", "\"").option("nullValue", "\u0000")
         .csv(p))
 
-  /** Materializes every per-SF-dir side output. Bench calls this in
-    * its (untimed) warmup so BOTH sweeps time only the read path —
-    * previously sweep 1 paid the one-time file writes while sweep 2
-    * skipped them, and the lower-median reported a cheaper query than
-    * the cold-memo contract implies. Writes are keyed on source-file
-    * identity, so an already-fresh fixture is a no-op. */
   /** Mixed-vintage parquet directory: an "old ingest" file set with a
     * narrow INT32 doc_id and no source/n_chars columns, plus a "new
     * ingest" set with the full widened schema — the drifted-lake shape
     * the round-9 events incident proved real. Both vintages land in
-    * ONE directory (staged + atomic rename so the _SUCCESS cache guard
-    * can never see a torn two-write fixture). */
+    * ONE directory. */
   private def sideOutDocsVintages(s: SparkSession, d: String): String =
-    cachedSideOutput(d, "documents", "docsvint") { p =>
-      val stage = new java.io.File(p + ".stage")
-      if (stage.exists()) {
-        import scala.reflect.io.Directory
-        new Directory(stage).deleteRecursively()
-      }
+    SideOutput("docsvint", s"$d/documents.parquet") { p =>
       val docs = Tables.documents(s, d)
       docs.filter(col("doc_id") % 2 === 0)
         .select(col("doc_id").cast("int").as("doc_id"), col("lang"))
-        .write.mode("overwrite").parquet(stage.getPath)
+        .write.mode("overwrite").parquet(p)
       docs.filter(col("doc_id") % 2 === 1)
         .select(col("doc_id"), col("source"), col("lang"), col("n_chars"))
-        .write.mode("append").parquet(stage.getPath)
-      if (!stage.renameTo(new java.io.File(p)))
-        throw new java.io.IOException(s"rename $stage -> $p failed")
+        .write.mode("append").parquet(p)
     }
 
   /** Partitioned lake after a DYNAMIC partition overwrite: the full
@@ -132,25 +101,16 @@ object SparkEntry {
     * semantics would wipe the other four partitions and append would
     * double the error rows; the oracle's
     * `type <> 'error' OR value >= 2.5` predicate fails either way,
-    * so the partition-replacement semantics are pinned end to end.
-    * Staged + atomic rename like the vintage fixture, so the
-    * _SUCCESS cache guard never sees a torn two-write state. */
+    * so the partition-replacement semantics are pinned end to end. */
   private def sideOutEventsDynOverwrite(s: SparkSession, d: String): String =
-    cachedSideOutput(d, "events", "eventsdyn") { p =>
-      val stage = new java.io.File(p + ".stage")
-      if (stage.exists()) {
-        import scala.reflect.io.Directory
-        new Directory(stage).deleteRecursively()
-      }
+    SideOutput("eventsdyn", s"$d/events.parquet") { p =>
       val ev = Tables.events(s, d).select(col("event_id"), col("user_id"),
         col("event_type"), col("value"))
-      ev.write.mode("overwrite").partitionBy("event_type").parquet(stage.getPath)
+      ev.write.mode("overwrite").partitionBy("event_type").parquet(p)
       ev.filter(col("event_type") === "error" && col("value") >= 2.5)
         .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("event_type").parquet(stage.getPath)
-      if (!stage.renameTo(new java.io.File(p)))
-        throw new java.io.IOException(s"rename $stage -> $p failed")
+        .partitionBy("event_type").parquet(p)
     }
 
   /** The docs CSV fixture with five PLANTED malformed rows (non-
@@ -158,26 +118,25 @@ object SparkEntry {
     * ingestion case every CSV reader meets. The bad file carries its
     * own header line (the header option swallows one per file). */
   private def sideOutDocsCsvCorrupt(s: SparkSession, d: String): String =
-    cachedSideOutput(d, "documents", "docscsvbad") { p =>
-      val stage = new java.io.File(p + ".stage")
-      if (stage.exists()) {
-        import scala.reflect.io.Directory
-        new Directory(stage).deleteRecursively()
-      }
+    SideOutput("docscsvbad", s"$d/documents.parquet") { p =>
       Tables.documents(s, d).select(col("doc_id"), col("text"))
         .write.mode("overwrite")
         .option("header", "true").option("quoteAll", "true")
         .option("escape", "\"").option("nullValue", "\u0000")
-        .csv(stage.getPath)
-      val w = new java.io.PrintWriter(new java.io.File(stage, "part-bad.csv"))
+        .csv(p)
+      val w = new java.io.PrintWriter(new java.io.File(p, "part-bad.csv"))
       try {
         w.println("doc_id,text")
         (1 to 5).foreach(i => w.println(s"""notanumber$i,"bad row $i""""))
       } finally w.close()
-      if (!stage.renameTo(new java.io.File(p)))
-        throw new java.io.IOException(s"rename $stage -> $p failed")
     }
 
+  /** Materializes every per-SF-dir side output. Bench calls this in
+    * its (untimed) warmup so BOTH sweeps time only the read path —
+    * previously sweep 1 paid the one-time file writes while sweep 2
+    * skipped them, and the lower-median reported a cheaper query than
+    * the cold-memo contract implies. Writes are keyed on source-file
+    * identity, so an already-fresh fixture is a no-op. */
   def prewarmSideOutputs(s: SparkSession, d: String): Unit = {
     sideOutEdgeList(s, d); sideOutEventsPart(s, d); sideOutDocsJson(s, d)
     sideOutDocsBin(s, d); sideOutDocsOrc(s, d); sideOutDocsCsv(s, d)

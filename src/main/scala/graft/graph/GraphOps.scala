@@ -2664,7 +2664,8 @@ object GraphOps {
   def louvainOnSuper(spark: SparkSession, sup: DataFrame): DataFrame =
     Dispatch.gated("louvainOnSuper", sup.select(col("a"), col("b"), col("w")),
         LocalLouvain.CollectMax, keys = Seq("a", "b"), admit = exactWeights("w")) { rs =>
-      Some(spark.createDataFrame(LocalLouvain.cluster(integralRows(rs).toSeq).toSeq)
+      Some(spark.createDataFrame(
+        LocalLouvain.clusterWithLevels(integralRows(rs).toSeq)._1.toSeq)
         .toDF("sv", "community"))
     } { louvainOnSuperGraphX(spark, _) }
 

@@ -28,7 +28,10 @@ import scala.collection.mutable
   */
 object LocalLouvain {
 
-  /** Greedy one-level local moves.
+  /** Cap on the ascending-id sweeps of one [[localMoves]] call. */
+  val MaxPasses = 10
+
+  /** Greedy one-level local moves: at most [[MaxPasses]] sweeps.
     *
     * @param edges undirected (a, b, w) rows, a != b (self-loops are a
     *              constant in Q — drop them before calling; their
@@ -40,8 +43,7 @@ object LocalLouvain {
     * @return (final assignment, total gain as Δ(4m²·Q) ≥ 0)
     */
   def localMoves(edges: Seq[(Long, Long, Long)], deg: Map[Long, Long],
-      m: BigInt, init: Map[Long, Long],
-      maxPasses: Int = 10): (Map[Long, Long], BigInt) = {
+      m: BigInt, init: Map[Long, Long]): (Map[Long, Long], BigInt) = {
     val adj = mutable.LongMap.empty[mutable.ArrayBuffer[(Long, Long)]]
     edges.foreach { case (a, b, w) =>
       if (a != b) {
@@ -58,7 +60,7 @@ object LocalLouvain {
     var gain = BigInt(0)
     var moved = true
     var pass = 0
-    while (moved && pass < maxPasses) {
+    while (moved && pass < MaxPasses) {
       moved = false
       pass += 1
       verts.foreach { v =>
@@ -145,31 +147,27 @@ object LocalLouvain {
     * Deterministic end to end (ascending sweeps, smaller-community
     * tie-breaks, min-member labels). Returns original vertex →
     * final community (a member's id, so streaming contraction's
-    * "community ids are vertex ids" collision argument holds). */
-  def cluster(rows: Seq[(Long, Long, Long)], maxLevels: Int = 10)
-      : Map[Long, Long] =
-    // Default aligned with [[clusterWithLevels]] and Louvain.run
-    // (10): louvainOnSuper's driver path must not contract DEEPER
-    // than its distributed fallback, or partitions near the
-    // CollectMax boundary could differ purely by dispatch path.
-    clusterWithLevels(rows, maxLevels)._1
-
-  /** [[cluster]] plus the per-level (level, Q, nCommunities,
-    * nVertices) trail [[graft.graph.Louvain.run]] reports — the same
+    * "community ids are vertex ids" collision argument holds), plus
+    * the per-level (level, Q, nCommunities, nVertices) trail
+    * [[graft.graph.Louvain.run]] reports — the same
     * loop contract (record the level AFTER its local moves, apply
     * the moves to the composed assignment, contract and continue only
-    * while Q improved by > minDeltaQ and the graph still shrinks), so
+    * while Q improved by > [[Louvain.MinDeltaQ]], the graph still
+    * shrinks and fewer than [[Louvain.MaxLevels]] levels ran), so
     * the driver dispatch is a drop-in for the GraphX engine's
-    * (assignment, levels) pair. The GraphX engine also drops a level
-    * whose Q fell below its predecessor's (its simultaneous moves can
-    * lower Q); here every move is a sequential exact positive gain, so
-    * a level never lowers Q and every level is applied. Q per level is the
+    * (assignment, levels) pair. Sharing the GraphX engine's bounds
+    * keeps louvainOnSuper's driver path from contracting deeper than
+    * its distributed fallback, so partitions near the CollectMax
+    * boundary never differ purely by dispatch path. The GraphX engine
+    * also drops a level whose Q fell below its predecessor's (its
+    * simultaneous moves can lower Q); here every move is a sequential
+    * exact positive gain, so a level never lowers Q and every level
+    * is applied. Q per level is the
     * exact-BigInt ledger (4m·Σw_in − Σ sumd²) / 4m² — one double
     * division, the modularityOf convention, so the "rescored final
     * level equals modularityOf" spec holds bit-closer than the
     * float-summed Pregel path it replaces. */
-  def clusterWithLevels(rows: Seq[(Long, Long, Long)], maxLevels: Int = 10,
-      minDeltaQ: Double = 1e-4)
+  def clusterWithLevels(rows: Seq[(Long, Long, Long)])
       : (Map[Long, Long], Seq[(Int, Double, Long, Long)]) = {
     val m = rows.iterator.map(r => BigInt(r._3)).sum
     var cur = rows
@@ -207,10 +205,10 @@ object LocalLouvain {
           val mn = ms.keys.min; ms.keys.map(_ -> mn)
         }.toMap
       compose = compose.map { case (v, sv) => v -> canon(sv) }
-      val improved = q > prevQ + minDeltaQ
+      val improved = q > prevQ + Louvain.MinDeltaQ
       prevQ = q
       level += 1
-      if (improved && level < maxLevels && nComm < nVert) {
+      if (improved && level < Louvain.MaxLevels && nComm < nVert) {
         cur = cur.groupBy { r =>
           val (x, y) = (canon(r._1), canon(r._2))
           (math.min(x, y), math.max(x, y))

@@ -237,12 +237,24 @@ object Louvain extends Serializable {
     * the shuffle join instead of the broadcast delta. */
   val SigmaSite = "louvainSigmaTot"
 
-  /** Run Louvain.
-    *
-    * maxMoveRounds caps the local-move phase per level: measured on
-    * dense graphs, rounds past ~20 move <5% of vertices each at full
+  /** Most levels one run builds. [[LocalLouvain.clusterWithLevels]]
+    * shares it, so a driver-twin run never contracts deeper than its
+    * GraphX fallback. */
+  val MaxLevels = 10
+
+  /** Cap on the local-move rounds of one level: measured on dense
+    * graphs, rounds past ~20 move <5% of vertices each at full
     * per-round cost, and graph compression + the next (smaller,
-    * cheaper) level recovers those refinements.
+    * cheaper) level recovers those refinements. */
+  val MaxMoveRounds = 20
+
+  /** A level whose Q beats its predecessor's by no more than this is
+    * the last one built. [[LocalLouvain.clusterWithLevels]] shares it. */
+  val MinDeltaQ = 1e-4
+
+  /** Run Louvain: at most [[MaxLevels]] levels of at most
+    * [[MaxMoveRounds]] local-move rounds each, stopping after a level
+    * that improves Q by no more than [[MinDeltaQ]].
     *
     * resolution is the γ of generalized (Reichardt–Bornholdt)
     * modularity: gain ∝ k_i,in − γ·Σ_tot·k_i / 2m. γ = 1 is classic
@@ -259,9 +271,6 @@ object Louvain extends Serializable {
     */
   def run(
       graph: Graph[Double, Double],
-      maxLevels: Int = 10,
-      maxMoveRounds: Int = 20,
-      minDeltaQ: Double = 1e-4,
       resolution: Double = 1.0): (RDD[(VertexId, Long)], Seq[LouvainLevel]) = {
 
     // m2 = 2m: every edge counts twice, every self-loop twice.
@@ -278,10 +287,10 @@ object Louvain extends Serializable {
     val levels = mutable.ArrayBuffer[LouvainLevel]()
     var prevQ = Double.MinValue
     var level = 0
-    var continue = maxLevels > 0 && m2 > 0.0
+    var continue = m2 > 0.0
 
     while (continue) {
-      val phase = localMove(working, m2, maxMoveRounds, resolution)
+      val phase = localMove(working, m2, resolution)
       val moved = phase.graph
       val q = modularity(moved, m2, resolution)
       // modularity materialized moved's edge view; the graphs it was
@@ -306,10 +315,10 @@ object Louvain extends Serializable {
         assignment.unpersist(blocking = false)
         assignment = newAssignment
 
-        val improved = q > prevQ + minDeltaQ
+        val improved = q > prevQ + MinDeltaQ
         prevQ = q
         level += 1
-        if (improved && level < maxLevels && nComm < nVert) {
+        if (improved && level < MaxLevels && nComm < nVert) {
           val compressed = compress(moved)
           // Materialize BEFORE unpersisting the parents: compress() is
           // lazy, and letting the next level trigger it after the
@@ -400,7 +409,6 @@ object Louvain extends Serializable {
   private def localMove(
       start: Graph[LouvainState, Double],
       m2: Double,
-      maxRounds: Int,
       resolution: Double): Phase = {
     val nV = start.vertices.count()
     // Early-stop when the moving fraction drops below 0.1% of
@@ -423,7 +431,7 @@ object Louvain extends Serializable {
     // all earlier rounds; a prototype's round time doubled each round.
     var older: Seq[Graph[LouvainState, Double]] = Nil
     var movedCount = Long.MaxValue
-    while (rounds.size < maxRounds && movedCount > minProgress) {
+    while (rounds.size < MaxMoveRounds && movedCount > minProgress) {
       val round = rounds.size
       val parity = round % 2 == 0
       val d = delta

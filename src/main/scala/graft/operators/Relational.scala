@@ -191,16 +191,12 @@ object Relational {
     * with the 5% verdict convention (sketch QUALITY under the oracle,
     * not its bits). lgConfigK=12 → ~1.6% standard error. */
   def qSketchUnion(spark: SparkSession, dir: String): DataFrame = {
-    val key = graft.Memo.fileTag(s"$dir/events.parquet")
-    val stem = dir.replaceAll("[^A-Za-z0-9]", "_")
-    val skDir = s"/tmp/graft_hll_${stem}_$key"
-    if (!new java.io.File(s"$skDir/_SUCCESS").exists()) {
+    val skDir = graft.SideOutput("hll", s"$dir/events.parquet")(
       Tables.events(spark, dir)
         .select(col("event_type"), to_date(col("ts")).as("day"), col("user_id"))
         .groupBy(col("event_type"), col("day"))
         .agg(hll_sketch_agg(col("user_id"), lit(12)).as("sk"))
-        .write.mode("overwrite").parquet(skDir)
-    }
+        .write.mode("overwrite").parquet(_))
     val merged = spark.read.parquet(skDir)
       .groupBy(col("event_type"))
       .agg(hll_sketch_estimate(hll_union_agg(col("sk"), lit(true)))

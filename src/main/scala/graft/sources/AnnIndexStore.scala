@@ -84,21 +84,6 @@ object AnnIndexStore {
     r.getAs[Long]("extra")
   }
 
-  /** Per-SF fixture path keyed by the source's mtime AND length,
-    * encoded SEPARATELY (round 19 — ADVICE r18 item 3: an XOR of the
-    * two can collide across a regeneration whose (mtime, length) pair
-    * preserves the XOR, mapping the new lake to the OLD path where
-    * requireFresh then throws STALE forever — loud, but self-healing
-    * is the contract). A regenerated lake gets a NEW path, so an old
-    * index can never serve it; the manifest _SUCCESS sentinel marks a
-    * complete write (manifest writes LAST). */
-  private def fixturePath(src: java.io.File, dir: String,
-      kind: String): String = {
-    val key = java.lang.Long.toHexString(src.lastModified) + "_" +
-      java.lang.Long.toHexString(src.length)
-    s"/tmp/graft_${kind}_${dir.replaceAll("[^A-Za-z0-9]", "_")}_$key"
-  }
-
   // ---- IVF: centroids + cell-partitioned inverted lists ----
 
   /** Fit (or reuse the memoized) quantizer and write the full IVF
@@ -137,12 +122,9 @@ object AnnIndexStore {
   }
 
   /** Query entry: build-once-search-from-disk. */
-  def annIvfTopKPersisted(spark: SparkSession, dir: String): DataFrame = {
-    val path = fixturePath(embSrc(dir), dir, "ivfidx")
-    if (!new java.io.File(s"$path/manifest/_SUCCESS").exists())
-      saveIvf(spark, dir, path)
-    annIvfTopKFrom(spark, dir, path)
-  }
+  def annIvfTopKPersisted(spark: SparkSession, dir: String): DataFrame =
+    annIvfTopKFrom(spark, dir,
+      graft.SideOutput("ivfidx", embSrc(dir).getPath)(saveIvf(spark, dir, _)))
 
   // ---- PQ: codebooks + coarse quantizer + code table ----
 
@@ -183,12 +165,9 @@ object AnnIndexStore {
       loadPqCodebooks(spark, path), coarse)
   }
 
-  def pqAdcTopKPersisted(spark: SparkSession, dir: String): DataFrame = {
-    val path = fixturePath(embSrc(dir), dir, "pqidx")
-    if (!new java.io.File(s"$path/manifest/_SUCCESS").exists())
-      savePq(spark, dir, path)
-    pqAdcTopKFrom(spark, dir, path)
-  }
+  def pqAdcTopKPersisted(spark: SparkSession, dir: String): DataFrame =
+    pqAdcTopKFrom(spark, dir,
+      graft.SideOutput("pqidx", embSrc(dir).getPath)(savePq(spark, dir, _)))
 
   // ---- MinHash signatures (dedup) ----
 
@@ -211,12 +190,9 @@ object AnnIndexStore {
       .orderBy(col("doc_a"), col("doc_b"))
   }
 
-  def minhashPairsPersisted(spark: SparkSession, dir: String): DataFrame = {
-    val path = fixturePath(docSrc(dir), dir, "sigidx")
-    if (!new java.io.File(s"$path/manifest/_SUCCESS").exists())
-      saveMinhashSigs(spark, dir, path)
-    minhashPairsFrom(spark, dir, path)
-  }
+  def minhashPairsPersisted(spark: SparkSession, dir: String): DataFrame =
+    minhashPairsFrom(spark, dir,
+      graft.SideOutput("sigidx", docSrc(dir).getPath)(saveMinhashSigs(spark, dir, _)))
 
   // ---- Sign-LSH band table ----
 
@@ -240,12 +216,9 @@ object AnnIndexStore {
     Similarity.annLshSearch(spark, dir, spark.read.parquet(s"$path/bands"))
   }
 
-  def annLshTopKPersisted(spark: SparkSession, dir: String): DataFrame = {
-    val path = fixturePath(embSrc(dir), dir, "lshidx")
-    if (!new java.io.File(s"$path/manifest/_SUCCESS").exists())
-      saveLshBands(spark, dir, path)
-    annLshTopKFrom(spark, dir, path)
-  }
+  def annLshTopKPersisted(spark: SparkSession, dir: String): DataFrame =
+    annLshTopKFrom(spark, dir,
+      graft.SideOutput("lshidx", embSrc(dir).getPath)(saveLshBands(spark, dir, _)))
 
   // ---- HNSW layer graph ----
 
@@ -274,10 +247,7 @@ object AnnIndexStore {
       maxLevel, Similarity.TopK)
   }
 
-  def hnswTopKPersisted(spark: SparkSession, dir: String): DataFrame = {
-    val path = fixturePath(embSrc(dir), dir, "hnswidx")
-    if (!new java.io.File(s"$path/manifest/_SUCCESS").exists())
-      saveHnsw(spark, dir, path)
-    hnswTopKFrom(spark, dir, path)
-  }
+  def hnswTopKPersisted(spark: SparkSession, dir: String): DataFrame =
+    hnswTopKFrom(spark, dir,
+      graft.SideOutput("hnswidx", embSrc(dir).getPath)(saveHnsw(spark, dir, _)))
 }

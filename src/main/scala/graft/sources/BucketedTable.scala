@@ -293,14 +293,14 @@ object BucketedTable {
         child <- vdir.listFiles().toSeq if child.isDirectory
       } {
         if (child.getName.startsWith("__b=")) {
-          if (!referenced.contains(child.getPath)) deleteRecursively(child)
+          if (!referenced.contains(child.getPath)) graft.SideOutput.delete(child)
         } else {
           for (unit <- child.listFiles().toSeq
                if unit.isDirectory && unit.getName.startsWith("__b=")
                if !referenced.contains(unit.getPath))
-            deleteRecursively(unit)
+            graft.SideOutput.delete(unit)
           if (child.listFiles().forall(f => !f.getName.startsWith("__b=")))
-            deleteRecursively(child)
+            graft.SideOutput.delete(child)
         }
       }
       // Sweep a version dir only once NO bucket generation survives
@@ -313,14 +313,9 @@ object BucketedTable {
         d.listFiles().exists(f => f.isDirectory &&
           (f.getName.startsWith("__b=") || holdsGeneration(f)))
       dataRoot.listFiles().filter(d => d.isDirectory && !holdsGeneration(d))
-        .foreach(deleteRecursively)
+        .foreach(graft.SideOutput.delete)
     }
     expired
-  }
-
-  private def deleteRecursively(f: java.io.File): Unit = {
-    if (f.isDirectory) f.listFiles().foreach(deleteRecursively)
-    f.delete(): Unit
   }
 
   /** Query entry (`src_bucketed_merge`): the src_time_travel fixture
@@ -330,12 +325,7 @@ object BucketedTable {
     * oracle: identical answers from a layout that rewrote only
     * touched buckets per merge. */
   def qBucketedMerge(spark: SparkSession, dir: String): DataFrame = {
-    val key = graft.Memo.fileTag(s"$dir/orders.parquet")
-    val stem = dir.replaceAll("[^A-Za-z0-9]", "_")
-    val tdir = s"/tmp/graft_btab_${stem}_$key"
-    if (versions(tdir).size != 3) {
-      if (new java.io.File(tdir).exists())
-        deleteRecursively(new java.io.File(tdir))
+    val tdir = graft.SideOutput("btab", s"$dir/orders.parquet") { tdir =>
       val orders = graft.Tables.orders(spark, dir)
         .select(col("o_custkey"), col("o_orderkey"), col("o_totalprice"))
       (0 to 2).foreach { b =>
@@ -362,12 +352,7 @@ object BucketedTable {
     * commit-cost and vacuum contracts are spec-pinned on planted
     * tables (BucketedTableSpec). */
   def qDvMerge(spark: SparkSession, dir: String): DataFrame = {
-    val key = graft.Memo.fileTag(s"$dir/orders.parquet")
-    val stem = dir.replaceAll("[^A-Za-z0-9]", "_")
-    val tdir = s"/tmp/graft_dvtab_${stem}_$key"
-    if (versions(tdir).size != 3) {
-      if (new java.io.File(tdir).exists())
-        deleteRecursively(new java.io.File(tdir))
+    val tdir = graft.SideOutput("dvtab", s"$dir/orders.parquet") { tdir =>
       val orders = graft.Tables.orders(spark, dir)
         .select(col("o_custkey"), col("o_orderkey"), col("o_totalprice"))
       (0 to 2).foreach { b =>

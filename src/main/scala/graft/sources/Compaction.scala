@@ -67,10 +67,7 @@ object Compaction {
     * files, compacted to ~4; the monthly readout off the compacted
     * copy must equal the plain-table oracle. */
   def qCompaction(spark: SparkSession, dir: String): DataFrame = {
-    val key = graft.Memo.fileTag(s"$dir/orders.parquet")
-    val stem = dir.replaceAll("[^A-Za-z0-9]", "_")
-    val root = s"/tmp/graft_compact_${stem}_$key"
-    if (!new java.io.File(s"$root/_built").exists()) {
+    val root = graft.SideOutput("compact", s"$dir/orders.parquet") { root =>
       val o = graft.Tables.orders(spark, dir)
         .select(col("o_orderkey"), col("o_totalprice"), col("o_orderdate"))
       o.repartition(64).write.mode("overwrite").parquet(s"$root/small")
@@ -79,9 +76,7 @@ object Compaction {
         .filter(f => f.isFile && f.getName.endsWith(".parquet"))
         .map(_.length()).sum
       compact(spark, s"$root/small", s"$root/compacted",
-        targetBytes = math.max(bytes / 4, 1L))
-      java.nio.file.Files.createFile(
-        java.nio.file.Paths.get(s"$root/_built")): Unit
+        targetBytes = math.max(bytes / 4, 1L)): Unit
     }
     spark.read.parquet(s"$root/compacted")
       .groupBy(date_format(col("o_orderdate"), "yyyy").as("yr"))

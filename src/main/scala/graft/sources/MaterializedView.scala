@@ -139,31 +139,19 @@ object MaterializedView {
     * derived average computed from algebraic state — oracle-equal to
     * a direct full-table GROUP BY. */
   def qIncrementalMv(spark: SparkSession, dir: String): DataFrame = {
-    val key = graft.Memo.fileTag(s"$dir/orders.parquet")
-    val stem = dir.replaceAll("[^A-Za-z0-9]", "_")
-    val root = s"/tmp/graft_mv_${stem}_$key"
-    val landing = s"$root/landing"
-    val mvDir = s"$root/mv_state"
-    if (versions(mvDir).size != 3) {
-      val rootF = new java.io.File(root)
-      if (rootF.exists()) deleteRecursively(rootF)
+    val root = graft.SideOutput("mv", s"$dir/orders.parquet") { root =>
       val orders = graft.Tables.orders(spark, dir)
         .select(col("o_orderkey"), col("o_orderdate"), col("o_totalprice"))
       (0 to 2).foreach { b =>
         orders.filter(pmod(col("o_orderkey"), lit(3)) === b)
-          .write.parquet(s"$landing/batch$b")
-        refresh(spark, landing, mvDir, MvKeys, MvSums, ordersPartial)
+          .write.parquet(s"$root/landing/batch$b")
+        refresh(spark, s"$root/landing", s"$root/mv_state", MvKeys, MvSums, ordersPartial)
       }
     }
-    latest(spark, mvDir)
+    latest(spark, s"$root/mv_state")
       .select(col("o_year"), col("n_orders"),
         round(col("cents") / 100.0, 2).as("sum_price"),
         expr("cents div n_orders").as("avg_cents"))
       .orderBy(col("o_year"))
-  }
-
-  private def deleteRecursively(f: java.io.File): Unit = {
-    if (f.isDirectory) f.listFiles().foreach(deleteRecursively)
-    f.delete(): Unit
   }
 }

@@ -22,11 +22,8 @@ object PartitionEvolution {
 
   /** Build the two-spec fixture: orders before 1998 partitioned by
     * o_year (spec v1), 1998+ by (o_year, o_month) (spec v2). */
-  private[sources] def fixture(spark: SparkSession, dir: String): String = {
-    val key = graft.Memo.fileTag(s"$dir/orders.parquet")
-    val stem = dir.replaceAll("[^A-Za-z0-9]", "_")
-    val root = s"/tmp/graft_pevo_${stem}_$key"
-    if (!new java.io.File(s"$root/_built").exists()) {
+  private[sources] def fixture(spark: SparkSession, dir: String): String =
+    graft.SideOutput("pevo", s"$dir/orders.parquet") { root =>
       val o = graft.Tables.orders(spark, dir)
         .select(col("o_orderkey"), col("o_totalprice"), col("o_orderdate"))
         .withColumn("o_year", year(col("o_orderdate")))
@@ -36,11 +33,7 @@ object PartitionEvolution {
       o.filter(col("o_year") >= 1998)
         .write.mode("overwrite").partitionBy("o_year", "o_month")
         .parquet(s"$root/v2")
-      java.nio.file.Files.createFile(
-        java.nio.file.Paths.get(s"$root/_built")): Unit
     }
-    root
-  }
 
   /** Unified read across both specs (common logical columns; each
     * side keeps its own directory pruning for `pred`). */

@@ -93,31 +93,18 @@ object SkipIndex {
 
   // ---- fixtures over the orders table -------------------------------
 
-  private def layoutRoot(dir: String, layout: String): String = {
-    val key = graft.Memo.fileTag(s"$dir/orders.parquet")
-    val stem = dir.replaceAll("[^A-Za-z0-9]", "_")
-    s"/tmp/graft_skip_${stem}_$key/$layout"
-  }
-
-  private def built(out: String): Boolean =
-    new java.io.File(s"$out/_stats").isDirectory
-
   private def ordersCols(spark: SparkSession, dir: String): DataFrame =
     graft.Tables.orders(spark, dir).select(
       col("o_orderkey"), col("o_custkey"), col("o_totalprice"),
       col("o_orderdate"))
 
-  private def linearLayout(spark: SparkSession, dir: String): String = {
-    val out = layoutRoot(dir, "linear")
-    if (!built(out))
+  private def linearLayout(spark: SparkSession, dir: String): String =
+    graft.SideOutput("skiplinear", s"$dir/orders.parquet")(
       writeClustered(ordersCols(spark, dir), col("o_orderdate"),
-        Seq("o_orderdate"), out)
-    out
-  }
+        Seq("o_orderdate"), _))
 
-  private def zorderLayout(spark: SparkSession, dir: String): String = {
-    val out = layoutRoot(dir, "zorder")
-    if (!built(out)) {
+  private def zorderLayout(spark: SparkSession, dir: String): String =
+    graft.SideOutput("skipzorder", s"$dir/orders.parquet") { out =>
       val o = ordersCols(spark, dir)
         .withColumn("__z", morton16(
           datediff(to_date(col("o_orderdate")), lit("1995-01-01")),
@@ -125,8 +112,6 @@ object SkipIndex {
       writeClustered(o, col("__z"),
         Seq("o_orderdate", "o_custkey"), out)
     }
-    out
-  }
 
   private val yr0 = lit("1997-01-01").cast("timestamp")
   private val yr1 = lit("1998-01-01").cast("timestamp")
@@ -182,9 +167,8 @@ object SkipIndex {
     * the per-group filter has something to skip; BloomSkipSpec
     * probes the footers directly (filter present; planted keys hit,
     * absent keys miss). */
-  private def bloomLayout(spark: SparkSession, dir: String): String = {
-    val out = layoutRoot(dir, "bloom")
-    if (!new java.io.File(s"$out/data/_SUCCESS").exists()) {
+  private def bloomLayout(spark: SparkSession, dir: String): String =
+    graft.SideOutput("skipbloom", s"$dir/orders.parquet")(out =>
       ordersCols(spark, dir)
         .repartition(4, col("o_orderkey"))
         .write.mode("overwrite")
@@ -197,10 +181,7 @@ object SkipIndex {
         // standard pairing is bloom XOR dictionary per column.
         .option("parquet.enable.dictionary#o_custkey", "false")
         .option("parquet.block.size", (1 << 20).toString)
-        .parquet(s"$out/data")
-    }
-    out
-  }
+        .parquet(s"$out/data"))
 
   /** Query entry (`src_bloom_skip`): per-customer order counts and
     * spend for the fixed probe keys off the bloom-indexed scattered

@@ -52,11 +52,6 @@ object VersionedTable {
     spark.read.parquet(s"$dir/v$v")
   }
 
-  private def deleteRecursively(f: java.io.File): Unit = {
-    if (f.isDirectory) f.listFiles().foreach(deleteRecursively)
-    f.delete(): Unit
-  }
-
   /** Retention: expire every committed version except the newest
     * `keepLast` (the version-horizon guard — at least the latest
     * always survives; `keepLast < 1` is refused). Returns the
@@ -73,7 +68,7 @@ object VersionedTable {
     val expired = versions(dir).dropRight(keepLast)
     expired.foreach { v =>
       commitMarker(dir, v).delete(): Unit
-      deleteRecursively(new java.io.File(s"$dir/v$v"))
+      graft.SideOutput.delete(new java.io.File(s"$dir/v$v"))
     }
     expired
   }
@@ -107,25 +102,12 @@ object VersionedTable {
     nextV
   }
 
-  /** Query entry (`src_time_travel`): three deterministic upsert
-    * batches of orders (batch id = o_orderkey mod 3, applied in
-    * order) merged into a per-SF-dir fixture table, then ONE
-    * time-travel aggregate per committed version — count of live
-    * keys and their summed totalprice as of v0, v1, v2. Exercises
-    * merge, commit-marker resolution and asOf on every run; the
-    * fixture is keyed by the source file identity so regenerated
-    * testdata rebuilds it instead of serving stale versions. */
   /** The shared 3-version fixture table (batch id = o_orderkey mod 3,
     * merged in order), built once per SF dir and keyed by the source
     * file identity so regenerated testdata rebuilds it instead of
     * serving stale versions. */
-  private def fixtureDir(spark: SparkSession, dir: String): String = {
-    val key = graft.Memo.fileTag(s"$dir/orders.parquet")
-    val stem = dir.replaceAll("[^A-Za-z0-9]", "_")
-    val tdir = s"/tmp/graft_vtab_${stem}_$key"
-    if (versions(tdir).size != 3) {
-      if (new java.io.File(tdir).exists())
-        deleteRecursively(new java.io.File(tdir))
+  private def fixtureDir(spark: SparkSession, dir: String): String =
+    graft.SideOutput("vtab", s"$dir/orders.parquet") { tdir =>
       val orders = graft.Tables.orders(spark, dir)
         .select(col("o_custkey"), col("o_orderkey"), col("o_totalprice"))
       (0 to 2).foreach { b =>
@@ -134,9 +116,15 @@ object VersionedTable {
           keys = Seq("o_custkey"), orderCol = "o_orderkey")
       }
     }
-    tdir
-  }
 
+  /** Query entry (`src_time_travel`): three deterministic upsert
+    * batches of orders (batch id = o_orderkey mod 3, applied in
+    * order) merged into a per-SF-dir fixture table, then ONE
+    * time-travel aggregate per committed version — count of live
+    * keys and their summed totalprice as of v0, v1, v2. Exercises
+    * merge, commit-marker resolution and asOf on every run; the
+    * fixture is keyed by the source file identity so regenerated
+    * testdata rebuilds it instead of serving stale versions. */
   def qTimeTravel(spark: SparkSession, dir: String): DataFrame = {
     val tdir = fixtureDir(spark, dir)
     versions(tdir).map { v =>

@@ -861,25 +861,11 @@ object StreamingOps {
     * (the oracle), BECAUSE the merge is associative — not because
     * the batching was lucky. */
   def streamCdcSnapshot(spark: SparkSession, dir: String): DataFrame = {
-    val key = graft.Memo.fileTag(s"$dir/events.parquet")
-    val stem = dir.replaceAll("[^A-Za-z0-9]", "_")
-    val srcDir = s"/tmp/graft_cdcsrc_${stem}_$key"
-    if (!new java.io.File(s"$srcDir/_SUCCESS").exists()) {
-      graft.Tables.events(spark, dir)
-        .select(col("user_id"), col("event_id"), col("ts"),
-          col("event_type"), col("value"))
-        .repartition(4)
-        .write.mode("overwrite").parquet(srcDir)
-    }
-    val sink = s"/tmp/graft_cdcsink_${stem}_$key"
-    // Reset the sink: versions are per-RUN state (batch ids restart
+    val srcDir = cdcSource(spark, dir)
+    // An empty sink: versions are per-RUN state (batch ids restart
     // at 0 every run), so a stale higher version from a previous,
     // differently-batched run must not win the final `last` pick.
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles().foreach(rm)
-      f.delete(): Unit
-    }
-    if (new java.io.File(sink).exists()) rm(new java.io.File(sink))
+    val sink = graft.SideOutput.scratch("cdcsink", s"$dir/events.parquet")
     val schema = spark.read.parquet(srcDir).schema
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(srcDir)
@@ -894,6 +880,17 @@ object StreamingOps {
         round(col("value"), 2).as("last_value"))
       .orderBy(col("user_id"))
   }
+
+  /** The events table re-sharded to 4 files, so `maxFilesPerTrigger=1`
+    * drives a multi-batch stream: the source of [[streamCdcSnapshot]]
+    * and [[streamTwsTrail]]. */
+  private def cdcSource(spark: SparkSession, dir: String): String =
+    graft.SideOutput("cdcsrc", s"$dir/events.parquet")(
+      graft.Tables.events(spark, dir)
+        .select(col("user_id"), col("event_id"), col("ts"),
+          col("event_type"), col("value"))
+        .repartition(4)
+        .write.mode("overwrite").parquet(_))
 
   /** Per-micro-batch incremental CONNECTED-COMPONENTS merge: batch
     * edges are CONTRACTED through the previous labels (u,v) →
@@ -1031,23 +1028,14 @@ object StreamingOps {
     * (`g_cc`'s oracle), BECAUSE the merge is associative — not
     * because the batching was lucky. */
   def streamCcIncremental(spark: SparkSession, dir: String): DataFrame = {
-    val key = graft.Memo.fileTag(s"$dir/lineitem.parquet")
-    val stem = dir.replaceAll("[^A-Za-z0-9]", "_")
-    val srcDir = s"/tmp/graft_ccsrc_${stem}_$key"
-    if (!new java.io.File(s"$srcDir/_SUCCESS").exists()) {
+    val srcDir = graft.SideOutput("ccsrc", s"$dir/lineitem.parquet")(
       graft.graph.GraphBuilder.supplierCoEdges(spark, dir)
         .select(col("src"), col("dst"))
         .repartition(4)
-        .write.mode("overwrite").parquet(srcDir)
-    }
-    val sink = s"/tmp/graft_ccsink_${stem}_$key"
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles().foreach(rm)
-      f.delete(): Unit
-    }
+        .write.mode("overwrite").parquet(_))
     // Versions are per-RUN state (batch ids restart at 0 every run) —
     // the s_stream_cdc sink-reset lesson.
-    if (new java.io.File(sink).exists()) rm(new java.io.File(sink))
+    val sink = graft.SideOutput.scratch("ccsink", s"$dir/lineitem.parquet")
     val schema = spark.read.parquet(srcDir).schema
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(srcDir)
@@ -1133,7 +1121,7 @@ object StreamingOps {
     // arithmetic the driver does in milliseconds. Within the gate the
     // fold is BIT-IDENTICAL to the distributed path: contraction and
     // super-edge sums are exact double adds of integral weights
-    // (order-free), and LocalLouvain.cluster — the engine
+    // (order-free), and LocalLouvain.clusterWithLevels — the engine
     // louvainOnSuper dispatches to under exactly these bounds — is
     // row-order-insensitive (ascending sweeps, min-id tie breaks).
     // Gate: Long keys, non-null integral weights, and the carried
@@ -1168,8 +1156,8 @@ object StreamingOps {
         val k = if (a0 <= b0) (a0, b0) else (b0, a0)
         sup(k) = sup.getOrElse(k, 0.0) + r.getDouble(2)
       }
-      val assign = LocalLouvain.cluster(
-        sup.iterator.map { case ((a, b), w) => (a, b, math.round(w)) }.toSeq)
+      val assign = LocalLouvain.clusterWithLevels(
+        sup.iterator.map { case ((a, b), w) => (a, b, math.round(w)) }.toSeq)._1
       val prevComms = lab.values.toSet
       val newLab = scala.collection.mutable.LongMap.empty[Long]
       lab.foreach { case (v, c) =>
@@ -1269,7 +1257,8 @@ object StreamingOps {
     *  - MERGE probe: greedy local moves over the maintained super
     *    graph from the identity partition — the gain available from
     *    re-clustering whole communities. The super state is already
-    *    materialized per fold; it collects when ≤ [[SupCollectMax]]
+    *    materialized per fold; it collects when ≤
+    *    [[graft.graph.LocalLouvain.CollectMax]]
     *    rows (a graph OVER COMMUNITIES — tiny next to the corpus),
     *    else falls back to the distributed [[graft.graph.GraphOps
     *    .louvainOnSuper]].
@@ -1297,14 +1286,13 @@ object StreamingOps {
     * GROWS monotonically, so under-detection delays the refresh by
     * at most an audit interval. Returns the estimated gap as e6
     * modularity. */
-  private[graft] val SupCollectMax = graft.graph.LocalLouvain.CollectMax
   private[graft] def louvainDriftGapE6(spark: SparkSession, edges: DataFrame,
       labels: DataFrame, sup: DataFrame, probeK: Int = 8,
       intraBudget: Long = 1L << 18): Long = {
     import graft.graph.LocalLouvain
     val supN = sup.count()
     val (mergeGain4m2, m) =
-      if (supN <= SupCollectMax) {
+      if (supN <= LocalLouvain.CollectMax) {
         val rows = sup.select(col("a"), col("b"), col("w").cast("double"))
           .collect().map(r => (r.getLong(0), r.getLong(1),
             math.round(r.getDouble(2))))
@@ -1415,17 +1403,21 @@ object StreamingOps {
     * under contraction (the self-loop carries w_in, the super degree
     * is d_c), so Q(identity on super) IS Q(labels on the full graph)
     * without touching a single raw edge. Driver-side when the super
-    * state fits [[SupCollectMax]] (mirroring modularityOf's exact
-    * integer ledger and its one final double division), distributed
-    * modularityOf on the super edges otherwise. LouvainAuditSpec
-    * pins equality against the full-graph modularityOf. */
+    * state fits [[graft.graph.LocalLouvain.CollectMax]] rows of
+    * integral weights (mirroring modularityOf's exact integer ledger
+    * and its one final double division; the ledger would round a
+    * fractional weight that modularityOf casts to long), distributed
+    * modularityOf on the super edges otherwise — one
+    * [[graft.graph.Dispatch.gated]] site. IncrementalLouvainSpec pins
+    * both branches against the full-graph modularityOf. */
   private[graft] def superIdentityQ(spark: SparkSession,
       sup: DataFrame): (Long, Long) = {
-    val supN = sup.count()
-    if (supN <= SupCollectMax) {
-      val rows = sup.select(col("a"), col("b"), col("w").cast("double"))
-        .collect().map(r => (r.getLong(0), r.getLong(1),
-          math.round(r.getDouble(2))))
+    import graft.graph.{Dispatch, LocalLouvain}
+    Dispatch.gated("superIdentityQ", sup.select(col("a"), col("b"), col("w")),
+        LocalLouvain.CollectMax, keys = Seq("a", "b"),
+        admit = Seq(Dispatch.noNulls(col("w")), Dispatch.integral(col("w")))) { rs =>
+      val rows = rs.map(r => (r.getLong(0), r.getLong(1),
+        math.round(r.getAs[Number](2).doubleValue)))
       val deg = scala.collection.mutable.LongMap.empty[Long]
         .withDefaultValue(0L)
       val wIn = scala.collection.mutable.LongMap.empty[Long]
@@ -1436,14 +1428,15 @@ object StreamingOps {
       }
       val m = BigInt(rows.map(_._3).sum)
       val n = deg.keys.size.toLong
-      if (m == 0) return (n, 0L)
-      val aSum = BigInt(wIn.values.sum)
-      val bSum = deg.values.map(d => BigInt(d) * d).sum
-      val q = math.round((aSum * 4 * m - bSum).toDouble /
-        (4.0 * m.toDouble * m.toDouble) * 1e6)
-      (n, q)
-    } else {
-      val supE = sup.select(col("a").as("src"), col("b").as("dst"),
+      if (m == 0) Some((n, 0L))
+      else {
+        val aSum = BigInt(wIn.values.sum)
+        val bSum = deg.values.map(d => BigInt(d) * d).sum
+        Some((n, math.round((aSum * 4 * m - bSum).toDouble /
+          (4.0 * m.toDouble * m.toDouble) * 1e6)))
+      }
+    } { cp =>
+      val supE = cp.select(col("a").as("src"), col("b").as("dst"),
         col("w").as("weight"))
       val idLab = supE.select(explode(array(col("src"), col("dst")))
         .as("vertex")).distinct()
@@ -1537,21 +1530,12 @@ object StreamingOps {
     * Louvain's, both under the same exact-integer `modularityOf`
     * metric on the complete edge set. */
   def streamLouvainIncremental(spark: SparkSession, dir: String): DataFrame = {
-    val key = graft.Memo.fileTag(s"$dir/lineitem.parquet")
-    val stem = dir.replaceAll("[^A-Za-z0-9]", "_")
-    val srcDir = s"/tmp/graft_lvsrc_${stem}_$key"
-    if (!new java.io.File(s"$srcDir/_SUCCESS").exists()) {
+    val srcDir = graft.SideOutput("lvsrc", s"$dir/lineitem.parquet")(
       graft.graph.GraphBuilder.supplierCoEdges(spark, dir)
         .select(col("src"), col("dst"), col("weight"))
         .repartition(4)
-        .write.mode("overwrite").parquet(srcDir)
-    }
-    val sink = s"/tmp/graft_lvsink_${stem}_$key"
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles().foreach(rm)
-      f.delete(): Unit
-    }
-    if (new java.io.File(sink).exists()) rm(new java.io.File(sink))
+        .write.mode("overwrite").parquet(_))
+    val sink = graft.SideOutput.scratch("lvsink", s"$dir/lineitem.parquet")
     val schema = spark.read.parquet(srcDir).schema
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(srcDir)
@@ -1601,11 +1585,9 @@ object StreamingOps {
     * a stream in a batch table with per-batch idempotence (see
     * [[landBatch]]). The check re-reads the sink directory and
     * aggregates; equal to the same aggregation run in batch, which is
-    * the SQL oracle. The sink is ONE stable location keyed by the
-    * source file's identity (length ^ mtime, as the other side-output
-    * round-trips key theirs) — reruns overwrite it batch-by-batch
-    * (the operator's own idempotence) instead of leaking a fresh
-    * /tmp directory per invocation. */
+    * the SQL oracle. The sink is ONE stable location per source file
+    * ([[graft.SideOutput.scratch]], emptied at the start of each run)
+    * instead of a fresh temporary directory per invocation. */
   def streamForeachBatchAgg(spark: SparkSession, dir: String): DataFrame = {
     val batchSchema = spark.read.parquet(s"$dir/documents.parquet").schema
     val docs = spark.readStream
@@ -1614,8 +1596,7 @@ object StreamingOps {
       .option("maxFilesPerTrigger", "1")
       .parquet(dir)
       .select(col("doc_id"), col("lang"), col("n_chars"))
-    val key = graft.Memo.fileTag(s"$dir/documents.parquet")
-    val sink = s"/tmp/graft_fb_${dir.replaceAll("[^A-Za-z0-9]", "_")}_$key"
+    val sink = graft.SideOutput.scratch("fb", s"$dir/documents.parquet")
     val q = docs.writeStream.foreachBatch(landBatch(sink) _).start()
     try q.processAllAvailable()
     finally q.stop()
@@ -1690,14 +1671,10 @@ object StreamingOps {
     * Readout = the final MV, oracle-equal to the direct GROUP BY. */
   def streamIncrementalMv(spark: SparkSession, dir: String): DataFrame = {
     import graft.sources.MaterializedView
-    val key = graft.Memo.fileTag(s"$dir/orders.parquet")
-    val stem = dir.replaceAll("[^A-Za-z0-9]", "_")
-    val root = s"/tmp/graft_smv_${stem}_$key"
-    val landing = s"$root/landing"
-    val sink = s"$root/mv_state"
-    val orders = graft.Tables.orders(spark, dir)
-      .select(col("o_orderkey"), col("o_orderdate"), col("o_totalprice"))
-    if (!new java.io.File(landing).isDirectory) {
+    val root = graft.SideOutput("smv", s"$dir/orders.parquet") { root =>
+      val landing = s"$root/landing"
+      val orders = graft.Tables.orders(spark, dir)
+        .select(col("o_orderkey"), col("o_orderdate"), col("o_totalprice"))
       // Each batch lands as ONE renamed part-file (the pathGlobFilter
       // lesson: a directory named *.parquet is silently empty to the
       // file source).
@@ -1712,15 +1689,13 @@ object StreamingOps {
         java.nio.file.Files.move(part.toPath,
           java.nio.file.Paths.get(s"$landing/batch$b.parquet")): Unit
       }
-    }
-    if (MaterializedView.versions(sink).size != 3) {
       val stream = spark.readStream
         .schema(orders.schema)
         .option("maxFilesPerTrigger", "1")
         .parquet(landing)
       val q = stream.writeStream
         .foreachBatch { (df: DataFrame, id: Long) =>
-          MaterializedView.mergeDelta(spark, sink,
+          MaterializedView.mergeDelta(spark, s"$root/mv_state",
             MaterializedView.MvKeys, MaterializedView.MvSums,
             MaterializedView.ordersPartial(df), id): Unit
         }
@@ -1728,7 +1703,7 @@ object StreamingOps {
       try q.processAllAvailable()
       finally q.stop()
     }
-    MaterializedView.latest(spark, sink)
+    MaterializedView.latest(spark, s"$root/mv_state")
       .select(col("o_year"), col("n_orders"),
         round(col("cents") / 100.0, 2).as("sum_price"),
         expr("cents div n_orders").as("avg_cents"))
@@ -1794,16 +1769,7 @@ object StreamingOps {
     withStateParts(spark, approxKeys(spark, dir, "events", "user_id")) { spark =>
     import spark.implicits._
     import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
-    val key = graft.Memo.fileTag(s"$dir/events.parquet")
-    val stem = dir.replaceAll("[^A-Za-z0-9]", "_")
-    val srcDir = s"/tmp/graft_cdcsrc_${stem}_$key"
-    if (!new java.io.File(s"$srcDir/_SUCCESS").exists()) {
-      graft.Tables.events(spark, dir)
-        .select(col("user_id"), col("event_id"), col("ts"),
-          col("event_type"), col("value"))
-        .repartition(4)
-        .write.mode("overwrite").parquet(srcDir)
-    }
+    val srcDir = cdcSource(spark, dir)
     val schema = spark.read.parquet(srcDir).schema
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(srcDir)

@@ -135,7 +135,9 @@ class MemoSpec extends AnyFunSuite {
     def regenerate(bytes: Int, mtime: Long): (String, String, Long) = {
       java.nio.file.Files.write(f.toPath, new Array[Byte](bytes))
       assert(f.setLastModified(mtime))
-      (Memo.fileKey(Seq(f.getPath)), Memo.fileTag(f.getPath), f.length() ^ f.lastModified())
+      (Memo.fileKey(Seq(f.getPath)),
+        new java.io.File(SideOutput("filekey", f.getPath)(_ => ())).getName,
+        f.length() ^ f.lastModified())
     }
     val (k1, t1, x1) = regenerate(1024, m)
     val (k2, t2, x2) = regenerate(1032, m + 8)

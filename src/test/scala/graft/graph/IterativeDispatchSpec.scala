@@ -236,6 +236,8 @@ class IterativeDispatchSpec extends AnyFunSuite {
         "IterativeDispatchSpec (driver Kruskal == Borůvka)",
       "refineCommunities" -> "LeidenSpec (refineDriver == refineDistributed)",
       "louvainOnSuper" -> "IncrementalLouvainSpec (driver vs GraphX partitions)",
+      "superIdentityQ" ->
+        "IncrementalLouvainSpec (driver ledger Q == distributed modularityOf)",
       "connectedComponentsDF" ->
         "IterativeDispatchSpec (ConnectedComponentsDF union-find)",
       "connectedComponents" ->

@@ -205,6 +205,9 @@ class IncrementalLouvainSpec extends AnyFunSuite {
       .select(col("n_communities"), col("q_e6")).collect().head
     assert((nS, qS) == ((full.getLong(0), full.getLong(1))),
       s"super identity ($nS, $qS) != full modularityOf")
+    val dist = graft.graph.ForcedDispatch.distributed(spark, "superIdentityQ")(
+      StreamingOps.superIdentityQ(spark, sup))
+    assert(dist == ((nS, qS)), s"distributed super identity $dist != driver ($nS, $qS)")
   }
 
   test("estimator: planted over-coarsened state alarms; converged fold does not") {
