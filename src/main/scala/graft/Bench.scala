@@ -26,6 +26,7 @@ object Bench {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val repeat = math.max(sys.env.getOrElse("SPARK_GRAFT_REPEAT", "3").toInt, 1)
     val spark = Sessions.local(cpus)
+    SideOutput.dropOrphans()
     val failures = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
     // Optional local-iteration subset (comma-separated names). The
     // driver never sets it — full sweep remains the default.

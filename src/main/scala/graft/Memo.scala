@@ -151,7 +151,7 @@ object Memo {
     }
   }
 
-  private lazy val localConf = new Configuration()
+  private[graft] lazy val localConf = new Configuration()
 
   /** (mtime, length) of `path` from its Hadoop `FileStatus`; a missing
     * path reads as (0, 0). Metadata only. */

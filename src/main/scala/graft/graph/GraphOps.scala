@@ -2380,8 +2380,14 @@ object GraphOps {
       .join(lab.select(col("vertex").as("dst"), col("label").as("cb")), Seq("dst"))
       .filter(col("ca") === col("cb"))
       .groupBy(col("ca").as("label")).agg(sum(col("w")).as("w_in"))
-    val per = dC.join(inC, Seq("label"), "left")
-      .select(col("d_c"), coalesce(col("w_in"), lit(0L)).as("w_in"))
+    modularityLedger(dC.join(inC, Seq("label"), "left")
+      .select(col("d_c"), coalesce(col("w_in"), lit(0L)).as("w_in")), wl)
+  }
+
+  /** [[modularityOf]]'s one output row from per-community (d_c, w_in)
+    * rows and the (w) edge weights: the exact ledger 4m·Σw_in − Σd_c²
+    * and one final double division. */
+  private[graft] def modularityLedger(per: DataFrame, wl: DataFrame): DataFrame = {
     val tot = wl.agg(sum(col("w")).as("m"))
     per.agg(
         count(lit(1)).as("n_communities"),
@@ -2582,11 +2588,6 @@ object GraphOps {
     * edges; community-isolated vertices become singletons. Output is
     * bit-identical to [[refineDistributed]] (LeidenSpec pins the
     * equality on planted splits). */
-  private[graph] def refineDriver(spark: SparkSession, a: DataFrame,
-      intra: DataFrame): DataFrame =
-    refineRows(spark, a, intra.select(col("src"), col("dst")).collect()
-      .map(r => (r.getLong(0), r.getLong(1))))
-
   private def refineRows(spark: SparkSession, a: DataFrame,
       es: Array[(Long, Long)]): DataFrame = {
     val av = a.collect().map(r => (r.getLong(0), r.getLong(1)))
@@ -2599,7 +2600,7 @@ object GraphOps {
 
   /** Distributed refinement — the at-scale path: star-certificate
     * screen + iterative CC over suspect communities only. */
-  private[graph] def refineDistributed(spark: SparkSession, a: DataFrame,
+  private def refineDistributed(spark: SparkSession, a: DataFrame,
       intra: DataFrame): DataFrame = {
     val sizes = a.groupBy(col("community"))
       .agg(count(lit(1)).as("n"), min(col("vertex")).as("minv"))
@@ -2657,37 +2658,24 @@ object GraphOps {
     * (measured: 4 launches ≈ 8 s of the streaming fold, arithmetic
     * worth milliseconds; the tiny-fits-are-scheduling-bound lesson).
     * Past the bound — a genuinely huge batch or a fold holding
-    * millions of communities — the distributed GraphX path below is
-    * the 100 TB shape, unchanged. Fractional or null weights also go
-    * to GraphX: the driver ledger is exact-integer and would round
-    * them (weights in (0, 0.5) would vanish). */
+    * millions of communities — the rows go to [[Louvain.run]] as
+    * edges, the call [[louvain]] makes; its input contract reads an
+    * a == b row as internal weight, as the driver twin does.
+    * Fractional or null weights also go to GraphX: the driver ledger
+    * is exact-integer and would round them (weights in (0, 0.5) would
+    * vanish). */
   def louvainOnSuper(spark: SparkSession, sup: DataFrame): DataFrame =
     Dispatch.gated("louvainOnSuper", sup.select(col("a"), col("b"), col("w")),
         LocalLouvain.CollectMax, keys = Seq("a", "b"), admit = exactWeights("w")) { rs =>
       Some(spark.createDataFrame(
         LocalLouvain.clusterWithLevels(integralRows(rs).toSeq)._1.toSeq)
         .toDF("sv", "community"))
-    } { louvainOnSuperGraphX(spark, _) }
-
-  private[graft] def louvainOnSuperGraphX(spark: SparkSession,
-      sup: DataFrame): DataFrame = {
-    import org.apache.spark.graphx.{Edge, Graph, PartitionStrategy}
-    val vertRdd = sup
-      .select(explode(array(col("a"), col("b"))).as("sv")).distinct()
-      .join(sup.filter(col("a") === col("b"))
-        .select(col("a").as("sv"), col("w")), Seq("sv"), "left")
-      .select(col("sv").cast("long"), coalesce(col("w"), lit(0.0)).cast("double"))
-      .rdd.map(r => (r.getLong(0), r.getDouble(1)))
-    val edgeRdd = sup.filter(col("a") < col("b"))
-      .select(col("a").cast("long"), col("b").cast("long"),
-        col("w").cast("double"))
-      .rdd.map(r => Edge(r.getLong(0), r.getLong(1), r.getDouble(2)))
-    val g = Graph(vertRdd, edgeRdd, 0.0)
-      .partitionBy(PartitionStrategy.EdgePartition2D)
-    val (assignment, _) = Louvain.run(g)
-    spark.createDataFrame(assignment.map { case (id, c) => (id, c) })
-      .toDF("sv", "community")
-  }
+    } { cp =>
+      val (assignment, _) = Louvain.run(GraphBuilder.toGraphX(
+        cp.select(col("a").as("src"), col("b").as("dst"), col("w").as("weight"))))
+      spark.createDataFrame(assignment.map { case (id, c) => (id, c) })
+        .toDF("sv", "community")
+    }
 
   /** Per-level Louvain stats: modularity Q (scaled to e6 BIGINT for
     * stable comparison) and community count. */

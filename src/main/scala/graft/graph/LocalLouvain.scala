@@ -33,8 +33,8 @@ object LocalLouvain {
 
   /** Greedy one-level local moves: at most [[MaxPasses]] sweeps.
     *
-    * @param edges undirected (a, b, w) rows, a != b (self-loops are a
-    *              constant in Q — drop them before calling; their
+    * @param edges undirected (a, b, w) rows; an a == b row is internal
+    *              weight, a constant in Q, so the moves skip it (its
     *              degree contribution must already be in `deg`)
     * @param deg   GLOBAL weighted degree per vertex (2·self + Σ inc)
     * @param m     GLOBAL total edge weight (self-loops once)
@@ -98,31 +98,38 @@ object LocalLouvain {
     (comm.toMap.map(identity), gain)
   }
 
-  /** Δ(4m²·Q) of replacing one community (internal weight `wIn`,
-    * summed member degree `sumD`) by the parts of `assign` over its
-    * members — the closed form both probes report through:
-    * 4m·(Σ_p wIn_p − wIn) − (Σ_p sumd_p² − sumd²). */
-  def splitGain4m2(edges: Seq[(Long, Long, Long)], deg: Map[Long, Long],
-      m: BigInt, assign: Map[Long, Long]): BigInt = {
-    val wInP = mutable.LongMap.empty[BigInt].withDefaultValue(BigInt(0))
-    var wIn = BigInt(0)
-    edges.foreach { case (a, b, w) =>
-      wIn += w
-      if (assign(a) == assign(b)) wInP(assign(a)) += w
-    }
-    val sumdP = mutable.LongMap.empty[BigInt].withDefaultValue(BigInt(0))
-    var sumD = BigInt(0)
-    deg.foreach { case (v, d) => sumdP(assign(v)) += d; sumD += d }
-    val m4 = 4 * m
-    m4 * (wInP.values.sum - wIn) -
-      (sumdP.values.map(s => s * s).sum - sumD * sumD)
+  /** Weighted degree per vertex of super-graph rows (a, b, w): an
+    * a == b row is internal weight and counts 2w, any other row w at
+    * each end. The one reading of a row's degree in the library. */
+  def degrees(rows: Iterable[(Long, Long, Long)]): Map[Long, Long] = {
+    val deg = mutable.LongMap.empty[Long]
+    def add(v: Long, w: Long): Unit = deg(v) = deg.getOrElse(v, 0L) + w
+    rows.foreach { case (a, b, w) => if (a == b) add(a, 2 * w) else { add(a, w); add(b, w) } }
+    deg.toMap
   }
 
-  /** e6-scaled modularity delta from a Δ(4m²·Q) ledger: one double
-    * division at the very end (the modularityOf float rule). */
+  /** The exact modularity ledger 4m·Σw_in − Σ_c d_c² = 4m²·Q of
+    * `assign`: w_in sums the rows whose ends share a community (an
+    * a == b row counts w once), d_c sums `deg` over each community's
+    * members. Every driver-side Q and Q delta is a ledger or a
+    * difference of two. */
+  def ledger(rows: Iterable[(Long, Long, Long)], deg: Map[Long, Long], m: BigInt,
+      assign: Long => Long): BigInt = {
+    var wIn = BigInt(0)
+    rows.foreach { case (a, b, w) => if (assign(a) == assign(b)) wIn += w }
+    val sumd = mutable.LongMap.empty[BigInt]
+    deg.foreach { case (v, d) => val c = assign(v); sumd(c) = sumd.getOrElse(c, BigInt(0)) + d }
+    wIn * 4 * m - sumd.values.map(s => s * s).sum
+  }
+
+  /** Q from a ledger: one double division at the very end (the
+    * modularityOf float rule). */
+  def modularity(ledger: BigInt, m: BigInt): Double =
+    ledger.toDouble / (4.0 * m.toDouble * m.toDouble)
+
+  /** e6-scaled modularity (or modularity delta) from a ledger. */
   def gainE6(gain4m2: BigInt, m: BigInt): Long =
-    if (m == 0) 0L
-    else math.round(gain4m2.toDouble / (4.0 * m.toDouble * m.toDouble) * 1e6)
+    if (m == 0) 0L else math.round(modularity(gain4m2, m) * 1e6)
 
   /** Collect bound shared by every driver-side dispatch over a super
     * graph (the streaming fold, its drift estimator, and
@@ -178,22 +185,13 @@ object LocalLouvain {
     var level = 0
     var continue = m > 0
     while (continue) {
-      val deg = mutable.LongMap.empty[Long].withDefaultValue(0L)
-      cur.foreach { case (a, b, w) =>
-        if (a == b) deg(a) += 2 * w else { deg(a) += w; deg(b) += w }
-      }
+      val deg = degrees(cur)
       val init = deg.keys.map(v => v -> v).toMap
-      val (assign, _) =
-        localMoves(cur.filter(r => r._1 != r._2), deg.toMap.map(identity), m, init)
+      val (assign, _) = localMoves(cur, deg, m, init)
       // Q of this level's partition on this level's graph — equal to
       // the composed assignment's Q on the original graph
       // (contraction invariance).
-      var wIn = BigInt(0)
-      cur.foreach { case (a, b, w) => if (assign(a) == assign(b)) wIn += w }
-      val sumd = mutable.LongMap.empty[BigInt].withDefaultValue(BigInt(0))
-      deg.foreach { case (v, d) => sumd(assign(v)) += d }
-      val q = ((wIn * 4 * m - sumd.values.map(s => s * s).sum).toDouble
-        / (4.0 * m.toDouble * m.toDouble))
+      val q = modularity(ledger(cur, deg, m, assign), m)
       val nVert = init.size.toLong
       val nComm = assign.values.toSet.size.toLong
       levels += ((level, q, nComm, nVert))

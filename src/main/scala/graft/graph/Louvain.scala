@@ -15,7 +15,8 @@ import org.apache.spark.sql.SparkSession
   *                          pending round's broadcast delta (see
   *                          [[Louvain]]'s scale notes)
   * @param internalWeight    self-loop weight folded into this vertex
-  *                          (from compressed intra-community edges)
+  *                          (input self-loops, compressed
+  *                          intra-community edges)
   * @param nodeWeight        Σ of incident (non-loop) edge weights
   * @param changed           moved in the last local-move round
   */
@@ -267,6 +268,13 @@ object Louvain extends Serializable {
     * is returned, the level stays out of the trail, and the run stops.
     * The returned assignment therefore scores the best level's Q.
     *
+    * Input contract: a vertex attribute is that vertex's internal
+    * weight, and a self-loop edge (v, v, w) is internal weight too: it
+    * adds w to the vertex's internal weight and 2w to its degree, and
+    * it is never a move target. A graph with its loops given as edges
+    * and the same graph with those weights given as vertex attributes
+    * return the same result.
+    *
     * @return (final vertexId → communityId assignment, per-level stats)
     */
   def run(
@@ -274,7 +282,7 @@ object Louvain extends Serializable {
       resolution: Double = 1.0): (RDD[(VertexId, Long)], Seq[LouvainLevel]) = {
 
     // m2 = 2m: every edge counts twice, every self-loop twice.
-    var working = initialize(graph)
+    var (working, release) = initialize(graph)
     val m2 = working.vertices
       .map { case (_, st) => st.nodeWeight + 2.0 * st.internalWeight }
       .sum()
@@ -296,7 +304,7 @@ object Louvain extends Serializable {
       // modularity materialized moved's edge view; the graphs it was
       // derived from can go.
       phase.release()
-      var next = Option.empty[Graph[LouvainState, Double]]
+      var next = Option.empty[(Graph[LouvainState, Double], () => Unit)]
       // A level below its predecessor's Q is dropped (see above).
       if (q >= prevQ - 1e-12) {
         val nComm = moved.vertices.map { case (_, st) => st.community }.distinct().count()
@@ -319,7 +327,7 @@ object Louvain extends Serializable {
         prevQ = q
         level += 1
         if (improved && level < MaxLevels && nComm < nVert) {
-          val compressed = compress(moved)
+          val (compressed, releaseCompressed) = compress(moved)
           // Materialize BEFORE unpersisting the parents: compress() is
           // lazy, and letting the next level trigger it after the
           // unpersist would replay the whole local-move phase from
@@ -329,27 +337,39 @@ object Louvain extends Serializable {
           // at the next fold's inner join.
           compressed.vertices.count()
           compressed.edges.count()
-          next = Some(compressed)
+          next = Some((compressed, releaseCompressed))
         }
       }
       working.unpersist(blocking = false)
       moved.unpersist(blocking = false)
-      next.foreach(working = _)
+      release()
+      next.foreach { case (g, r) => working = g; release = r }
       continue = next.isDefined
     }
     (assignment, levels.toSeq)
   }
 
-  /** Each vertex starts in its own community. nodeWeight = Σ incident
-    * edge weights (computed with one aggregateMessages pass). */
-  private def initialize(graph: Graph[Double, Double]): Graph[LouvainState, Double] = {
-    val nodeWeights: VertexRDD[Double] = graph.aggregateMessages[Double](
-      ctx => { ctx.sendToSrc(ctx.attr); ctx.sendToDst(ctx.attr) },
-      _ + _)
-    graph.outerJoinVertices(nodeWeights) { (id, internal, wOpt) =>
-      val w = wOpt.getOrElse(0.0)
+  /** Each vertex starts in its own community. A self-loop edge is
+    * internal weight: its weight joins the vertex attribute in
+    * internalWeight and the edge is dropped, so nodeWeight sums the
+    * non-loop incident edges (one aggregateMessages pass) and the
+    * degree, nodeWeight + 2·internal, counts a loop twice. The second
+    * value frees `graph` and the intermediate states; call it once the
+    * returned graph is materialized. */
+  private def initialize(graph: Graph[Double, Double])
+      : (Graph[LouvainState, Double], () => Unit) = {
+    val weights: VertexRDD[(Double, Double)] = graph.aggregateMessages[(Double, Double)](
+      ctx =>
+        if (ctx.srcId == ctx.dstId) ctx.sendToSrc((0.0, ctx.attr))
+        else { ctx.sendToSrc((ctx.attr, 0.0)); ctx.sendToDst((ctx.attr, 0.0)) },
+      (a, b) => (a._1 + b._1, a._2 + b._2))
+    val states = graph.outerJoinVertices(weights) { (id, attr, wOpt) =>
+      val (w, loops) = wOpt.getOrElse((0.0, 0.0))
+      val internal = attr + loops
       LouvainState(id, w + 2.0 * internal, internal, w, changed = false)
-    }.cache()
+    }
+    (states.subgraph(epred = t => t.srcId != t.dstId).cache(),
+      () => { states.unpersist(blocking = false); graph.unpersist(blocking = false) })
   }
 
   private def degree(st: LouvainState): Double =
@@ -533,36 +553,20 @@ object Louvain extends Serializable {
     2.0 * wIn / m2 - resolution * sigmaSq
   }
 
-  /** Collapse communities to super-vertices: intra-community edge
-    * weight + member internal weight → new self weight; inter-community
-    * edges sum into single canonical edges. */
-  private def compress(g: Graph[LouvainState, Double]): Graph[LouvainState, Double] = {
-    val intra: RDD[(Long, Double)] = g.triplets
-      .filter(t => t.srcAttr.community == t.dstAttr.community)
-      .map(t => (t.srcAttr.community, t.attr))
-    val internal: RDD[(Long, Double)] = g.vertices
-      .map { case (_, st) => (st.community, st.internalWeight) }
-    val newInternal: RDD[(VertexId, Double)] =
-      intra.union(internal).reduceByKey(_ + _)
-
-    val newEdges: RDD[Edge[Double]] = g.triplets
-      .filter(t => t.srcAttr.community != t.dstAttr.community)
+  /** Collapse communities to super-vertices: one pass keys every
+    * edge by its (min, max) community pair and every vertex's internal
+    * weight by (c, c), one reduceByKey sums them, and [[initialize]]
+    * reads the (c, c) rows as the super-vertex's internal weight. */
+  private def compress(g: Graph[LouvainState, Double])
+      : (Graph[LouvainState, Double], () => Unit) = {
+    val pairs: RDD[((Long, Long), Double)] = g.triplets
       .map { t =>
-        val a = math.min(t.srcAttr.community, t.dstAttr.community)
-        val b = math.max(t.srcAttr.community, t.dstAttr.community)
-        ((a, b), t.attr)
+        val (a, b) = (t.srcAttr.community, t.dstAttr.community)
+        ((math.min(a, b), math.max(a, b)), t.attr)
       }
-      .reduceByKey(_ + _)
+      .union(g.vertices.map { case (_, st) => ((st.community, st.community), st.internalWeight) })
+    val edges = pairs.reduceByKey(_ + _, g.edges.getNumPartitions)
       .map { case ((a, b), w) => Edge(a, b, w) }
-
-    val base = Graph(newInternal, newEdges, 0.0)
-      .partitionBy(PartitionStrategy.EdgePartition2D)
-    val nodeWeights = base.aggregateMessages[Double](
-      ctx => { ctx.sendToSrc(ctx.attr); ctx.sendToDst(ctx.attr) },
-      _ + _)
-    base.outerJoinVertices(nodeWeights) { (id, internalW, wOpt) =>
-      val w = wOpt.getOrElse(0.0)
-      LouvainState(id, w + 2.0 * internalW, internalW, w, changed = false)
-    }.cache()
+    initialize(Graph.fromEdges(edges, 0.0).partitionBy(PartitionStrategy.EdgePartition2D))
   }
 }

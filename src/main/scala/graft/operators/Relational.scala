@@ -493,24 +493,18 @@ object Relational {
     * the join key. Separate from [[qBucketJoin]] so the spec can
     * inspect the join plan without paying the write. */
   def writeBucketedTables(spark: SparkSession, dir: String, buckets: Int = 8): Unit = {
-    // A fresh session's in-memory catalog doesn't know tables a prior
-    // JVM wrote, but their warehouse directories survive — clear both
-    // or the managed-table CREATE fails with LOCATION_ALREADY_EXISTS.
-    Seq("graft_orders_b", "graft_customer_b").foreach { name =>
-      spark.sql(s"DROP TABLE IF EXISTS $name")
-      val wh = spark.conf.get("spark.sql.warehouse.dir")
-      val path = new org.apache.hadoop.fs.Path(wh, name)
-      val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(path)) fs.delete(path, true)
-    }
+    // External tables in this process's scratch directory: the shared
+    // working directory's spark-warehouse would let two JVMs overwrite
+    // each other's table files mid-read.
+    val root = graft.SideOutput.scratch("bucketjoin", s"$dir/orders.parquet")
     Tables.orders(spark, dir)
       .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
-      .write.mode("overwrite")
+      .write.mode("overwrite").option("path", s"$root/orders")
       .bucketBy(buckets, "o_custkey").sortBy("o_custkey")
       .saveAsTable("graft_orders_b")
     Tables.customer(spark, dir)
       .select(col("c_custkey"), col("c_mktsegment"))
-      .write.mode("overwrite")
+      .write.mode("overwrite").option("path", s"$root/customer")
       .bucketBy(buckets, "c_custkey").sortBy("c_custkey")
       .saveAsTable("graft_customer_b")
   }

@@ -1148,14 +1148,18 @@ object StreamingOps {
         }
         (l, s)
       }
-      // Contract batch edges through the current labels; unlabeled
-      // (new) vertices stay themselves — same coalesce as the fold.
-      rows.foreach { r =>
-        val a0 = lab.getOrElse(r.getLong(0), r.getLong(0))
-        val b0 = lab.getOrElse(r.getLong(1), r.getLong(1))
-        val k = if (a0 <= b0) (a0, b0) else (b0, a0)
-        sup(k) = sup.getOrElse(k, 0.0) + r.getDouble(2)
+      // Adds (a, b, w) to `into` under the (min, max) pair of its
+      // ends' labels: the fold's one contraction.
+      def contract(into: scala.collection.mutable.HashMap[(Long, Long), Double],
+          label: Long => Long)(a: Long, b: Long, w: Double): Unit = {
+        val (x, y) = (label(a), label(b))
+        val k = if (x <= y) (x, y) else (y, x)
+        into(k) = into.getOrElse(k, 0.0) + w
       }
+      // Batch edges go through the current labels; unlabeled (new)
+      // vertices stay themselves — same coalesce as the fold.
+      rows.foreach(r => contract(sup, v => lab.getOrElse(v, v))(
+        r.getLong(0), r.getLong(1), r.getDouble(2)))
       val assign = LocalLouvain.clusterWithLevels(
         sup.iterator.map { case ((a, b), w) => (a, b, math.round(w)) }.toSeq)._1
       val prevComms = lab.values.toSet
@@ -1165,11 +1169,7 @@ object StreamingOps {
       }
       assign.foreach { case (sv, c) => if (!prevComms(sv)) newLab(sv) = c }
       val sup2 = scala.collection.mutable.HashMap.empty[(Long, Long), Double]
-      sup.foreach { case ((a, b), w) =>
-        val ca = assign(a); val cb = assign(b)
-        val k = if (ca <= cb) (ca, cb) else (cb, ca)
-        sup2(k) = sup2.getOrElse(k, 0.0) + w
-      }
+      sup.foreach { case ((a, b), w) => contract(sup2, assign)(a, b, w) }
       newLab.toSeq.toDF("vertex", "community").coalesce(1)
         .write.mode("overwrite").parquet(s"$sink/v$id/labels")
       sup2.toSeq.map { case ((a, b), w) => (a, b, w) }
@@ -1221,12 +1221,9 @@ object StreamingOps {
       .select(col("vertex"), col("c2").as("community"))
       .unionByName(superAssign.join(prevComms, Seq("sv"), "left_anti")
         .select(col("sv").as("vertex"), col("community")))
-    val sup2 = sup1
-      .join(superAssign.select(col("sv").as("a"), col("community").as("ca")), Seq("a"))
-      .join(superAssign.select(col("sv").as("b"), col("community").as("cb")), Seq("b"))
-      .select(least(col("ca"), col("cb")).as("a"),
-        greatest(col("ca"), col("cb")).as("b"), col("w"))
-      .groupBy(col("a"), col("b")).agg(sum(col("w")).as("w"))
+    val sup2 = contractThrough(
+      sup1.select(col("a").as("src"), col("b").as("dst"), col("w").as("weight")),
+      superAssign.select(col("sv").as("vertex"), col("community")))
     newLabels.write.mode("overwrite").parquet(s"$sink/v$id/labels")
     sup2.write.mode("overwrite").parquet(s"$sink/v$id/super")
     // Scratch release (round 20, the item-9 sweep): both writes have
@@ -1236,6 +1233,17 @@ object StreamingOps {
     sup1.unpersist(false)
     superAssign.unpersist(false): Unit
   }
+
+  /** Communities the drift estimator's split probe visits. */
+  private val DriftProbeK = 8
+
+  /** Sampled intra-edge pairs the split probe spends, shared across
+    * its communities. */
+  private val DriftIntraBudget = 1L << 18
+
+  /** Estimated drift (e6 modularity) above which an audit replaces the
+    * fold's state with a fresh batch Louvain. */
+  private[graft] val DriftRefreshE6 = 50000L
 
   /** Counts every full batch-Louvain reference the audits PAY —
     * the round-14 contract is that a no-drift stream never pays one
@@ -1262,7 +1270,7 @@ object StreamingOps {
     *    rows (a graph OVER COMMUNITIES — tiny next to the corpus),
     *    else falls back to the distributed [[graft.graph.GraphOps
     *    .louvainOnSuper]].
-    *  - SPLIT probe: for the top-`probeK` communities by internal
+    *  - SPLIT probe: for the top-[[DriftProbeK]] communities by internal
     *    weight (the self-loop ledger the super state carries), local
     *    moves from SINGLETONS over the community's induced intra
     *    edges, scored with the GLOBAL m and GLOBAL degrees (the
@@ -1287,26 +1295,17 @@ object StreamingOps {
     * at most an audit interval. Returns the estimated gap as e6
     * modularity. */
   private[graft] def louvainDriftGapE6(spark: SparkSession, edges: DataFrame,
-      labels: DataFrame, sup: DataFrame, probeK: Int = 8,
-      intraBudget: Long = 1L << 18): Long = {
+      labels: DataFrame, sup: DataFrame): Long = {
     import graft.graph.LocalLouvain
     val supN = sup.count()
     val (mergeGain4m2, m) =
       if (supN <= LocalLouvain.CollectMax) {
         val rows = sup.select(col("a"), col("b"), col("w").cast("double"))
           .collect().map(r => (r.getLong(0), r.getLong(1),
-            math.round(r.getDouble(2))))
+            math.round(r.getDouble(2)))).toSeq
         val m0 = BigInt(rows.map(_._3).sum)
-        val deg = scala.collection.mutable.LongMap.empty[Long]
-          .withDefaultValue(0L)
-        rows.foreach { case (a, b, w) =>
-          if (a == b) deg(a) += 2 * w else { deg(a) += w; deg(b) += w }
-        }
-        val verts = deg.keys.toArray
-        val init = verts.map(v => v -> v).toMap
-        val (_, g) = LocalLouvain.localMoves(
-          rows.filter(r => r._1 != r._2).toSeq,
-          deg.toMap.map(identity), m0, init)
+        val deg = LocalLouvain.degrees(rows)
+        val (_, g) = LocalLouvain.localMoves(rows, deg, m0, deg.keys.map(v => v -> v).toMap)
         (g, m0)
       } else {
         // Distributed fallback: the super graph itself outgrew the
@@ -1315,26 +1314,23 @@ object StreamingOps {
         // of its assignment vs identity on the SAME super edges.
         val supE = sup.select(col("a").as("src"), col("b").as("dst"),
           col("w").as("weight"))
-        val idLab = supE.select(explode(array(col("src"), col("dst")))
-          .as("vertex")).distinct()
-          .select(col("vertex"), col("vertex").as("label"))
         val a2 = graft.graph.GraphOps.louvainOnSuper(spark, sup)
           .select(col("sv").as("vertex"), col("community").as("label"))
-        def q(l: DataFrame): Long = graft.graph.GraphOps
-          .modularityOf(supE, l).select(col("q_e6")).collect().head.getLong(0)
+        val qA2 = graft.graph.GraphOps.modularityOf(supE, a2)
+          .select(col("q_e6")).collect().head.getLong(0)
         val mTot = BigInt(math.round(
           sup.agg(sum(col("w"))).collect().head.getDouble(0)))
         // already e6 — route through the 4m² ledger for one return path
-        val gE6 = math.max(0L, q(a2) - q(idLab))
+        val gE6 = math.max(0L, qA2 - superIdentityQ(spark, sup)._2)
         (BigInt(gE6) * 4 * mTot * mTot / 1000000, mTot)
       }
     if (m == 0) return 0L
     // Split probe: top-K communities by internal (self-loop) weight.
     val probed = sup.filter(col("a") === col("b"))
       .orderBy(col("w").desc, col("a"))
-      .limit(probeK)
+      .limit(DriftProbeK)
       .select(col("a")).collect().map(_.getLong(0))
-    var splitGain4m2 = BigInt(0)
+    var splitGain = BigInt(0)
     if (probed.nonEmpty) {
       val nByC = labels.filter(col("community").isin(probed: _*))
         .groupBy(col("community")).agg(count(lit(1)).as("n"))
@@ -1344,7 +1340,7 @@ object StreamingOps {
       // NoSuchElementException from the rate lookup below.
       val probedKnown = probed.filter(nByC.contains)
       val budgetC = math.max(1L,
-        intraBudget / math.max(1, probedKnown.length))
+        DriftIntraBudget / math.max(1, probedKnown.length))
       // keep-rate per community: expected sampled pairs ≤ budget even
       // on a complete community (n·r choose 2 ≈ (n·r)²/2 ≤ budget)
       val rateE6: Map[Long, Long] = nByC.map { case (c, n) =>
@@ -1387,15 +1383,16 @@ object StreamingOps {
           .map(r => r._2 -> r._3).toMap
         if (es.nonEmpty && deg.nonEmpty) {
           val init = deg.keys.map(v => v -> v).toMap
-          val (assign, _) = graft.graph.LocalLouvain.localMoves(
-            es, deg, m, init)
-          val g = graft.graph.LocalLouvain.splitGain4m2(es, deg, m, assign)
-          if (g > 0) splitGain4m2 += g
+          val (assign, _) = LocalLouvain.localMoves(es, deg, m, init)
+          // Δ(4m²·Q) of replacing the one community by its parts.
+          val g = LocalLouvain.ledger(es, deg, m, assign) -
+            LocalLouvain.ledger(es, deg, m, _ => c)
+          if (g > 0) splitGain += g
         }
       }
     }
-    graft.graph.LocalLouvain.gainE6(
-      (if (mergeGain4m2 > 0) mergeGain4m2 else BigInt(0)) + splitGain4m2, m)
+    LocalLouvain.gainE6(
+      (if (mergeGain4m2 > 0) mergeGain4m2 else BigInt(0)) + splitGain, m)
   }
 
   /** (n_communities, q_e6) of the CURRENT streamed labels, computed
@@ -1417,31 +1414,20 @@ object StreamingOps {
         LocalLouvain.CollectMax, keys = Seq("a", "b"),
         admit = Seq(Dispatch.noNulls(col("w")), Dispatch.integral(col("w")))) { rs =>
       val rows = rs.map(r => (r.getLong(0), r.getLong(1),
-        math.round(r.getAs[Number](2).doubleValue)))
-      val deg = scala.collection.mutable.LongMap.empty[Long]
-        .withDefaultValue(0L)
-      val wIn = scala.collection.mutable.LongMap.empty[Long]
-        .withDefaultValue(0L)
-      rows.foreach { case (a, b, w) =>
-        if (a == b) { deg(a) += 2 * w; wIn(a) += w }
-        else { deg(a) += w; deg(b) += w }
-      }
+        math.round(r.getAs[Number](2).doubleValue))).toSeq
+      val deg = LocalLouvain.degrees(rows)
       val m = BigInt(rows.map(_._3).sum)
-      val n = deg.keys.size.toLong
-      if (m == 0) Some((n, 0L))
-      else {
-        val aSum = BigInt(wIn.values.sum)
-        val bSum = deg.values.map(d => BigInt(d) * d).sum
-        Some((n, math.round((aSum * 4 * m - bSum).toDouble /
-          (4.0 * m.toDouble * m.toDouble) * 1e6)))
-      }
+      Some((deg.size.toLong, LocalLouvain.gainE6(LocalLouvain.ledger(rows, deg, m, identity), m)))
     } { cp =>
-      val supE = cp.select(col("a").as("src"), col("b").as("dst"),
-        col("w").as("weight"))
-      val idLab = supE.select(explode(array(col("src"), col("dst")))
-        .as("vertex")).distinct()
-        .select(col("vertex"), col("vertex").as("label"))
-      val r = graft.graph.GraphOps.modularityOf(supE, idLab)
+      // Each super-vertex is its own community: d_c is its degree
+      // (both ends of every row, so an a == b row counts twice) and
+      // w_in its a == b weight.
+      val wl = cp.select(col("a"), col("b"), col("w").cast("long").as("w"))
+      val per = wl.select(col("a").as("sv"), col("w"),
+          when(col("a") === col("b"), col("w")).otherwise(0L).as("w_in"))
+        .unionAll(wl.select(col("b").as("sv"), col("w"), lit(0L).as("w_in")))
+        .groupBy(col("sv")).agg(sum(col("w")).as("d_c"), sum(col("w_in")).as("w_in"))
+      val r = graft.graph.GraphOps.modularityLedger(per, wl)
         .select(col("n_communities"), col("q_e6")).collect().head
       (r.getLong(0), r.getLong(1))
     }
@@ -1474,7 +1460,7 @@ object StreamingOps {
     * ((id+1) % auditEvery == 0) it computes the BOUNDED drift
     * estimate ([[louvainDriftGapE6]] — split + merge probes, never a
     * batch reference) and when the estimate
-    * exceeds `gapThresholdE6` REPLACES v<id> wholesale on the SAME
+    * exceeds [[DriftRefreshE6]] REPLACES v<id> wholesale on the SAME
     * (labels + super) state layout: labels = the fresh batch
     * assignment, super = the accumulated edges contracted through it
     * (exactly what Louvain's own compression emits), so later
@@ -1486,7 +1472,7 @@ object StreamingOps {
     * so later-landed batches never leak into a replayed audit).
     * IncrementalLouvainSpec pins recovery + replay. */
   private[graft] def mergeLouvainAudited(sink: String, accumDir: String,
-      gapThresholdE6: Long = 50000L, auditEvery: Int = 4)(
+      auditEvery: Int = 4)(
       df: DataFrame, id: Long): Unit = {
     val spark = df.sparkSession
     df.select(col("src"), col("dst"), col("weight").cast("double"))
@@ -1505,20 +1491,25 @@ object StreamingOps {
       // local moves (batchAuditCount pins "never paid" in the spec).
       val labels = spark.read.parquet(s"$sink/v$id/labels")
       val sup = spark.read.parquet(s"$sink/v$id/super")
-      val estGap = louvainDriftGapE6(spark, accum, labels, sup)
-      if (estGap > gapThresholdE6) {
-        batchAuditCount.incrementAndGet()
-        val fresh = graft.graph.GraphOps.louvain(spark, accum)
-          .localCheckpoint(true)
-        val supFresh = contractThrough(accum, fresh).localCheckpoint(true)
-        fresh.write.mode("overwrite").parquet(s"$sink/v$id/labels")
-        supFresh.write.mode("overwrite").parquet(s"$sink/v$id/super")
-        // The refresh replaced v<id> wholesale — the driver carry for
-        // this sink now describes the pre-refresh state; drop it so
-        // the next fold re-reads the refreshed parquet.
-        louvainFoldCarry.remove(sink): Unit
-      }
+      if (louvainDriftGapE6(spark, accum, labels, sup) > DriftRefreshE6)
+        refreshFold(spark, sink, id, accum): Unit
     }
+  }
+
+  /** Replaces the fold state `v<id>` wholesale with a batch Louvain of
+    * `edges` (src, dst, weight) and the edges contracted through it,
+    * counts the run in [[batchAuditCount]], and drops the sink's driver
+    * carry, which now describes the pre-refresh state. Returns the
+    * fresh super state. */
+  private def refreshFold(spark: SparkSession, sink: String, id: Long,
+      edges: DataFrame): DataFrame = {
+    batchAuditCount.incrementAndGet()
+    val fresh = graft.graph.GraphOps.louvain(spark, edges).localCheckpoint(true)
+    val supFresh = contractThrough(edges, fresh).localCheckpoint(true)
+    fresh.write.mode("overwrite").parquet(s"$sink/v$id/labels")
+    supFresh.write.mode("overwrite").parquet(s"$sink/v$id/super")
+    louvainFoldCarry.remove(sink)
+    supFresh
   }
 
   /** Incremental Louvain label maintenance over a streamed weighted
@@ -1561,21 +1552,9 @@ object StreamingOps {
     val labels = spark.read.parquet(s"$sink/v$last/labels")
     val sup = spark.read.parquet(s"$sink/v$last/super")
     val estGap = louvainDriftGapE6(spark, edges, labels, sup)
-    val refreshed = estGap > 50000L
+    val refreshed = estGap > DriftRefreshE6
     val (ncOut, qOut) =
-      if (!refreshed) superIdentityQ(spark, sup)
-      else {
-        batchAuditCount.incrementAndGet()
-        val batchLab = graft.graph.GraphOps.louvain(spark, edges)
-          .localCheckpoint(true)
-        val supFresh = contractThrough(
-          edges.select(col("src"), col("dst"), col("weight")), batchLab)
-          .localCheckpoint(true)
-        batchLab.write.mode("overwrite").parquet(s"$sink/v$last/labels")
-        supFresh.write.mode("overwrite").parquet(s"$sink/v$last/super")
-        louvainFoldCarry.remove(sink): Unit
-        superIdentityQ(spark, supFresh)
-      }
+      superIdentityQ(spark, if (refreshed) refreshFold(spark, sink, last, edges) else sup)
     import spark.implicits._
     Seq((ncOut, qOut, estGap, if (refreshed) 1L else 0L))
       .toDF("n_comm_streamed", "q_e6_streamed", "est_gap_e6", "refreshed")

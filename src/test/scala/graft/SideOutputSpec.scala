@@ -67,7 +67,8 @@ class SideOutputSpec extends AnyFunSuite {
     assert(fresh != old)
     assert(build.calls == 2)
     val family = new File(fresh).getParentFile
-    assert(family.list().toSeq == Seq(new File(fresh).getName))
+    // The family also holds its lock file and its recorded source.
+    assert(family.list().filterNot(Set(".lock", "_source")).toSeq == Seq(new File(fresh).getName))
     assert(!new File(old).exists())
     assert(SideOutput("spec", src.getPath)(build) == fresh && build.calls == 2)
   }
@@ -111,6 +112,47 @@ class SideOutputSpec extends AnyFunSuite {
     val second = SideOutput.scratch("specsink", src)
     assert(second == first)
     assert(new File(second).isDirectory && new File(second).list().isEmpty)
+  }
+
+  test("scratch is per process: a live process's directory stays, a dead one's goes") {
+    val src = plant().getPath
+    val mine = new File(SideOutput.scratch("specsink", src))
+    assert(mine.getName == s"run_${ProcessHandle.current().pid()}")
+    val family = mine.getParentFile
+    // pid 1 is always alive; no Linux pid reaches 999999999.
+    val (live, dead) = (new File(family, "run_1"), new File(family, "run_999999999"))
+    Seq(live, dead).foreach(d => Files.createDirectories(d.toPath))
+    SideOutput.scratch("specsink", src)
+    assert(live.isDirectory, "a live process's scratch directory was deleted")
+    assert(!dead.exists(), "a dead process's scratch directory was kept")
+  }
+
+  test("threads asking for one fixture at once build it once") {
+    val src = plant().getPath
+    val build = new CountingBuild
+    val slow: String => Unit = { p => Thread.sleep(200); build(p) }
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
+    try {
+      val ask = new java.util.concurrent.Callable[String] {
+        def call(): String = SideOutput("spec", src)(slow)
+      }
+      val gens = (0 until 4).map(_ => pool.submit(ask)).map(_.get()).distinct
+      assert(gens.size == 1 && marked(gens.head))
+      assert(build.calls == 1, s"built ${build.calls} times")
+    } finally pool.shutdown()
+  }
+
+  test("dropOrphans deletes a family whose source is gone and keeps a live one") {
+    val (gone, live) = (plant(), plant())
+    val build = new CountingBuild
+    val goneFamily = new File(SideOutput("spec", gone.getPath)(build)).getParentFile
+    val liveGen = SideOutput("spec", live.getPath)(build)
+    assert(new String(Files.readAllBytes(goneFamily.toPath.resolve("_source")),
+      StandardCharsets.UTF_8) == gone.getPath)
+    assert(gone.delete())
+    SideOutput.dropOrphans()
+    assert(!goneFamily.exists(), "the orphaned family was kept")
+    assert(marked(liveGen), "a family whose source exists was dropped")
   }
 
   test("source guard: every on-disk fixture goes through graft.SideOutput") {

@@ -234,8 +234,8 @@ class IterativeDispatchSpec extends AnyFunSuite {
       "louvainFor" -> "IterativeDispatchSpec (louvain family partitions)",
       "minimumSpanningForestUncached" ->
         "IterativeDispatchSpec (driver Kruskal == Borůvka)",
-      "refineCommunities" -> "LeidenSpec (refineDriver == refineDistributed)",
-      "louvainOnSuper" -> "IncrementalLouvainSpec (driver vs GraphX partitions)",
+      "refineCommunities" -> "LeidenSpec (measured == forced distributed refinement)",
+      "louvainOnSuper" -> "IncrementalLouvainSpec (measured vs forced GraphX partitions)",
       "superIdentityQ" ->
         "IncrementalLouvainSpec (driver ledger Q == distributed modularityOf)",
       "connectedComponentsDF" ->
@@ -308,6 +308,54 @@ class IterativeDispatchSpec extends AnyFunSuite {
     // both engines must agree on the one-community optimum; richer
     // planted agreement lives in IncrementalLouvainSpec.
     assert(drv == dist, s"driver $drv != graphx $dist")
+  }
+
+  test("louvain family: on a planted graph with self-loops each path's level Q is " +
+      "its own modularityOf and recovers the planted partition") {
+    // The twin (sequential exact moves) and GraphX (parity-synchronous
+    // moves) are different algorithms; what they share is the
+    // contract: the last level's Q scores the assignment returned, and
+    // both find the planted communities (integral weights, 80% of
+    // draws inside a community of 20, a loop on every 25th vertex):
+    // no planted community is split, and the Q gap bounds merges (two
+    // merged communities would cost about 0.02).
+    import org.apache.spark.sql.functions.col
+    import spark.implicits._
+    val size = 20
+    val r = new scala.util.Random(17)
+    val acc = scala.collection.mutable.Map[(Long, Long), Double]()
+    (0 until 2000).foreach { _ =>
+      val a = r.nextInt(200)
+      val b = if (r.nextDouble() < 0.8) (a / size) * size + r.nextInt(size) else r.nextInt(200)
+      if (a != b) {
+        val k = (math.min(a, b).toLong, math.max(a, b).toLong)
+        acc(k) = acc.getOrElse(k, 0.0) + (1 + r.nextInt(5))
+      }
+    }
+    (0L until 200L by 25L).foreach(v => acc((v, v)) = 3.0)
+    val e = acc.toSeq.sorted.map { case ((a, b), w) => (a, b, w) }.toDF("src", "dst", "weight")
+    def qOf(labels: DataFrame): Long =
+      GraphOps.modularityOf(e, labels).select(col("q_e6")).collect().head.getLong(0)
+    val plantedQ = qOf((0L until 200L).map(v => (v, v / size)).toDF("vertex", "label"))
+    val planted = (0L until 200L).groupBy(_ / size).values.toSeq
+    def path(): (Map[Long, Long], Long, Long) = {
+      GraphOps.clearAllMemos(spark)
+      val assign = GraphOps.louvain(spark, e).localCheckpoint(true)
+      val last = GraphOps.louvainLevels(spark, e).orderBy(col("level").desc)
+        .select(col("modularity_e6")).collect().head.getLong(0)
+      (assign.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap, last,
+        qOf(assign.select(col("vertex"), col("community").as("label"))))
+    }
+    val twin = path()
+    val graphx = ForcedDispatch.distributed(spark, "louvainFor")(path())
+    GraphOps.clearAllMemos(spark)
+    val gapE6 = 2000L
+    Seq("twin" -> twin, "graphx" -> graphx).foreach { case (name, (comm, levelQ, ownQ)) =>
+      assert(math.abs(levelQ - ownQ) <= 1L, s"$name: level Q $levelQ != modularityOf $ownQ")
+      val split = planted.filter(_.map(comm).distinct.size > 1)
+      assert(split.isEmpty, s"$name split planted communities: $split")
+      assert(ownQ >= plantedQ - gapE6, s"$name: Q $ownQ more than $gapE6 below planted $plantedQ")
+    }
   }
 
   test("hits: driver twin == DataFrame loop, bit for bit") {

@@ -73,30 +73,20 @@ class LeidenSpec extends AnyFunSuite {
     // The three-flavor screen fixture (certified triangle, suspect
     // 4-path, genuinely split pairs) plus a community-isolated vertex
     // — both dispatch paths must emit the identical (vertex,
-    // community_louvain, community) rows. refineCommunities itself
-    // dispatches driver-side at this size, so the distributed body is
-    // exercised explicitly here to keep the at-scale path pinned.
+    // community_louvain, community) rows. refineCommunities dispatches
+    // driver-side at this size, so the override forces the at-scale
+    // path to keep it pinned.
     val e = edgesDf((1L, 2L), (2L, 3L), (1L, 3L),
       (10L, 11L), (11L, 12L), (12L, 13L),
       (20L, 21L), (22L, 23L), (3L, 30L))
     val a = Seq((1L, 50L), (2L, 50L), (3L, 50L),
       (10L, 60L), (11L, 60L), (12L, 60L), (13L, 60L),
       (20L, 70L), (21L, 70L), (22L, 70L), (23L, 70L), (30L, 80L))
-      .toDF("vertex", "community").localCheckpoint(true)
-    val intra = e.select(col("src"), col("dst"))
-      .filter(col("src") =!= col("dst"))
-      .join(a.select(col("vertex").as("src"), col("community").as("cs")), Seq("src"))
-      .join(a.select(col("vertex").as("dst"), col("community").as("cd")), Seq("dst"))
-      .filter(col("cs") === col("cd"))
-      .select(org.apache.spark.sql.functions.least(col("src"), col("dst")).as("src"),
-        org.apache.spark.sql.functions.greatest(col("src"), col("dst")).as("dst"),
-        col("cs").as("community"))
-      .distinct()
-      .localCheckpoint(true)
-    def rowsOf(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .toDF("vertex", "community")
+    def rows = GraphOps.refineCommunities(spark, e, a).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sortBy(_._1).toSeq
-    val drv = rowsOf(GraphOps.refineDriver(spark, a, intra))
-    val dist = rowsOf(GraphOps.refineDistributed(spark, a, intra))
+    val drv = rows
+    val dist = ForcedDispatch.distributed(spark, "refineCommunities")(rows)
     assert(drv == dist, s"driver $drv\n!= distributed $dist")
   }
 

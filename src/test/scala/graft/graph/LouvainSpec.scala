@@ -181,6 +181,56 @@ class LouvainSpec extends AnyFunSuite {
     assert(math.abs(exact - best) < 1e-9, s"returned assignment scores $exact, best level $best")
   }
 
+  test("a self-loop edge is internal weight: loops as edges == loops as vertex weight") {
+    // Seeded 30-vertex graphs, half-integral weights (every Σ exact),
+    // a loop on every third vertex. Given as edges, the loops must
+    // fold into internal weight at initialization, never act as a
+    // message from a vertex to its own community.
+    val sc = spark.sparkContext
+    Seq(3L, 5L, 8L).foreach { seed =>
+      val r = new scala.util.Random(seed)
+      val edges = (0 until 70).map(_ => (r.nextInt(30).toLong, r.nextInt(30).toLong))
+        .filter { case (a, b) => a != b }
+        .map { case (a, b) => (math.min(a, b), math.max(a, b)) }.distinct
+        .map { case (a, b) => (a, b, (1 + r.nextInt(6)) + 0.5) }
+      val loops = (0L until 30L by 3L).map(v => (v, (1 + r.nextInt(8)) + 0.5))
+      val asEdges = Graph.fromEdges(sc.parallelize(
+        (edges ++ loops.map { case (v, w) => (v, v, w) }).map { case (a, b, w) => Edge(a, b, w) }), 0.0)
+      val internal = loops.toMap
+      val verts = (edges.flatMap(e => Seq(e._1, e._2)) ++ loops.map(_._1)).distinct
+      val asWeights = Graph(sc.parallelize(verts.map(v => (v, internal.getOrElse(v, 0.0)))),
+        sc.parallelize(edges.map { case (a, b, w) => Edge(a, b, w) }), 0.0)
+      val (gotA, levelsA) = Louvain.run(asEdges)
+      val (gotW, levelsW) = Louvain.run(asWeights)
+      assert(gotA.collect().toMap == gotW.collect().toMap, s"seed $seed: assignments differ")
+      assert(trail(levelsA) == trail(levelsW), s"seed $seed: level trails differ")
+      levelsA.zip(levelsW).foreach { case (a, w) =>
+        assert(math.abs(a.modularity - w.modularity) < 1e-12, s"seed $seed: $a vs $w")
+      }
+    }
+  }
+
+  test("source guard: the super-row degree rule and identity labels live in LocalLouvain") {
+    // An a == b super row counts 2w in degree; that reading belongs to
+    // LocalLouvain.degrees (and Louvain.initialize on GraphX), and no
+    // caller rebuilds identity labels by exploding the row ends.
+    val banned = Seq(
+      "the super-row degree rule" -> """\+=\s*2\s*\*\s*w\b""".r,
+      "identity labels from exploded row ends" ->
+        """explode\(array\(col\("(a|src)"\),\s*col\("(b|dst)"\)\)\)""".r)
+    val hits = scala.collection.mutable.ArrayBuffer.empty[String]
+    val walk = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
+    try walk.iterator().forEachRemaining { f =>
+      val name = f.getFileName.toString
+      if (name.endsWith(".scala") && name != "LocalLouvain.scala") {
+        val src = new String(java.nio.file.Files.readAllBytes(f),
+          java.nio.charset.StandardCharsets.UTF_8)
+        for ((what, re) <- banned if re.findFirstIn(src).isDefined) hits += s"$what in $f"
+      }
+    } finally walk.close()
+    assert(hits.isEmpty, hits.mkString("; "))
+  }
+
   test("modularity of the known two-clique partition matches brute force") {
     val g = graphOf(twoCliques)
     val partition = Map(0L -> 0L, 1L -> 0L, 2L -> 0L, 3L -> 0L,

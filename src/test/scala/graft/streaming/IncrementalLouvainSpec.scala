@@ -141,8 +141,7 @@ class IncrementalLouvainSpec extends AnyFunSuite {
       .toDF("src", "dst", "weight")
     val b1 = (clique(Seq(0L, 1L, 2L, 3L)) ++ clique(Seq(10L, 11L, 12L, 13L)))
       .map { case (a, b, _) => (a, b, 10.0) }.toDF("src", "dst", "weight")
-    val merge = StreamingOps.mergeLouvainAudited(s, accum,
-      gapThresholdE6 = 50000L, auditEvery = 2) _
+    val merge = StreamingOps.mergeLouvainAudited(s, accum, auditEvery = 2) _
     merge(b0, 0L)
     // pre-refresh sanity: the fold really is over-coarsened
     assert(partition(labelsOf(s, 0L)) == Set(all8.toSet))
@@ -226,7 +225,7 @@ class IncrementalLouvainSpec extends AnyFunSuite {
     val lab1 = all8.map(v => (v, 0L)).toDF("vertex", "community")
     val sup1 = Seq((0L, 0L, 148.0)).toDF("a", "b", "w")
     val gap1 = StreamingOps.louvainDriftGapE6(spark, edges, lab1, sup1)
-    assert(gap1 > 50000L, s"planted over-coarsening not detected: $gap1")
+    assert(gap1 > StreamingOps.DriftRefreshE6, s"planted over-coarsening not detected: $gap1")
     // Converged: the two-clique partition with its true super state —
     // nothing to split (probing finds no positive gain) and nothing
     // to merge, so the estimate is 0 and no batch run would fire.
@@ -255,7 +254,8 @@ class IncrementalLouvainSpec extends AnyFunSuite {
         .groupBy(_._2).values.map(_.map(_._1).toSet).toSet
     val got = partOf(graft.graph.GraphOps.louvainOnSuper(spark, sup))
     assert(got.exists(_.size > 1), s"every vertex a singleton: $got")
-    assert(got == partOf(graft.graph.GraphOps.louvainOnSuperGraphX(spark, sup)))
+    assert(got == partOf(graft.graph.ForcedDispatch.distributed(spark, "louvainOnSuper")(
+      graft.graph.GraphOps.louvainOnSuper(spark, sup))))
   }
 
   test("driver-side super Louvain matches the GraphX path's partition") {
@@ -273,7 +273,9 @@ class IncrementalLouvainSpec extends AnyFunSuite {
       df.collect().map(r => r.getLong(0) -> r.getLong(1))
         .groupBy(_._2).values.map(_.map(_._1).toSet).toSet
     val drv = partOf(graft.graph.GraphOps.louvainOnSuper(spark, sup))
-    val gx = partOf(graft.graph.GraphOps.louvainOnSuperGraphX(spark, sup))
+    def forced(df: => org.apache.spark.sql.DataFrame) =
+      partOf(graft.graph.ForcedDispatch.distributed(spark, "louvainOnSuper")(df))
+    val gx = forced(graft.graph.GraphOps.louvainOnSuper(spark, sup))
     val want = Set(Set(0L, 1L, 2L, 3L), Set(10L, 11L, 12L, 13L))
     assert(drv == want, s"driver path: $drv")
     assert(gx == want, s"graphx path: $gx")
@@ -282,6 +284,8 @@ class IncrementalLouvainSpec extends AnyFunSuite {
     val compressed = Seq((0L, 0L, 66.0), (10L, 10L, 66.0), (0L, 10L, 16.0))
       .toDF("a", "b", "w")
     assert(partOf(graft.graph.GraphOps.louvainOnSuper(spark, compressed)) ==
+      Set(Set(0L), Set(10L)))
+    assert(forced(graft.graph.GraphOps.louvainOnSuper(spark, compressed)) ==
       Set(Set(0L), Set(10L)))
   }
 
@@ -293,8 +297,7 @@ class IncrementalLouvainSpec extends AnyFunSuite {
     // Clean two-clique batches: the fold tracks batch Louvain
     // exactly, so every audit (auditEvery = 1 → all of them) must
     // settle on the estimator alone.
-    val merge = StreamingOps.mergeLouvainAudited(s, accum,
-      gapThresholdE6 = 50000L, auditEvery = 1) _
+    val merge = StreamingOps.mergeLouvainAudited(s, accum, auditEvery = 1) _
     merge(clique(Seq(0L, 1L, 2L, 3L)).toDF("src", "dst", "weight"), 0L)
     merge(clique(Seq(10L, 11L, 12L, 13L)).toDF("src", "dst", "weight"), 1L)
     assert(partition(labelsOf(s, 1L)) ==
