@@ -2472,17 +2472,21 @@ object GraphOps {
       // scheduling overhead, not computation (the louvainOnSuper
       // finding, applied to the flagship's own memo). The GraphX
       // engine below is the at-scale shape, unchanged, and stays the
-      // only path for fractional weights or γ ≠ 1 (the driver ledger
-      // is exact-integer and would have to round). LouvainSpec pins
+      // only path for fractional weights, γ ≠ 1 (the driver ledger
+      // is exact-integer and would have to round) or a weight mass
+      // past LocalLouvain.fits (the Long ledger would wrap). LouvainSpec pins
       // the Pregel engine directly; the dispatch-equivalence contract
       // (same planted partitions, level-Q ≡ modularityOf) rides the
       // existing GraphOpsSpec/GraftGraphSpec/LeidenSpec assertions,
       // which now exercise the driver path at test scale.
       Dispatch.gated("louvainFor", edges.select(col("src"), col("dst"), col("weight")),
           LocalLouvain.CollectMax, admit = lit(resolution == 1.0) +: exactWeights("weight")) { rs =>
-        val (assign, lv) = LocalLouvain.clusterWithLevels(integralRows(rs).toSeq)
-        val rdd = spark.sparkContext.parallelize(assign.toSeq).cache()
-        Some((rdd, lv.map(l => LouvainLevel(l._1, l._2, l._3, l._4))))
+        val rows = integralRows(rs)
+        Option.when(LocalLouvain.fits(rows)) {
+          val (assign, lv) = LocalLouvain.clusterWithLevels(rows.toSeq)
+          val rdd = spark.sparkContext.parallelize(assign.toSeq).cache()
+          (rdd, lv.map(l => LouvainLevel(l._1, l._2, l._3, l._4)))
+        }
       } { e =>
         val (assignment, levels) =
           Louvain.run(GraphBuilder.toGraphX(e), resolution = resolution)
@@ -2493,7 +2497,8 @@ object GraphOps {
 
   /** Louvain twin admission: the driver ledger is exact-integer, so
     * weights must be non-null and integral (fractional weights, as
-    * similarity graphs have, run on GraphX). */
+    * similarity graphs have, run on GraphX). A twin whose collected
+    * rows are past [[LocalLouvain.fits]] declines as well. */
   private def exactWeights(w: String): Seq[Column] =
     Seq(Dispatch.noNulls(col(w)), Dispatch.integral(col(w)))
 
@@ -2663,12 +2668,13 @@ object GraphOps {
     * a == b row as internal weight, as the driver twin does.
     * Fractional or null weights also go to GraphX: the driver ledger
     * is exact-integer and would round them (weights in (0, 0.5) would
-    * vanish). */
+    * vanish), and so does a weight mass past [[LocalLouvain.fits]]. */
   def louvainOnSuper(spark: SparkSession, sup: DataFrame): DataFrame =
     Dispatch.gated("louvainOnSuper", sup.select(col("a"), col("b"), col("w")),
         LocalLouvain.CollectMax, keys = Seq("a", "b"), admit = exactWeights("w")) { rs =>
-      Some(spark.createDataFrame(
-        LocalLouvain.clusterWithLevels(integralRows(rs).toSeq)._1.toSeq)
+      val rows = integralRows(rs)
+      Option.when(LocalLouvain.fits(rows))(spark.createDataFrame(
+        LocalLouvain.clusterWithLevels(rows.toSeq)._1.toSeq)
         .toDF("sv", "community"))
     } { cp =>
       val (assignment, _) = Louvain.run(GraphBuilder.toGraphX(

@@ -1160,25 +1160,28 @@ object StreamingOps {
       // vertices stay themselves — same coalesce as the fold.
       rows.foreach(r => contract(sup, v => lab.getOrElse(v, v))(
         r.getLong(0), r.getLong(1), r.getDouble(2)))
-      val assign = LocalLouvain.clusterWithLevels(
-        sup.iterator.map { case ((a, b), w) => (a, b, math.round(w)) }.toSeq)._1
-      val prevComms = lab.values.toSet
-      val newLab = scala.collection.mutable.LongMap.empty[Long]
-      lab.foreach { case (v, c) =>
-        assign.get(c).foreach(c2 => newLab(v) = c2)
+      // A super graph past the kernel's Long bound declines to the
+      // distributed fold.
+      val superRows = sup.iterator.map { case ((a, b), w) => (a, b, math.round(w)) }.toSeq
+      Option.when(LocalLouvain.fits(superRows)) {
+        val assign = LocalLouvain.clusterWithLevels(superRows)._1
+        val prevComms = lab.values.toSet
+        val newLab = scala.collection.mutable.LongMap.empty[Long]
+        lab.foreach { case (v, c) =>
+          assign.get(c).foreach(c2 => newLab(v) = c2)
+        }
+        assign.foreach { case (sv, c) => if (!prevComms(sv)) newLab(sv) = c }
+        val sup2 = scala.collection.mutable.HashMap.empty[(Long, Long), Double]
+        sup.foreach { case ((a, b), w) => contract(sup2, assign)(a, b, w) }
+        newLab.toSeq.toDF("vertex", "community").coalesce(1)
+          .write.mode("overwrite").parquet(s"$sink/v$id/labels")
+        sup2.toSeq.map { case ((a, b), w) => (a, b, w) }
+          .toDF("a", "b", "w").coalesce(1)
+          .write.mode("overwrite").parquet(s"$sink/v$id/super")
+        if (louvainFoldCarry.size > 8 && !louvainFoldCarry.contains(sink))
+          louvainFoldCarry.clear()
+        louvainFoldCarry.update(sink, (id, newLab, sup2))
       }
-      assign.foreach { case (sv, c) => if (!prevComms(sv)) newLab(sv) = c }
-      val sup2 = scala.collection.mutable.HashMap.empty[(Long, Long), Double]
-      sup.foreach { case ((a, b), w) => contract(sup2, assign)(a, b, w) }
-      newLab.toSeq.toDF("vertex", "community").coalesce(1)
-        .write.mode("overwrite").parquet(s"$sink/v$id/labels")
-      sup2.toSeq.map { case ((a, b), w) => (a, b, w) }
-        .toDF("a", "b", "w").coalesce(1)
-        .write.mode("overwrite").parquet(s"$sink/v$id/super")
-      if (louvainFoldCarry.size > 8 && !louvainFoldCarry.contains(sink))
-        louvainFoldCarry.clear()
-      louvainFoldCarry.update(sink, (id, newLab, sup2))
-      Some(())
     } { batch =>
       // The distributed fold owns the state now — a driver carry from
       // an earlier batch would go stale the moment this fold writes.
@@ -1267,9 +1270,9 @@ object StreamingOps {
     *    re-clustering whole communities. The super state is already
     *    materialized per fold; it collects when ≤
     *    [[graft.graph.LocalLouvain.CollectMax]]
-    *    rows (a graph OVER COMMUNITIES — tiny next to the corpus),
-    *    else falls back to the distributed [[graft.graph.GraphOps
-    *    .louvainOnSuper]].
+    *    rows (a graph OVER COMMUNITIES — tiny next to the corpus)
+    *    within [[graft.graph.LocalLouvain.fits]], else falls back to
+    *    the distributed [[graft.graph.GraphOps.louvainOnSuper]].
     *  - SPLIT probe: for the top-[[DriftProbeK]] communities by internal
     *    weight (the self-loop ledger the super state carries), local
     *    moves from SINGLETONS over the community's induced intra
@@ -1277,7 +1280,8 @@ object StreamingOps {
     *    Leiden-refinement objective — subgraph modularity splits too
     *    eagerly). Communities past the per-community edge budget are
     *    deterministically vertex-sampled (xxhash64 threshold), so the
-    *    probe is bounded at ANY corpus size. Sampling usually
+    *    probe is bounded at ANY corpus size; a community past
+    *    [[graft.graph.LocalLouvain.fits]] is skipped. Sampling usually
     *    under-reports, but NOT always: edges between sampled and
     *    unsampled members of the same community drop out of the
     *    sampled subproblem, so its split gain can exceed the
@@ -1298,20 +1302,25 @@ object StreamingOps {
       labels: DataFrame, sup: DataFrame): Long = {
     import graft.graph.LocalLouvain
     val supN = sup.count()
-    val (mergeGain4m2, m) =
-      if (supN <= LocalLouvain.CollectMax) {
-        val rows = sup.select(col("a"), col("b"), col("w").cast("double"))
+    // The merge probe runs on the driver when the super graph is
+    // within the collect bound and the kernel's Long bound.
+    val driverRows = Option.when(supN <= LocalLouvain.CollectMax)(
+        sup.select(col("a"), col("b"), col("w").cast("double"))
           .collect().map(r => (r.getLong(0), r.getLong(1),
-            math.round(r.getDouble(2)))).toSeq
-        val m0 = BigInt(rows.map(_._3).sum)
+            math.round(r.getDouble(2)))).toSeq)
+      .filter(rows => LocalLouvain.fits(rows))
+    val (mergeGain4m2, m) = driverRows match {
+      case Some(rows) =>
+        val m0 = rows.map(_._3).sum
         val deg = LocalLouvain.degrees(rows)
         val (_, g) = LocalLouvain.localMoves(rows, deg, m0, deg.keys.map(v => v -> v).toMap)
-        (g, m0)
-      } else {
+        (BigInt(g), BigInt(m0))
+      case None =>
         // Distributed fallback: the super graph itself outgrew the
-        // driver bound (millions of communities) — louvainOnSuper is
-        // the scale path, and the gain is the exact-integer Q delta
-        // of its assignment vs identity on the SAME super edges.
+        // driver bound (millions of communities, or a weight mass past
+        // the Long bound) — louvainOnSuper is the scale path, and the
+        // gain is the exact-integer Q delta of its assignment vs
+        // identity on the SAME super edges.
         val supE = sup.select(col("a").as("src"), col("b").as("dst"),
           col("w").as("weight"))
         val a2 = graft.graph.GraphOps.louvainOnSuper(spark, sup)
@@ -1323,7 +1332,7 @@ object StreamingOps {
         // already e6 — route through the 4m² ledger for one return path
         val gE6 = math.max(0L, qA2 - superIdentityQ(spark, sup)._2)
         (BigInt(gE6) * 4 * mTot * mTot / 1000000, mTot)
-      }
+    }
     if (m == 0) return 0L
     // Split probe: top-K communities by internal (self-loop) weight.
     val probed = sup.filter(col("a") === col("b"))
@@ -1381,12 +1390,15 @@ object StreamingOps {
         val es = byC.getOrElse(c, Array.empty).map(_._2).toSeq
         val deg = degByC.getOrElse(c, Array.empty)
           .map(r => r._2 -> r._3).toMap
-        if (es.nonEmpty && deg.nonEmpty) {
+        // A community past the kernel's Long bound is skipped, as an
+        // unknown id is.
+        if (es.nonEmpty && deg.nonEmpty && m.isValidLong &&
+            LocalLouvain.fits(es, m.toLong, deg.values)) {
           val init = deg.keys.map(v => v -> v).toMap
-          val (assign, _) = LocalLouvain.localMoves(es, deg, m, init)
+          val (assign, _) = LocalLouvain.localMoves(es, deg, m.toLong, init)
           // Δ(4m²·Q) of replacing the one community by its parts.
-          val g = LocalLouvain.ledger(es, deg, m, assign) -
-            LocalLouvain.ledger(es, deg, m, _ => c)
+          val g = LocalLouvain.ledger(es, deg, m.toLong, assign) -
+            LocalLouvain.ledger(es, deg, m.toLong, _ => c)
           if (g > 0) splitGain += g
         }
       }
@@ -1403,8 +1415,9 @@ object StreamingOps {
     * state fits [[graft.graph.LocalLouvain.CollectMax]] rows of
     * integral weights (mirroring modularityOf's exact integer ledger
     * and its one final double division; the ledger would round a
-    * fractional weight that modularityOf casts to long), distributed
-    * modularityOf on the super edges otherwise — one
+    * fractional weight that modularityOf casts to long) within
+    * [[graft.graph.LocalLouvain.fits]] (the Long ledger would wrap
+    * past it), distributed modularityOf on the super edges otherwise — one
     * [[graft.graph.Dispatch.gated]] site. IncrementalLouvainSpec pins
     * both branches against the full-graph modularityOf. */
   private[graft] def superIdentityQ(spark: SparkSession,
@@ -1415,9 +1428,11 @@ object StreamingOps {
         admit = Seq(Dispatch.noNulls(col("w")), Dispatch.integral(col("w")))) { rs =>
       val rows = rs.map(r => (r.getLong(0), r.getLong(1),
         math.round(r.getAs[Number](2).doubleValue))).toSeq
-      val deg = LocalLouvain.degrees(rows)
-      val m = BigInt(rows.map(_._3).sum)
-      Some((deg.size.toLong, LocalLouvain.gainE6(LocalLouvain.ledger(rows, deg, m, identity), m)))
+      Option.when(LocalLouvain.fits(rows)) {
+        val deg = LocalLouvain.degrees(rows)
+        val m = rows.map(_._3).sum
+        (deg.size.toLong, LocalLouvain.gainE6(LocalLouvain.ledger(rows, deg, m, identity), m))
+      }
     } { cp =>
       // Each super-vertex is its own community: d_c is its degree
       // (both ends of every row, so an a == b row counts twice) and

@@ -591,4 +591,24 @@ class GraphOpsSpec extends AnyFunSuite {
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).sortBy(t => (t._1, t._2))
     assert(canon.toSeq == Seq((1L, 2L, 3.0), (1L, 3L, 1.0)))
   }
+
+  test("louvain past the twin's Long bound takes the distributed branch, same partition") {
+    // Two 4-cliques and a bridge: at weight 2^40 the weight mass is past
+    // LocalLouvain.MaxMass, so the louvainFor twin declines to GraphX.
+    def cliques(w: Double) = {
+      val es = for { base <- Seq(0L, 10L); i <- 0L to 3L; j <- (i + 1) to 3L }
+        yield (base + i, base + j, w)
+      (es :+ ((3L, 10L, w))).toDF("src", "dst", "weight")
+    }
+    def partition(df: org.apache.spark.sql.DataFrame): Set[Set[Long]] =
+      df.collect().map(r => r.getLong(0) -> r.getLong(1))
+        .groupBy(_._2).values.map(_.map(_._1).toSet).toSet
+    val unit = partition(GraphOps.louvain(spark, cliques(1.0)))
+    val (t0, d0) = Dispatch.taken.getOrElse("louvainFor", (0L, 0L))
+    val big = partition(GraphOps.louvain(spark, cliques(math.pow(2, 40))))
+    val (t1, d1) = Dispatch.taken("louvainFor")
+    assert((t1 - t0, d1 - d0) == ((0L, 1L)), "2^40 weights did not take the distributed branch")
+    assert(unit == Set(Set(0L, 1L, 2L, 3L), Set(10L, 11L, 12L, 13L)))
+    assert(big == unit)
+  }
 }

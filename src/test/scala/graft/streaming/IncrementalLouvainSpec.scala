@@ -209,6 +209,27 @@ class IncrementalLouvainSpec extends AnyFunSuite {
     assert(dist == ((nS, qS)), s"distributed super identity $dist != driver ($nS, $qS)")
   }
 
+  test("readout Q past the driver's Long bound still equals full-graph modularityOf") {
+    import spark.implicits._
+    // Weights of 2^40 put the super state past LocalLouvain.MaxMass: the
+    // twin declines and the distributed ledger answers, unwrapped.
+    val w = math.pow(2, 40)
+    val edges = (clique(Seq(0L, 1L, 2L, 3L)) ++ clique(Seq(10L, 11L, 12L, 13L)) :+
+      ((3L, 10L, 1.0))).map(e => (e._1, e._2, e._3 * w)).toDF("src", "dst", "weight")
+    val lab = Seq(0L, 1L, 2L, 3L, 10L, 11L, 12L, 13L)
+      .map(v => (v, if (v < 10) 0L else 10L)).toDF("vertex", "community")
+    val sup = StreamingOps.contractThrough(edges, lab)
+    val (t0, d0) = graft.graph.Dispatch.taken.getOrElse("superIdentityQ", (0L, 0L))
+    val got = StreamingOps.superIdentityQ(spark, sup)
+    val (t1, d1) = graft.graph.Dispatch.taken("superIdentityQ")
+    assert((t1 - t0, d1 - d0) == ((0L, 1L)), "2^40 weights did not take the distributed branch")
+    val full = graft.graph.GraphOps.modularityOf(edges,
+        lab.select(col("vertex"), col("community").as("label")))
+      .select(col("n_communities"), col("q_e6")).collect().head
+    assert(got == ((full.getLong(0), full.getLong(1))))
+    assert(got._1 == 2L && got._2 > 400000L, s"two-clique Q $got")
+  }
+
   test("estimator: planted over-coarsened state alarms; converged fold does not") {
     import spark.implicits._
     import org.apache.spark.sql.functions.col
