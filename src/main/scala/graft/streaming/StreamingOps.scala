@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery}
 
 /** Structured Streaming operators (SURVEY §2 row 35).
   *
@@ -10,8 +11,18 @@ import org.apache.spark.sql.expressions.Window
   * (file source → windowed aggregation → memory sink), proving the
   * stream pipeline produces batch-identical results. In production
   * the same plan runs on a live source with `withWatermark` +
-  * append mode; complete mode + `processAllAvailable` makes the
-  * local check synchronous and exhaustive.
+  * append mode; running each query until its source is drained makes
+  * the local check synchronous and exhaustive.
+  *
+  * Every query is built from four primitives:
+  *  - [[eventsStream]]: the events table as a file stream;
+  *  - [[drain]]: a plan run to the end into a named memory sink and
+  *    read back as a table;
+  *  - [[purchaseViewJoin]]: the watermarked purchase/view interval
+  *    join, parameterised by join type;
+  *  - [[foldStream]]: a versioned `foreachBatch` fold over a
+  *    re-sharded source, with the driver state it carries between
+  *    batches in one [[FoldCarry]] per fold.
   */
 object StreamingOps {
 
@@ -95,6 +106,88 @@ object StreamingOps {
       spark.conf.get("spark.sql.shuffle.partitions"))
   }
 
+  /** The events table as a file stream, the stream sibling of
+    * [[graft.Tables.events]]: the footer's raw schema, only
+    * `events.parquet` of the SF dir (the file source wants a
+    * directory), and `ts` normalised to microsecond TimestampType
+    * whatever the file vintage. */
+  private def eventsStream(spark: SparkSession, dir: String): DataFrame = {
+    val rawSchema = graft.Tables.eventsRawSchema(spark, dir)
+    spark.readStream
+      .schema(rawSchema)
+      .option("pathGlobFilter", "events.parquet")
+      .parquet(dir)
+      .withColumn("ts", graft.Tables.eventsTsCol(rawSchema))
+  }
+
+  /** Starts `w`, runs it until its source is drained and stops it,
+    * also when a batch fails. Returns the stopped query. */
+  private def runToEnd(w: DataStreamWriter[_]): StreamingQuery = {
+    val q = w.start()
+    try q.processAllAvailable()
+    finally q.stop()
+    q
+  }
+
+  /** Runs `plan` to the end into the memory sink `name` under output
+    * `mode`. Returns the stopped query, whose progress
+    * [[streamProgressStats]] reads. */
+  private def memorySink(plan: DataFrame, mode: String, name: String): StreamingQuery =
+    runToEnd(plan.writeStream.outputMode(mode).format("memory").queryName(name))
+
+  /** [[memorySink]] read back as a table. The table is looked up in
+    * the plan's own session: inside [[withStateParts]] that is the
+    * clone, whose isolated catalog holds the sink. */
+  private def drain(plan: DataFrame, mode: String, name: String): DataFrame = {
+    memorySink(plan, mode, name)
+    plan.sparkSession.table(name)
+  }
+
+  /** Folds the parquet files of `srcDir` into `sink`, one file per
+    * micro-batch (`maxFilesPerTrigger=1`, so a source re-sharded to
+    * 4 files is a genuinely multi-batch stream): `merge(sink)` writes
+    * version `v<id>` for batch `id`. Returns the last version. The
+    * sink must start empty: batch ids restart at 0 every run, so a
+    * stale higher version from a previous, differently-batched run
+    * must not win the `last` pick. */
+  private def foldStream(spark: SparkSession, srcDir: String, sink: String)
+      (merge: String => (DataFrame, Long) => Unit): Long = {
+    val stream = spark.readStream.schema(spark.read.parquet(srcDir).schema)
+      .option("maxFilesPerTrigger", "1").parquet(srcDir)
+    runToEnd(stream.writeStream.foreachBatch(merge(sink)))
+    new java.io.File(sink).listFiles()
+      .filter(_.getName.startsWith("v")).map(_.getName.drop(1).toLong).max
+  }
+
+  /** The driver state a [[foldStream]] merge carries between batches:
+    * per sink, the id of the last batch folded on the driver and the
+    * state that fold left. An intra-stream shortcut only: every fold
+    * still writes `v<id>` parquet (the restart contract), and a fold
+    * of batch `id` reads the carry only when it is exactly batch
+    * `id - 1`'s (any discontinuity — replay, recovery, an audit
+    * refresh, a distributed fold owning the state — falls back to the
+    * parquet state), so the carry can never change what a fold
+    * computes. Bounded with miss-only eviction (the round-18
+    * memo-boundary lesson). */
+  private[streaming] final class FoldCarry[S] {
+    private val bySink = scala.collection.concurrent.TrieMap.empty[String, (Long, S)]
+
+    /** The state batch `id - 1` of `sink` left, if the driver folded it last. */
+    def before(sink: String, id: Long): Option[S] =
+      bySink.get(sink).collect { case (last, st) if last == id - 1 => st }
+
+    /** Records `sink`'s fold `(id, state)`. A new sink arriving while
+      * more than 8 are held clears them first. */
+    def update(sink: String, folded: (Long, S)): Unit = {
+      if (bySink.size > 8 && !bySink.contains(sink)) bySink.clear()
+      bySink.update(sink, folded)
+    }
+
+    def contains(sink: String): Boolean = bySink.contains(sink)
+
+    def remove(sink: String): Unit = bySink.remove(sink): Unit
+  }
+
   def streamSessionize(spark: SparkSession, dir: String): DataFrame =
     withStateParts(spark, approxKeys(spark, dir, "events", "user_id"))(
       ss => streamSessionizeInner(ss, dir))
@@ -103,14 +196,8 @@ object StreamingOps {
     import spark.implicits._
     import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode, GroupState}
 
-    val rawSchema = graft.Tables.eventsRawSchema(spark, dir)
-    val events = spark.readStream
-      .schema(rawSchema)
-      .option("pathGlobFilter", "events.parquet")
-      .parquet(dir)
-      .select(col("user_id"),
-        graft.Tables.eventsTsUsCol(rawSchema).as("ts_us"),
-        col("event_id"))
+    val events = eventsStream(spark, dir)
+      .select(col("user_id"), unix_micros(col("ts")).as("ts_us"), col("event_id"))
       .as[(Long, Long, Long)]
 
     def fn(user: Long, rows: Iterator[(Long, Long, Long)],
@@ -129,23 +216,15 @@ object StreamingOps {
       Iterator.single(SessionRow(user, st.nSessions, st.nEvents))
     }
 
-    val name = "graft_stream_sessions"
-    val q = events.groupByKey(_._1)
+    val sessions = events.groupByKey(_._1)
       .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout)(fn)
       .toDF()
-      .writeStream
-      .outputMode("update")
-      .format("memory")
-      .queryName(name)
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
     // update mode appends one row per group per batch: keep the last
     // emission per user (single batch here, but stay correct if the
     // file source splits batches).
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("user_id")).orderBy(col("n_events").desc)
-    spark.table(name)
+    drain(sessions, "update", "graft_stream_sessions")
       .withColumn("rk", row_number().over(w))
       .filter(col("rk") === 1)
       .select(col("user_id"), col("n_sessions"), col("n_events"))
@@ -169,15 +248,7 @@ object StreamingOps {
       .option("pathGlobFilter", "documents.parquet")
       .parquet(dir)
     val hashes = docs.select(md5(col("text")).as("h")).dropDuplicates("h")
-    val name = "graft_stream_dedup"
-    val q = hashes.writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(name)
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
-    spark.table(name).orderBy(col("h"))
+    drain(hashes, "append", "graft_stream_dedup").orderBy(col("h"))
   }
 
   /** STATE-BOUNDED streaming dedup — the continuous-ingest form of
@@ -203,25 +274,13 @@ object StreamingOps {
       ss => streamDedupWithinWatermarkInner(ss, dir))
 
   private def streamDedupWithinWatermarkInner(spark: SparkSession, dir: String): DataFrame = {
-    val rawSchema = graft.Tables.eventsRawSchema(spark, dir)
-    val deduped = spark.readStream
-      .schema(rawSchema)
-      .option("pathGlobFilter", "events.parquet")
-      .parquet(dir)
-      .select(col("user_id"), col("event_type"),
-        graft.Tables.eventsTsCol(rawSchema).as("ts"))
+    val deduped = eventsStream(spark, dir)
+      .select(col("user_id"), col("event_type"), col("ts"))
       .withWatermark("ts", "1 hour")
       .dropDuplicatesWithinWatermark("user_id", "event_type")
       .select(col("user_id"), col("event_type"))
-    val name = "graft_stream_dedup_wm"
-    val q = deduped.writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(name)
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
-    spark.table(name).orderBy(col("user_id"), col("event_type"))
+    drain(deduped, "append", "graft_stream_dedup_wm")
+      .orderBy(col("user_id"), col("event_type"))
   }
 
   /** Streaming corpus cleaning: quality gates (stateless projections
@@ -248,25 +307,9 @@ object StreamingOps {
         col("n_tokens") >= 10 && col("n_alpha") * 2 >= length(col("text")))
       .select(md5(col("text")).as("h"))
       .dropDuplicates("h")
-    val name = "graft_stream_clean"
-    val q = gated.writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(name)
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
-    spark.table(name).orderBy(col("h"))
+    drain(gated, "append", "graft_stream_clean").orderBy(col("h"))
   }
 
-  /** Stream-stream interval join: each purchase joins the same
-    * user's views from the preceding 30 minutes. Both sides carry
-    * watermarks and the join condition bounds event-time distance, so
-    * Spark can evict matched state instead of buffering both streams
-    * forever — the production shape for stream enrichment. Inner
-    * interval joins emit each match exactly once as it forms, so the
-    * result equals the batch interval join and shares a SQL oracle
-    * (µs arithmetic replicated there). */
   /** Stream-STATIC join — the streaming enrichment pattern: the
     * event stream joins the static customer dimension per
     * micro-batch. Unlike a stream-stream join this keeps NO join
@@ -277,11 +320,7 @@ object StreamingOps {
     * only stateful operator. Result equals the batch join+agg, which
     * is the SQL oracle. */
   def streamStaticJoin(spark: SparkSession, dir: String): DataFrame = {
-    val rawSchema = graft.Tables.eventsRawSchema(spark, dir)
-    val events = spark.readStream
-      .schema(rawSchema)
-      .option("pathGlobFilter", "events.parquet")
-      .parquet(dir)
+    val events = eventsStream(spark, dir)
       .select(col("user_id"), col("event_type"), col("value"))
     val cust = spark.read.parquet(s"$dir/customer.parquet")
       .select(col("c_custkey"), col("c_mktsegment"))
@@ -289,57 +328,51 @@ object StreamingOps {
       .join(cust, events("user_id") === cust("c_custkey"))
       .groupBy(col("c_mktsegment"), col("event_type"))
       .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("sum_value"))
-    val name = "graft_stream_static_join"
-    val q = agg.writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name)
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
-    spark.table(name).orderBy(col("c_mktsegment"), col("event_type"))
+    drain(agg, "complete", "graft_stream_static_join")
+      .orderBy(col("c_mktsegment"), col("event_type"))
   }
 
+  /** Stream-stream interval join: each purchase joins the same
+    * user's views from the preceding 30 minutes. Both sides carry
+    * 1-hour watermarks and the join condition bounds event-time
+    * distance, so Spark can evict matched state instead of buffering
+    * both streams forever — the production shape for stream
+    * enrichment. The plan of all four join queries; each projects,
+    * names its sink and orders its readout itself. */
+  private def purchaseViewJoin(spark: SparkSession, dir: String,
+      joinType: String): DataFrame = {
+    val views = eventsStream(spark, dir)
+      .filter(col("event_type") === "view")
+      .select(col("user_id").as("v_user"), col("event_id").as("view_id"),
+        col("ts").as("v_ts"))
+      .withWatermark("v_ts", "1 hour")
+    val purchases = eventsStream(spark, dir)
+      .filter(col("event_type") === "purchase")
+      .select(col("user_id"), col("event_id").as("p_id"), col("ts").as("p_ts"))
+      .withWatermark("p_ts", "1 hour")
+    purchases.join(views,
+      col("user_id") === col("v_user") &&
+        col("v_ts") <= col("p_ts") &&
+        col("v_ts") >= col("p_ts") - expr("INTERVAL 30 MINUTES"),
+      joinType)
+  }
+
+  /** Inner [[purchaseViewJoin]]. Inner interval joins emit each match
+    * exactly once as it forms, so the result equals the batch
+    * interval join and shares a SQL oracle (µs arithmetic replicated
+    * there). */
   def streamStreamJoin(spark: SparkSession, dir: String): DataFrame =
     // Stream-STATE partitioning is sized to the measured join-key
     // keyspace, not to the batch core count: a stream-stream join
     // keeps FOUR state stores per partition, and every micro-batch
     // pays a store commit/snapshot per partition — with a small hot
     // keyspace, fewer state partitions beat idle cores.
-    withStateParts(spark, approxKeys(spark, dir, "events", "user_id"))(
-      ss => streamStreamJoinInner(ss, dir))
-
-  private def streamStreamJoinInner(spark: SparkSession, dir: String): DataFrame = {
-    val rawSchema = graft.Tables.eventsRawSchema(spark, dir)
-    def stream() = spark.readStream
-      .schema(rawSchema)
-      .option("pathGlobFilter", "events.parquet")
-      .parquet(dir)
-      .withColumn("ts", graft.Tables.eventsTsCol(rawSchema))
-    val views = stream()
-      .filter(col("event_type") === "view")
-      .select(col("user_id").as("v_user"), col("event_id").as("view_id"),
-        col("ts").as("v_ts"))
-      .withWatermark("v_ts", "1 hour")
-    val purchases = stream()
-      .filter(col("event_type") === "purchase")
-      .select(col("user_id"), col("event_id").as("p_id"), col("ts").as("p_ts"))
-      .withWatermark("p_ts", "1 hour")
-    val joined = purchases.join(views,
-      col("user_id") === col("v_user") &&
-        col("v_ts") <= col("p_ts") &&
-        col("v_ts") >= col("p_ts") - expr("INTERVAL 30 MINUTES"))
-      .select(col("p_id"), col("view_id"), col("user_id"))
-    val name = "graft_stream_join"
-    val q = joined.writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(name)
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
-    spark.table(name).orderBy(col("p_id"), col("view_id"))
-  }
+    withStateParts(spark, approxKeys(spark, dir, "events", "user_id")) { ss =>
+      drain(purchaseViewJoin(ss, dir, "inner")
+          .select(col("p_id"), col("view_id"), col("user_id")),
+        "append", "graft_stream_join")
+        .orderBy(col("p_id"), col("view_id"))
+    }
 
   /** Watermarked LEFT-OUTER stream-stream join — the enrichment
     * pattern when the right side may legitimately be absent
@@ -355,37 +388,11 @@ object StreamingOps {
     * session-window lesson). Same 8-partition state sizing as the
     * inner join. */
   def streamStreamOuterJoin(spark: SparkSession, dir: String): DataFrame =
-    withStateParts(spark, approxKeys(spark, dir, "events", "user_id")) { spark =>
-      val rawSchema = graft.Tables.eventsRawSchema(spark, dir)
-      def stream() = spark.readStream
-        .schema(rawSchema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(dir)
-        .withColumn("ts", graft.Tables.eventsTsCol(rawSchema))
-      val views = stream()
-        .filter(col("event_type") === "view")
-        .select(col("user_id").as("v_user"), col("event_id").as("view_id"),
-          col("ts").as("v_ts"))
-        .withWatermark("v_ts", "1 hour")
-      val purchases = stream()
-        .filter(col("event_type") === "purchase")
-        .select(col("user_id"), col("event_id").as("p_id"), col("ts").as("p_ts"))
-        .withWatermark("p_ts", "1 hour")
-      val joined = purchases.join(views,
-        col("user_id") === col("v_user") &&
-          col("v_ts") <= col("p_ts") &&
-          col("v_ts") >= col("p_ts") - expr("INTERVAL 30 MINUTES"),
-        "left_outer")
-        .select(col("p_id"), col("view_id"), col("user_id"))
-      val name = "graft_stream_outer_join"
-      val q = joined.writeStream
-        .outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .start()
-      try q.processAllAvailable()
-      finally q.stop()
-      spark.table(name).orderBy(col("p_id"), col("view_id"))
+    withStateParts(spark, approxKeys(spark, dir, "events", "user_id")) { ss =>
+      drain(purchaseViewJoin(ss, dir, "left_outer")
+          .select(col("p_id"), col("view_id"), col("user_id")),
+        "append", "graft_stream_outer_join")
+        .orderBy(col("p_id"), col("view_id"))
     }
 
   /** Watermarked RIGHT-OUTER stream-stream join — the abandonment
@@ -397,37 +404,11 @@ object StreamingOps {
     * condition-derived state allowance the left side's bound doesn't
     * exercise. Same 8-partition state sizing. */
   def streamStreamRightOuterJoin(spark: SparkSession, dir: String): DataFrame =
-    withStateParts(spark, approxKeys(spark, dir, "events", "user_id")) { spark =>
-      val rawSchema = graft.Tables.eventsRawSchema(spark, dir)
-      def stream() = spark.readStream
-        .schema(rawSchema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(dir)
-        .withColumn("ts", graft.Tables.eventsTsCol(rawSchema))
-      val views = stream()
-        .filter(col("event_type") === "view")
-        .select(col("user_id").as("v_user"), col("event_id").as("view_id"),
-          col("ts").as("v_ts"))
-        .withWatermark("v_ts", "1 hour")
-      val purchases = stream()
-        .filter(col("event_type") === "purchase")
-        .select(col("user_id"), col("event_id").as("p_id"), col("ts").as("p_ts"))
-        .withWatermark("p_ts", "1 hour")
-      val joined = purchases.join(views,
-        col("user_id") === col("v_user") &&
-          col("v_ts") <= col("p_ts") &&
-          col("v_ts") >= col("p_ts") - expr("INTERVAL 30 MINUTES"),
-        "right_outer")
-        .select(col("p_id"), col("view_id"), col("v_user").as("user_id"))
-      val name = "graft_stream_router_join"
-      val q = joined.writeStream
-        .outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .start()
-      try q.processAllAvailable()
-      finally q.stop()
-      spark.table(name).orderBy(col("view_id"), col("p_id"))
+    withStateParts(spark, approxKeys(spark, dir, "events", "user_id")) { ss =>
+      drain(purchaseViewJoin(ss, dir, "right_outer")
+          .select(col("p_id"), col("view_id"), col("v_user").as("user_id")),
+        "append", "graft_stream_router_join")
+        .orderBy(col("view_id"), col("p_id"))
     }
 
   /** Watermarked FULL-OUTER stream-stream join — both eviction
@@ -442,38 +423,12 @@ object StreamingOps {
     * user_id coalesces across sides since exactly one is non-null
     * per row. Same 8-partition state sizing as the inner join. */
   def streamStreamFullOuterJoin(spark: SparkSession, dir: String): DataFrame =
-    withStateParts(spark, approxKeys(spark, dir, "events", "user_id")) { spark =>
-      val rawSchema = graft.Tables.eventsRawSchema(spark, dir)
-      def stream() = spark.readStream
-        .schema(rawSchema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(dir)
-        .withColumn("ts", graft.Tables.eventsTsCol(rawSchema))
-      val views = stream()
-        .filter(col("event_type") === "view")
-        .select(col("user_id").as("v_user"), col("event_id").as("view_id"),
-          col("ts").as("v_ts"))
-        .withWatermark("v_ts", "1 hour")
-      val purchases = stream()
-        .filter(col("event_type") === "purchase")
-        .select(col("user_id"), col("event_id").as("p_id"), col("ts").as("p_ts"))
-        .withWatermark("p_ts", "1 hour")
-      val joined = purchases.join(views,
-        col("user_id") === col("v_user") &&
-          col("v_ts") <= col("p_ts") &&
-          col("v_ts") >= col("p_ts") - expr("INTERVAL 30 MINUTES"),
-        "full_outer")
-        .select(col("p_id"), col("view_id"),
-          coalesce(col("user_id"), col("v_user")).as("user_id"))
-      val name = "graft_stream_full_outer_join"
-      val q = joined.writeStream
-        .outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .start()
-      try q.processAllAvailable()
-      finally q.stop()
-      spark.table(name).orderBy(col("p_id"), col("view_id"))
+    withStateParts(spark, approxKeys(spark, dir, "events", "user_id")) { ss =>
+      drain(purchaseViewJoin(ss, dir, "full_outer")
+          .select(col("p_id"), col("view_id"),
+            coalesce(col("user_id"), col("v_user")).as("user_id")),
+        "append", "graft_stream_full_outer_join")
+        .orderBy(col("p_id"), col("view_id"))
     }
 
   /** HOPPING-window aggregation — the overlapping-window variant of
@@ -491,29 +446,15 @@ object StreamingOps {
       ss => streamHoppingAggInner(ss, dir))
 
   private def streamHoppingAggInner(spark: SparkSession, dir: String): DataFrame = {
-    val rawSchema = graft.Tables.eventsRawSchema(spark, dir)
-    val raw = spark.readStream
-      .schema(rawSchema)
-      .option("pathGlobFilter", "events.parquet")
-      .parquet(dir)
-      .withColumn("ts", graft.Tables.eventsTsCol(rawSchema))
-    val agg = raw
+    val agg = eventsStream(spark, dir)
       .groupBy(window(col("ts"), "1 hour", "15 minutes"), col("event_type"))
       .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("sum_value"))
       .select(col("window.start").as("win_start"), col("event_type"),
         col("n"), col("sum_value"))
-    val name = "graft_stream_hopping"
-    val q = agg.writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name)
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
     // Window starts emit as NTZ: LTZ hashes through the session zone
     // (SURVEY §6; EmittedTypesSpec bans emitted LTZ) — value-equal
     // under the pinned UTC session.
-    spark.table(name)
+    drain(agg, "complete", "graft_stream_hopping")
       .withColumn("win_start", col("win_start").cast("timestamp_ntz"))
       .orderBy(col("win_start"), col("event_type"))
   }
@@ -533,39 +474,23 @@ object StreamingOps {
     * design. */
   /** The watermarked append-mode plan, shared by the memory-sink
     * query entry and the durable parquet-sink spec. */
-  private[streaming] def watermarkedAggPlan(spark: SparkSession, dir: String): DataFrame = {
-    val rawSchema = graft.Tables.eventsRawSchema(spark, dir)
-    spark.readStream
-      .schema(rawSchema)
-      .option("pathGlobFilter", "events.parquet")
-      .parquet(dir)
-      .withColumn("ts", graft.Tables.eventsTsCol(rawSchema))
+  private[streaming] def watermarkedAggPlan(spark: SparkSession, dir: String): DataFrame =
+    eventsStream(spark, dir)
       .withWatermark("ts", "1 hour")
       .groupBy(window(col("ts"), "1 hour"), col("event_type"))
       .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("sum_value"))
       .select(col("window.start").as("hour"), col("event_type"),
         col("n"), col("sum_value"))
-  }
 
   def streamWatermarkedAgg(spark: SparkSession, dir: String): DataFrame =
     withStateParts(spark, approxKeys(spark, dir, "events",
       "concat(cast(date_trunc('HOUR', ts) AS STRING), event_type)"))(
       ss => streamWatermarkedAggInner(ss, dir))
 
-  private def streamWatermarkedAggInner(spark: SparkSession, dir: String): DataFrame = {
-    val agg = watermarkedAggPlan(spark, dir)
-    val name = "graft_stream_wm_agg"
-    val q = agg.writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(name)
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
-    spark.table(name)
+  private def streamWatermarkedAggInner(spark: SparkSession, dir: String): DataFrame =
+    drain(watermarkedAggPlan(spark, dir), "append", "graft_stream_wm_agg")
       .withColumn("hour", col("hour").cast("timestamp_ntz"))
       .orderBy(col("hour"), col("event_type"))
-  }
 
   /** Watermarked native `session_window` sessionization in APPEND
     * mode — the modern streaming form of [[streamSessionize]] (which
@@ -585,27 +510,15 @@ object StreamingOps {
       ss => streamSessionWindowInner(ss, dir))
 
   private def streamSessionWindowInner(spark: SparkSession, dir: String): DataFrame = {
-    val rawSchema = graft.Tables.eventsRawSchema(spark, dir)
-    val sessions = spark.readStream
-      .schema(rawSchema)
-      .option("pathGlobFilter", "events.parquet")
-      .parquet(dir)
-      .withColumn("ts", graft.Tables.eventsTsCol(rawSchema))
+    val sessions = eventsStream(spark, dir)
       .withWatermark("ts", "1 hour")
       .groupBy(col("user_id"), session_window(col("ts"), "30 minutes"))
       .agg(count(lit(1)).as("n_events"))
       .select(col("user_id"),
         unix_micros(col("session_window.start")).as("start_us"),
         col("n_events"))
-    val name = "graft_stream_session_window"
-    val q = sessions.writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(name)
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
-    spark.table(name).orderBy(col("user_id"), col("start_us"))
+    drain(sessions, "append", "graft_stream_session_window")
+      .orderBy(col("user_id"), col("start_us"))
   }
 
   /** Streaming anomaly readout — the monitoring composition run on
@@ -638,26 +551,13 @@ object StreamingOps {
       ss => streamCusumInner(ss, dir))
 
   private def streamCusumInner(spark: SparkSession, dir: String): DataFrame = {
-    val rawSchema = graft.Tables.eventsRawSchema(spark, dir)
-    val agg = spark.readStream
-      .schema(rawSchema)
-      .option("pathGlobFilter", "events.parquet")
-      .parquet(dir)
-      .withColumn("ts", graft.Tables.eventsTsCol(rawSchema))
+    val agg = eventsStream(spark, dir)
       .withWatermark("ts", "1 hour")
       .groupBy(window(col("ts"), "1 day"), col("event_type"))
       .agg(count(lit(1)).as("x"))
       .select(col("window.start").cast("date").as("day"),
         col("event_type"), col("x"))
-    val name = "graft_stream_cusum"
-    val q = agg.writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(name)
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
-    val em = spark.table(name).localCheckpoint(true)
+    val em = drain(agg, "append", "graft_stream_cusum").localCheckpoint(true)
     val s = em.groupBy(col("event_type"))
       .agg(count(lit(1)).as("dd"), sum(col("x")).as("sx"))
     val wOrd = Window.partitionBy(col("event_type")).orderBy(col("day"))
@@ -681,19 +581,10 @@ object StreamingOps {
       ss => streamAnomalyInner(ss, dir))
 
   private def streamAnomalyInner(spark: SparkSession, dir: String): DataFrame = {
-    val agg = watermarkedAggPlan(spark, dir)
-    val name = "graft_stream_anomaly"
-    val q = agg.writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(name)
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
     // checkpoint the (tiny) emitted-window table: the σ layer
     // self-joins it, and a memory-sink View on both sides of a join
     // trips analyzer reference dedup
-    val w = spark.table(name)
+    val w = drain(watermarkedAggPlan(spark, dir), "append", "graft_stream_anomaly")
       .select(col("hour").cast("timestamp_ntz").as("hour"),
         col("event_type"), col("n"))
       .localCheckpoint(true)
@@ -743,15 +634,10 @@ object StreamingOps {
       .groupBy(col("bin")).agg(count(lit(1)).as("c"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val gTot = gRows.values.sum
-    val rawSchema = graft.Tables.eventsRawSchema(spark, dir)
     val aggCols = count(lit(1)).as("n") +:
       (0 until bins).map(i =>
         sum(when(col("bin") === i.toLong, 1L).otherwise(0L)).as(s"c$i"))
-    val agged = spark.readStream
-      .schema(rawSchema)
-      .option("pathGlobFilter", "events.parquet")
-      .parquet(dir)
-      .withColumn("ts", graft.Tables.eventsTsCol(rawSchema))
+    val agged = eventsStream(spark, dir)
       .withColumn("bin", expr(binSql))
       .withWatermark("ts", "1 hour")
       .groupBy(window(col("ts"), "1 hour"))
@@ -765,15 +651,7 @@ object StreamingOps {
     }.reduce(_ + _)
     val out = agged.select(col("window.start").as("hour"), col("n"),
       psi.as("psi_e6"))
-    val name = "graft_stream_drift"
-    val q = out.writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(name)
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
-    spark.table(name)
+    drain(out, "append", "graft_stream_drift")
       .withColumn("hour", col("hour").cast("timestamp_ntz"))
       .orderBy(col("hour"))
   }
@@ -786,30 +664,11 @@ object StreamingOps {
       ss => streamHourlyAggInner(ss, dir))
 
   private def streamHourlyAggInner(spark: SparkSession, dir: String): DataFrame = {
-    // The stream source needs the file's raw schema (ts = INT64
-    // nanos under the legacy conf); normalization to microsecond
-    // TimestampType happens in the stream plan, same as Tables.events.
-    val rawSchema = graft.Tables.eventsRawSchema(spark, dir)
-    // The file source wants a directory: stream the sf dir with a
-    // glob filter selecting only the events file.
-    val raw = spark.readStream
-      .schema(rawSchema)
-      .option("pathGlobFilter", "events.parquet")
-      .parquet(dir)
-      .withColumn("ts", graft.Tables.eventsTsCol(rawSchema))
-    val agg = raw
+    val agg = eventsStream(spark, dir)
       .groupBy(window(col("ts"), "1 hour"), col("event_type"))
       .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("sum_value"))
       .select(col("window.start").as("hour"), col("event_type"), col("n"), col("sum_value"))
-    val name = "graft_stream_agg"
-    val q = agg.writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name)
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
-    spark.table(name)
+    drain(agg, "complete", "graft_stream_agg")
       .withColumn("hour", col("hour").cast("timestamp_ntz"))
       .orderBy(col("hour"), col("event_type"))
   }
@@ -861,19 +720,8 @@ object StreamingOps {
     * (the oracle), BECAUSE the merge is associative — not because
     * the batching was lucky. */
   def streamCdcSnapshot(spark: SparkSession, dir: String): DataFrame = {
-    val srcDir = cdcSource(spark, dir)
-    // An empty sink: versions are per-RUN state (batch ids restart
-    // at 0 every run), so a stale higher version from a previous,
-    // differently-batched run must not win the final `last` pick.
     val sink = graft.SideOutput.scratch("cdcsink", s"$dir/events.parquet")
-    val schema = spark.read.parquet(srcDir).schema
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(srcDir)
-    val q = stream.writeStream.foreachBatch(mergeCdc(sink) _).start()
-    try q.processAllAvailable()
-    finally q.stop()
-    val last = new java.io.File(sink).listFiles()
-      .filter(_.getName.startsWith("v")).map(_.getName.drop(1).toLong).max
+    val last = foldStream(spark, cdcSource(spark, dir), sink)(mergeCdc)
     spark.read.parquet(s"$sink/v$last")
       .select(col("user_id"), col("event_id").as("last_event_id"),
         col("event_type").as("last_type"),
@@ -892,6 +740,16 @@ object StreamingOps {
         .repartition(4)
         .write.mode("overwrite").parquet(_))
 
+  /** The supplier co-occurrence edges (src, dst, weight) re-sharded to
+    * 4 files: the one edge stream of [[streamCcIncremental]] and
+    * [[streamLouvainIncremental]]. */
+  private def coEdgeSource(spark: SparkSession, dir: String): String =
+    graft.SideOutput("lvsrc", s"$dir/lineitem.parquet")(
+      graft.graph.GraphBuilder.supplierCoEdges(spark, dir)
+        .select(col("src"), col("dst"), col("weight"))
+        .repartition(4)
+        .write.mode("overwrite").parquet(_))
+
   /** Per-micro-batch incremental CONNECTED-COMPONENTS merge: batch
     * edges are CONTRACTED through the previous labels (u,v) →
     * (label(u), label(v)); CC runs on the contracted edge set only;
@@ -906,19 +764,12 @@ object StreamingOps {
     * properties that make graph maintenance on an unbounded edge
     * stream possible at all; versioned v<id> output makes batch
     * replay idempotent, the [[landBatch]] contract. */
-  /** Driver carry for the streaming CC fold: sink → (last folded
-    * batch id, vertex→component labels). Same contract as
-    * [[louvainFoldCarry]]: an intra-stream shortcut only — every fold
-    * still writes v<id> parquet (the restart contract), and any id
-    * discontinuity falls back to the parquet state, so the carry can
-    * never change what a fold computes. Bounded, miss-only eviction
-    * (the round-18 memo-boundary lesson). */
-  private[streaming] val ccFoldCarry = scala.collection.concurrent.TrieMap
-    .empty[String, (Long, scala.collection.mutable.LongMap[Long])]
+  /** The streaming CC fold's carry: vertex→component labels. */
+  private[streaming] val ccFoldCarry =
+    new FoldCarry[scala.collection.mutable.LongMap[Long]]
 
   /** Test hook: drop a sink's carry (simulates a restart). */
-  private[graft] def dropCcCarry(sink: String): Unit =
-    ccFoldCarry.remove(sink): Unit
+  private[graft] def dropCcCarry(sink: String): Unit = ccFoldCarry.remove(sink)
 
   private[graft] def mergeCc(sink: String)(df: DataFrame, id: Long): Unit = {
     import graft.graph.{ConnectedComponentsDF, Dispatch, LocalLouvain}
@@ -927,7 +778,7 @@ object StreamingOps {
     val prev = new java.io.File(s"$sink/v${id - 1}")
     // State source for the driver twin: the carry when it is exactly
     // the previous batch's fold, else the parquet state.
-    val carry = ccFoldCarry.get(sink).collect { case (last, lab) if last == id - 1 => lab }
+    val carry = ccFoldCarry.before(sink, id)
     lazy val labDf = spark.read.parquet(prev.getPath).select(col("vertex"), col("component"))
     val carried = carry.map(_.size.toLong)
       .getOrElse(if (prev.exists()) labDf.count() else 0L)
@@ -968,7 +819,6 @@ object StreamingOps {
       else {
         newLab.toSeq.toDF("vertex", "component").coalesce(1)
           .write.mode("overwrite").parquet(s"$sink/v$id")
-        if (ccFoldCarry.size > 8 && !ccFoldCarry.contains(sink)) ccFoldCarry.clear()
         ccFoldCarry.update(sink, (id, newLab))
         Some(())
       }
@@ -1021,29 +871,15 @@ object StreamingOps {
   /** Incremental graph maintenance over a streamed edge list (the
     * VERDICT-r9 "missing capability": every batch graph op recomputes
     * from the full edge table; this maintains CC labels as edges
-    * ARRIVE). The supplier co-occurrence edge list is re-sharded to 4
-    * files once per SF dir and streamed with `maxFilesPerTrigger=1`,
-    * so the query genuinely folds 4 micro-batches through
-    * [[mergeCc]]; the final labels equal the batch computation
+    * ARRIVE). The supplier co-occurrence edge stream of
+    * [[coEdgeSource]] folds 4 micro-batches through [[mergeCc]]; the
+    * final labels equal the batch computation
     * (`g_cc`'s oracle), BECAUSE the merge is associative — not
     * because the batching was lucky. */
   def streamCcIncremental(spark: SparkSession, dir: String): DataFrame = {
-    val srcDir = graft.SideOutput("ccsrc", s"$dir/lineitem.parquet")(
-      graft.graph.GraphBuilder.supplierCoEdges(spark, dir)
-        .select(col("src"), col("dst"))
-        .repartition(4)
-        .write.mode("overwrite").parquet(_))
-    // Versions are per-RUN state (batch ids restart at 0 every run) —
-    // the s_stream_cdc sink-reset lesson.
     val sink = graft.SideOutput.scratch("ccsink", s"$dir/lineitem.parquet")
-    val schema = spark.read.parquet(srcDir).schema
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(srcDir)
-    val q = stream.writeStream.foreachBatch(mergeCc(sink) _).start()
-    try q.processAllAvailable()
-    finally q.stop()
-    val last = new java.io.File(sink).listFiles()
-      .filter(_.getName.startsWith("v")).map(_.getName.drop(1).toLong).max
+    // mergeCc reads only (src, dst) of the weighted edge stream.
+    val last = foldStream(spark, coEdgeSource(spark, dir), sink)(mergeCc)
     spark.read.parquet(s"$sink/v$last")
       .select(col("vertex"), col("component"))
       .orderBy(col("vertex"))
@@ -1083,23 +919,14 @@ object StreamingOps {
     * full-refresh cadence, and [[streamLouvainIncremental]] applies
     * the same replace-v<id>-wholesale drop-in at its end-of-stream
     * self-audit. */
-  /** Driver carry for the streaming Louvain fold: sink → (last folded
-    * batch id, vertex→community labels, (a,b)→w super edges). Purely
-    * an intra-stream shortcut: every fold still WRITES v<id> to
-    * parquet (that write IS the restart contract and stays), and any
-    * id discontinuity — replay, recovery, an audit refresh or a
-    * distributed fold owning the state — falls back to the parquet
-    * state, so the carry can never change what a fold computes (it
-    * only skips re-reading state this same stream just wrote).
-    * Bounded with miss-only eviction (the round-18 memo-boundary
-    * lesson). */
-  private val louvainFoldCarry = scala.collection.concurrent.TrieMap
-    .empty[String, (Long, scala.collection.mutable.LongMap[Long],
+  /** The streaming Louvain fold's carry: vertex→community labels and
+    * (a, b)→w super edges. */
+  private[streaming] val louvainFoldCarry =
+    new FoldCarry[(scala.collection.mutable.LongMap[Long],
       scala.collection.mutable.HashMap[(Long, Long), Double])]
 
   /** Test hook: drop a sink's carry (simulates a restart). */
-  private[graft] def dropLouvainCarry(sink: String): Unit =
-    louvainFoldCarry.remove(sink): Unit
+  private[graft] def dropLouvainCarry(sink: String): Unit = louvainFoldCarry.remove(sink)
 
   private[graft] def mergeLouvain(sink: String)(df: DataFrame, id: Long): Unit = {
     import graft.graph.{Dispatch, LocalLouvain}
@@ -1108,8 +935,7 @@ object StreamingOps {
     val prev = new java.io.File(s"$sink/v${id - 1}")
     // State source for the driver twin: the carry when it is exactly
     // the previous batch's fold, else the parquet state.
-    val carry = louvainFoldCarry.get(sink)
-      .collect { case (last, lab, sup) if last == id - 1 => (lab, sup) }
+    val carry = louvainFoldCarry.before(sink, id)
     lazy val labDf = spark.read.parquet(s"${prev.getPath}/labels")
     lazy val supDf = spark.read.parquet(s"${prev.getPath}/super")
     val (labN, supN) = carry.map(c => (c._1.size.toLong, c._2.size.toLong))
@@ -1178,9 +1004,7 @@ object StreamingOps {
         sup2.toSeq.map { case ((a, b), w) => (a, b, w) }
           .toDF("a", "b", "w").coalesce(1)
           .write.mode("overwrite").parquet(s"$sink/v$id/super")
-        if (louvainFoldCarry.size > 8 && !louvainFoldCarry.contains(sink))
-          louvainFoldCarry.clear()
-        louvainFoldCarry.update(sink, (id, newLab, sup2))
+        louvainFoldCarry.update(sink, (id, (newLab, sup2)))
       }
     } { batch =>
       // The distributed fold owns the state now — a driver carry from
@@ -1301,13 +1125,13 @@ object StreamingOps {
   private[graft] def louvainDriftGapE6(spark: SparkSession, edges: DataFrame,
       labels: DataFrame, sup: DataFrame): Long = {
     import graft.graph.LocalLouvain
-    val supN = sup.count()
     // The merge probe runs on the driver when the super graph is
-    // within the collect bound and the kernel's Long bound.
-    val driverRows = Option.when(supN <= LocalLouvain.CollectMax)(
-        sup.select(col("a"), col("b"), col("w").cast("double"))
-          .collect().map(r => (r.getLong(0), r.getLong(1),
-            math.round(r.getDouble(2)))).toSeq)
+    // within the collect bound and the kernel's Long bound. One capped
+    // collect both measures and reads the super state.
+    val capped = sup.select(col("a"), col("b"), col("w").cast("double"))
+      .limit((LocalLouvain.CollectMax + 1).toInt).collect()
+    val driverRows = Option.when(capped.length <= LocalLouvain.CollectMax)(
+        capped.map(r => (r.getLong(0), r.getLong(1), math.round(r.getDouble(2)))).toSeq)
       .filter(rows => LocalLouvain.fits(rows))
     val (mergeGain4m2, m) = driverRows match {
       case Some(rows) =>
@@ -1529,27 +1353,14 @@ object StreamingOps {
 
   /** Incremental Louvain label maintenance over a streamed weighted
     * edge list — [[streamCcIncremental]]'s community-structure
-    * sibling. The supplier co-occurrence edges (weights included)
-    * re-shard to 4 files once per SF dir and fold through
+    * sibling. The weighted edges of [[coEdgeSource]] fold through
     * [[mergeLouvain]] one micro-batch at a time; the readout is the
     * self-audit row: streamed-label modularity vs the full batch
     * Louvain's, both under the same exact-integer `modularityOf`
     * metric on the complete edge set. */
   def streamLouvainIncremental(spark: SparkSession, dir: String): DataFrame = {
-    val srcDir = graft.SideOutput("lvsrc", s"$dir/lineitem.parquet")(
-      graft.graph.GraphBuilder.supplierCoEdges(spark, dir)
-        .select(col("src"), col("dst"), col("weight"))
-        .repartition(4)
-        .write.mode("overwrite").parquet(_))
     val sink = graft.SideOutput.scratch("lvsink", s"$dir/lineitem.parquet")
-    val schema = spark.read.parquet(srcDir).schema
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(srcDir)
-    val q = stream.writeStream.foreachBatch(mergeLouvain(sink) _).start()
-    try q.processAllAvailable()
-    finally q.stop()
-    val last = new java.io.File(sink).listFiles()
-      .filter(_.getName.startsWith("v")).map(_.getName.drop(1).toLong).max
+    val last = foldStream(spark, coEdgeSource(spark, dir), sink)(mergeLouvain)
     // End-of-stream self-audit, round 14: the readout Q comes from
     // the maintained SUPER state alone ([[superIdentityQ]] —
     // modularity is contraction-invariant) and the drift check is
@@ -1591,9 +1402,7 @@ object StreamingOps {
       .parquet(dir)
       .select(col("doc_id"), col("lang"), col("n_chars"))
     val sink = graft.SideOutput.scratch("fb", s"$dir/documents.parquet")
-    val q = docs.writeStream.foreachBatch(landBatch(sink) _).start()
-    try q.processAllAvailable()
-    finally q.stop()
+    runToEnd(docs.writeStream.foreachBatch(landBatch(sink) _))
     spark.read.parquet(sink)
       .groupBy(col("lang"))
       .agg(count(lit(1)).as("n_docs"),
@@ -1620,27 +1429,12 @@ object StreamingOps {
       ss => streamPercentilesInner(ss, dir))
 
   private def streamPercentilesInner(spark: SparkSession, dir: String): DataFrame = {
-    val rawSchema = graft.Tables.eventsRawSchema(spark, dir)
-    val purchases = spark.readStream
-      .schema(rawSchema)
-      .option("pathGlobFilter", "events.parquet")
-      .parquet(dir)
+    val agged = eventsStream(spark, dir)
       .filter(col("event_type") === "purchase")
-      .select(
-        timestamp_micros(graft.Tables.eventsTsUsCol(rawSchema)).as("ts"),
-        round(col("value") * 10000).cast("long").as("v_e4"))
-    val agged = purchases
+      .select(col("ts"), round(col("value") * 10000).cast("long").as("v_e4"))
       .groupBy(window(col("ts"), "1 hour"))
       .agg(collect_list(col("v_e4")).as("vs"))
-    val name = "graft_stream_pct"
-    val q = agged.writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name)
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
-    spark.table(name)
+    drain(agged, "complete", "graft_stream_pct")
       .select(unix_micros(col("window.start")).as("hr_us"),
         sort_array(col("vs")).as("sv"))
       .withColumn("n", size(col("sv")).cast("long"))
@@ -1687,15 +1481,12 @@ object StreamingOps {
         .schema(orders.schema)
         .option("maxFilesPerTrigger", "1")
         .parquet(landing)
-      val q = stream.writeStream
+      runToEnd(stream.writeStream
         .foreachBatch { (df: DataFrame, id: Long) =>
           MaterializedView.mergeDelta(spark, s"$root/mv_state",
             MaterializedView.MvKeys, MaterializedView.MvSums,
             MaterializedView.ordersPartial(df), id): Unit
-        }
-        .start()
-      try q.processAllAvailable()
-      finally q.stop()
+        }): Unit
     }
     MaterializedView.latest(spark, s"$root/mv_state")
       .select(col("o_year"), col("n_orders"),
@@ -1764,10 +1555,8 @@ object StreamingOps {
     import spark.implicits._
     import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
     val srcDir = cdcSource(spark, dir)
-    val schema = spark.read.parquet(srcDir).schema
-    val stream = spark.readStream.schema(schema)
+    val typed = spark.readStream.schema(spark.read.parquet(srcDir).schema)
       .option("maxFilesPerTrigger", "1").parquet(srcDir)
-    val typed = stream
       .select(col("user_id"),
         when(col("event_type") === "purchase", 1L).otherwise(0L).as("p"))
       .as[(Long, Long)]
@@ -1779,12 +1568,7 @@ object StreamingOps {
       val out = typed.groupByKey(_._1)
         .transformWithState(new TwsTotalsProcessor,
           TimeMode.None(), OutputMode.Update())
-      val name = "graft_stream_tws"
-      val q = out.toDF().writeStream
-        .outputMode("update").format("memory").queryName(name).start()
-      try q.processAllAvailable()
-      finally q.stop()
-      spark.table(name).localCheckpoint(true)
+      drain(out.toDF(), "update", "graft_stream_tws").localCheckpoint(true)
     } finally {
       prior match {
         case Some(v) => spark.conf.set(confKey, v)
@@ -1807,24 +1591,13 @@ object StreamingOps {
       ss => streamTopKInner(ss, dir, k))
 
   private def streamTopKInner(spark: SparkSession, dir: String, k: Int): DataFrame = {
-    val rawSchema = graft.Tables.eventsRawSchema(spark, dir)
-    val raw = spark.readStream
-      .schema(rawSchema)
-      .option("pathGlobFilter", "events.parquet")
-      .parquet(dir)
-      .withColumn("ts", graft.Tables.eventsTsCol(rawSchema))
-    val agg = raw
+    val agg = eventsStream(spark, dir)
       .groupBy(window(col("ts"), "6 hours"), col("user_id"))
       .agg(count(lit(1)).as("n"))
       .select(col("window.start").as("w_start"), col("user_id"), col("n"))
-    val name = "graft_stream_topk"
-    val q = agg.writeStream
-      .outputMode("complete").format("memory").queryName(name).start()
-    try q.processAllAvailable()
-    finally q.stop()
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("w_start")).orderBy(col("n").desc, col("user_id"))
-    spark.table(name)
+    drain(agg, "complete", "graft_stream_topk")
       .withColumn("rk", row_number().over(w))
       .filter(col("rk") <= k)
       .select(unix_micros(col("w_start")).as("w_start_us"), col("rk").cast("long").as("rk"),
@@ -1844,20 +1617,10 @@ object StreamingOps {
     * grid, which the spec pins to the batch group count. */
   def streamProgressStats(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val rawSchema = graft.Tables.eventsRawSchema(spark, dir)
-    val raw = spark.readStream
-      .schema(rawSchema)
-      .option("pathGlobFilter", "events.parquet")
-      .parquet(dir)
-      .withColumn("ts", graft.Tables.eventsTsCol(rawSchema))
-    val agg = raw
+    val agg = eventsStream(spark, dir)
       .groupBy(window(col("ts"), "1 hour"), col("event_type"))
       .agg(count(lit(1)).as("n"))
-    val name = "graft_stream_progress"
-    val q = agg.writeStream
-      .outputMode("complete").format("memory").queryName(name).start()
-    try q.processAllAvailable()
-    finally q.stop()
+    val q = memorySink(agg, "complete", "graft_stream_progress")
     val perOp = q.recentProgress.toSeq
       .flatMap(_.stateOperators.toSeq)
       .groupBy(_.operatorName)

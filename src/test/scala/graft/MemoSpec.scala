@@ -167,13 +167,44 @@ class MemoSpec extends AnyFunSuite {
       if re.findFirstIn(src).isDefined
     } yield s"$what in $path"
     assert(hits.isEmpty, hits.mkString("; "))
-    // The two stream fold carries are per-sink state, not memos.
-    val carry = """val (ccFoldCarry|louvainFoldCarry) = scala\.collection\.concurrent\.TrieMap""".r
+    // The one stream fold carry class holds per-sink state, not a memo.
+    val carry = """private val bySink = scala\.collection\.concurrent\.TrieMap""".r
     val strayTrieMaps = for {
       (path, src) <- sources.toSeq
       line <- src.linesIterator
       if line.contains("TrieMap") && carry.findFirstIn(line).isEmpty
     } yield s"$path: ${line.trim}"
     assert(strayTrieMaps.isEmpty, strayTrieMaps.mkString("; "))
+  }
+
+  test("source guard: every stream runs through StreamingOps' runner primitives") {
+    // (file name, innermost `def` seen so far, line) for every line of
+    // src/main/scala.
+    val defName = """\bdef\s+(\w+)""".r
+    val lines = scala.collection.mutable.ArrayBuffer.empty[(String, String, String)]
+    val walk = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
+    try walk.iterator().forEachRemaining { f =>
+      if (f.toString.endsWith(".scala")) {
+        var owner = ""
+        java.nio.file.Files.readAllLines(f).forEach { line =>
+          defName.findFirstMatchIn(line).foreach(m => owner = m.group(1))
+          lines += ((f.getFileName.toString, owner, line))
+        }
+      }
+    } finally walk.close()
+    assert(lines.nonEmpty)
+    val primitives = Seq(
+      "\"pathGlobFilter\", \"events.parquet\"" -> "eventsStream",
+      "format(\"memory\")" -> "memorySink",
+      "processAllAvailable" -> "runToEnd")
+    primitives.foreach { case (code, primitive) =>
+      val hits = lines.collect {
+        case (file, owner, line) if line.contains(code) => s"$file:$owner"
+      }
+      assert(hits.toSeq == Seq(s"StreamingOps.scala:$primitive"),
+        s"$code must appear once, in StreamingOps.$primitive; found in ${hits.mkString(", ")}")
+    }
+    val carryClasses = lines.count(_._3.contains("class FoldCarry"))
+    assert(carryClasses == 1, s"$carryClasses stream fold carry classes")
   }
 }

@@ -106,6 +106,25 @@ class IncrementalLouvainSpec extends AnyFunSuite {
     assert(labelsOf(withCarry, 1L) == labelsOf(cold, 1L))
   }
 
+  test("a carry at the collect bound hands the batch to the distributed fold") {
+    // The Louvain twin of IncrementalCcSpec's bound test: a carry past
+    // CollectMax labels fails the gate's admission, so a one-edge
+    // batch must fold distributed and drop the carry.
+    import spark.implicits._
+    import graft.graph.{Dispatch, LocalLouvain}
+    val s = sink()
+    val lab = scala.collection.mutable.LongMap.empty[Long]
+    (0L to LocalLouvain.CollectMax).foreach(v => lab(v) = v)
+    StreamingOps.louvainFoldCarry.update(s,
+      (0L, (lab, scala.collection.mutable.HashMap.empty[(Long, Long), Double])))
+    val (twin0, dist0) = Dispatch.taken.getOrElse("mergeLouvainDispatch", (0L, 0L))
+    StreamingOps.mergeLouvain(s)(Seq((-5L, -6L, 1.0)).toDF("src", "dst", "weight"), 1L)
+    val (twin1, dist1) = Dispatch.taken("mergeLouvainDispatch")
+    assert(twin1 == twin0 && dist1 == dist0 + 1, "the fold did not run distributed")
+    assert(!StreamingOps.louvainFoldCarry.contains(s), "the carry survived the distributed fold")
+    assert(labelsOf(s, 1L) == Map(-6L -> -6L, -5L -> -6L))
+  }
+
   test("replaying a batch id overwrites to the identical state") {
     import spark.implicits._
     val s = sink()
